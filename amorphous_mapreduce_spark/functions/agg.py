@@ -52,10 +52,6 @@ def sql_dsum(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS {SQL_DEC})) AS DOUBLE) AS {alias}"
 
 
-def sql_davg(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS {SQL_DEC})) AS DOUBLE) / COUNT(*) AS {alias}"
-
-
 def dsum_scaled(expr: Column, scale: int = 6) -> Column:
     """Exact decimal sum returned as double via an exact scaled BIGINT.
 
@@ -80,22 +76,3 @@ def dsum_scaled(expr: Column, scale: int = 6) -> Column:
         / F.lit(float(m))
     )
 
-
-def sql_dsum_scaled(
-    expr: str, alias: str, scale: int = 6, typ: str | None = None
-) -> str:
-    """DuckDB counterpart of :func:`dsum_scaled` (same FLOOR discipline).
-
-    ``typ``: optional decimal type to cast ``expr`` to BEFORE summing
-    (what sql_dsum does with SQL_DEC) — pass it when ``expr`` is a raw
-    double, otherwise the SUM falls back to float accumulation and the
-    whole exactness argument is void (ADVICE_r06). Left None for
-    already-decimal expressions (the q1-style callers whose products
-    carry more precision than SQL_DEC)."""
-    if typ is not None:
-        expr = f"CAST({expr} AS {typ})"
-    m = 10**scale
-    return (
-        f"CAST(CAST(FLOOR(SUM({expr}) * {m}) AS BIGINT) AS DOUBLE)"
-        f" / {m}.0 AS {alias}"
-    )

@@ -24,10 +24,6 @@ from amorphous_mapreduce_spark.functions.hashing import hex_hash64
 from amorphous_mapreduce_spark.functions.vectors import l2_norm
 
 
-def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("norm", l2_norm(vec_col))
-
-
 def cosine_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",

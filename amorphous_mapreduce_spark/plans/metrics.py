@@ -3,7 +3,9 @@
 The reference annotates every op with a cost: `len` for transfers
 (src/op.rs:57), `complexity = k*m*n` for compute (src/op.rs:155). Spark
 tracks the executed analogue in SQLMetrics (rows/bytes/spill per physical
-node); this module surfaces them as the same kind of op-cost table.
+node); this module surfaces them as the same kind of op-cost table, one
+row per node of ``plans.trace.walk`` — the walk ``plan_to_json`` exports —
+so cost row ``i`` is op-list row ``i`` of the executed plan.
 """
 
 from __future__ import annotations
@@ -11,6 +13,8 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame
+
+from amorphous_mapreduce_spark.plans.trace import walk
 
 INTERESTING = (
     "numOutputRows",
@@ -28,11 +32,10 @@ INTERESTING = (
 )
 
 
-def _walk(node: Any, out: list[dict[str, Any]], depth: int = 0) -> None:
+def _metrics(node: Any) -> dict[str, int]:
     metrics: dict[str, int] = {}
     try:
-        m = node.metrics()
-        it = m.iterator()
+        it = node.metrics().iterator()
         while it.hasNext():
             kv = it.next()
             name, metric = kv._1(), kv._2()
@@ -43,49 +46,31 @@ def _walk(node: Any, out: list[dict[str, Any]], depth: int = 0) -> None:
                     pass
     except Exception:
         pass
-    out.append(
-        {
-            "index": len(out),
-            "op": node.nodeName(),
-            "depth": depth,
-            "metrics": metrics,
-        }
-    )
-    ch = node.children()
-    for i in range(ch.size()):
-        _walk(ch.apply(i), out, depth + 1)
-    # AQE wrapper nodes hide the materialised plan behind non-child refs:
-    # AdaptiveSparkPlan -> executedPlan(), *QueryStage -> plan(),
-    # ReusedExchange/ReusedSubquery -> child() already covered by children.
-    name = node.nodeName()
-    wrapper_attrs: tuple[str, ...] = ()
-    if name == "AdaptiveSparkPlan":
-        wrapper_attrs = ("executedPlan", "finalPhysicalPlan")
-    elif "QueryStage" in name:
-        wrapper_attrs = ("plan",)
-    for attr in wrapper_attrs:
-        try:
-            _walk(getattr(node, attr)(), out, depth + 1)
-            break
-        except Exception:
-            continue
+    return metrics
 
 
-def cost_report(df: DataFrame, execute: bool = True) -> list[dict[str, Any]]:
-    """Execute ``df`` (noop sink) and return per-op metric records.
+def cost_report(df: DataFrame) -> list[dict[str, Any]]:
+    """Execute ``df`` and return per-op metric records.
 
-    Each record: {index, op, depth, metrics{numOutputRows, bytes, spill...}}
-    — the executed-plan analogue of the reference's op trace costs.
+    Each record: {index, op, dependency, metrics{numOutputRows, bytes,
+    spill...}} — the executed-plan analogue of the reference's op trace
+    costs, with the same indices and dependency edges as
+    ``plan_to_json(df, "executedPlan")``.
     """
     qe = df._jdf.queryExecution()
-    if execute:
-        # Run THIS QueryExecution's plan (a df.write would build a fresh
-        # one and the metrics would land there instead). count() on the
-        # InternalRow RDD materialises everything executor-side.
-        qe.executedPlan().execute().count()
-    out: list[dict[str, Any]] = []
-    _walk(qe.executedPlan(), out)
-    return out
+    # Run THIS QueryExecution's plan (a df.write would build a fresh one and
+    # the metrics would land there instead). count() on the InternalRow RDD
+    # materialises everything executor-side.
+    qe.executedPlan().execute().count()
+    return [
+        {
+            "index": idx,
+            "op": node.nodeName(),
+            "dependency": deps,
+            "metrics": _metrics(node),
+        }
+        for idx, (node, deps) in enumerate(walk(qe.executedPlan()))
+    ]
 
 
 def summarize_cost(report: list[dict[str, Any]]) -> dict[str, int]:

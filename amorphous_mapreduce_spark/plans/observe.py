@@ -7,11 +7,12 @@ which is the only affordable way to publish per-stage row counts and
 violation tallies from a 100 TB pipeline run (a separate ``count()``
 per stage would double every scan).
 
-``observed_stage`` standardizes the stage contract used by the curation
-pipeline: rows in, rows whose ``flag_col`` failed, and an optional
-integer mass column (e.g. token counts) — mirroring the reference's
-per-op trace counters (src/op.rs:50-63 envelope fields) as live
-metrics instead of a post-hoc log.
+``observed_stage`` standardizes a pipeline-stage contract: rows in, rows
+whose ``flag_col`` failed, and an optional integer mass column (e.g.
+token counts) — mirroring the reference's per-op trace counters
+(src/op.rs:50-63 envelope fields) as live metrics instead of a post-hoc
+log. No query or operator calls it yet; tests/test_observe.py pins its
+counts against the collected rows and its plan against a second scan.
 """
 
 from __future__ import annotations

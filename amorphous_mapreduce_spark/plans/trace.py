@@ -57,40 +57,39 @@ def op_category(op_name: str) -> str:
     return "VecOp"
 
 
-def _walk(node: Any, out: list[dict[str, Any]]) -> int:
-    """Children-first walk over a JVM TreeNode; returns this node's index.
+def node_class(node: Any) -> str:
+    """Simple class name of a JVM plan node (Scala objects drop their ``$``)."""
+    return node.getClass().getSimpleName().removesuffix("$")
 
-    Unlike ``TreeNode.toJSON`` (which hides the subtrees of AQE
-    ``QueryStageExec`` wrappers and nested ``AdaptiveSparkPlanExec``
+
+def walk(root: Any) -> list[tuple[Any, list[int]]]:
+    """Children-first walk over a JVM TreeNode: (node, child indices) per node.
+
+    Each node follows its children, so a dependency index always points at
+    an earlier entry. Unlike ``TreeNode.toJSON`` (which hides the subtrees
+    of AQE ``QueryStageExec`` wrappers and nested ``AdaptiveSparkPlanExec``
     nodes — the round-4 exporter missed every operator below the first
     materialized shuffle stage), this walk EXPANDS them: a faithful G14
     trace must show the ops that actually executed inside each stage.
     """
-    cls = node.getClass().getSimpleName().removesuffix("$")
-    children = [
-        node.children().apply(i) for i in range(node.children().size())
-    ]
-    # AQE wrappers: the real subtree hangs off a non-child accessor.
-    if "QueryStage" in cls:
-        children.append(node.plan())
-    elif "AdaptiveSparkPlan" in cls:
-        children.append(node.finalPhysicalPlan())
-    child_ids = [_walk(c, out) for c in children]
-    idx = len(out)
-    cat = op_category(cls)
-    out.append(
-        {
-            "index": idx,
-            # reference envelope: "global" for movement ops, a placement id
-            # otherwise (src/op.rs:51,95) — Spark owns placement, so the
-            # category name stands in for the pid.
-            "module": "global" if cat == "TransOp" else cat,
-            "dependency": child_ids,
-            "op": {"category": cat, "class": cls},
-            "op_content": {"name": cls, "detail": node.simpleString(25)},
-        }
-    )
-    return idx
+    out: list[tuple[Any, list[int]]] = []
+
+    def visit(node: Any) -> int:
+        cls = node_class(node)
+        children = [
+            node.children().apply(i) for i in range(node.children().size())
+        ]
+        # AQE wrappers: the real subtree hangs off a non-child accessor.
+        if "QueryStage" in cls:
+            children.append(node.plan())
+        elif "AdaptiveSparkPlan" in cls:
+            children.append(node.finalPhysicalPlan())
+        deps = [visit(c) for c in children]
+        out.append((node, deps))
+        return len(out) - 1
+
+    visit(root)
+    return out
 
 
 def plan_to_json(df: DataFrame, plan: str = "executedPlan") -> str:
@@ -112,7 +111,21 @@ def plan_to_json(df: DataFrame, plan: str = "executedPlan") -> str:
         "executedPlan": qe.executedPlan,
     }[plan]()
     ops: list[dict[str, Any]] = []
-    _walk(node, ops)
+    for idx, (n, deps) in enumerate(walk(node)):
+        cls = node_class(n)
+        cat = op_category(cls)
+        ops.append(
+            {
+                "index": idx,
+                # reference envelope: "global" for movement ops, a placement
+                # id otherwise (src/op.rs:51,95) — Spark owns placement, so
+                # the category name stands in for the pid.
+                "module": "global" if cat == "TransOp" else cat,
+                "dependency": deps,
+                "op": {"category": cat, "class": cls},
+                "op_content": {"name": cls, "detail": n.simpleString(25)},
+            }
+        )
     return json.dumps({"plan": plan, "op_list": ops}, indent=2)
 
 

@@ -1,10 +1,13 @@
 """Benchmark runner — prints ONE JSON line with per-query wall-clock.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is fully
-materialised via the noop sink (no driver collect; measures the whole
-distributed plan). First query pays JVM/codegen warmup; a throwaway warmup
-query runs first so per-query numbers are comparable.
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is timed by
+``perfbench.harness.measure`` — the builder call through a write to the
+noop sink (no driver collect; measures the whole distributed plan) — and
+every cache it leaves is released before the next query. First query pays
+JVM/codegen warmup; a throwaway warmup pass runs first so per-query numbers
+are comparable. A failing query costs one ``failed`` row in
+BENCH_LOCAL.json, not the run.
 """
 
 from __future__ import annotations
@@ -233,53 +236,47 @@ REF_Q1_SEC = 0.95
 
 
 def spin_rate(seconds: float = 0.5) -> float:
-    import time as _t
-
-    t0 = _t.perf_counter()
+    t0 = time.perf_counter()
     n, x = 0, 1
-    while _t.perf_counter() - t0 < seconds:
+    while time.perf_counter() - t0 < seconds:
         for _ in range(10000):
             x = (x * 1103515245 + 12345) & 0x7FFFFFFF
         n += 10000
-    return n / (_t.perf_counter() - t0)
+    return n / (time.perf_counter() - t0)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
+# stdout keys taken from the full record, in print order
+STDOUT_KEYS = (
+    "metric",
+    "value",
+    "value_normalized",
+    "cpu_load_factor",
+    "q1_load_factor",
+    "unit",
+    "sf",
+    "n_queries",
+)
+FLAGSHIP = [
+    "q1_pricing_summary",
+    "minhash_lsh_pairs",
+    "similarity_topk",
+    "recommend_parts",
+    "markov_removal_attribution",
+]
 
-    from amorphous_mapreduce_spark import get_spark
-    from amorphous_mapreduce_spark.queries_registry import QUERIES
 
-    spark = get_spark(app_name="amorphous-mapreduce-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def bench_records(
+    recs: list[dict], spin: float, sf: float | None
+) -> tuple[dict, dict]:
+    """The BENCH_LOCAL.json record and the stdout record of one timed pass.
 
-    def run(name: str, at: str) -> float:
-        t0 = time.time()
-        df = QUERIES[name](spark, at)
-        df.write.mode("overwrite").format("noop").save()
-        return time.time() - t0
-
-    # Warm each query's codegen/JIT at the smoke SF so the timed numbers
-    # measure data-proportional work, not one-time plan compilation.
-    warm_dir = "/root/testdata/sf0.001"
-    for name in HEADLINE:
-        if name in QUERIES:
-            try:
-                run(name, warm_dir)
-            except Exception:
-                pass
-
-    spin_before = spin_rate()
-    times: dict[str, float] = {}
-    for name in HEADLINE:
-        if name in QUERIES:
-            times[name] = round(run(name, sf_dir), 3)
-    spin_after = spin_rate()
-
+    ``recs`` are ``perfbench.harness.run_pass`` query records. A query
+    whose record carries ``error`` is listed under ``failed`` in the full
+    record and left out of ``value``, ``queries`` and ``n_queries``.
+    """
+    times = {r["query"]: round(r["latency_s"], 3) for r in recs if "error" not in r}
+    failed = {r["query"]: r["error"] for r in recs if "error" in r}
     total = round(sum(times.values()), 3)
-    spin = (spin_before + spin_after) / 2.0
     cpu_load_factor = round(max(1.0, REF_SPIN_RATE / spin), 3)
     q1_load_factor = (
         round(max(1.0, times["q1_pricing_summary"] / REF_Q1_SEC), 3)
@@ -289,7 +286,6 @@ def main() -> None:
     # q1 tracks end-to-end contention better than the pure-CPU spin
     # (scheduler + memory-bandwidth pressure); normalize by it.
     norm = q1_load_factor or cpu_load_factor
-    total_normalized = round(total / norm, 3)
     # Full per-query breakdown goes to a committed artifact; the final
     # stdout line stays compact so the driver's tail-capture window can
     # always parse it (BENCH_r02/r03 both arrived "parsed": null because
@@ -298,41 +294,49 @@ def main() -> None:
     full = {
         "metric": "headline_queries_wall_clock",
         "value": total,
-        "value_normalized": total_normalized,
+        "value_normalized": round(total / norm, 3),
         "cpu_load_factor": cpu_load_factor,
         "q1_load_factor": q1_load_factor,
         "spin_rate": round(spin),
         "unit": "sec",
         "queries": times,
+        "failed": failed,
         "sf": sf,
         "n_queries": len(times),
     }
+    line = {k: full[k] for k in STDOUT_KEYS}
+    line["queries"] = {k: times[k] for k in FLAGSHIP if k in times}
+    line["full_breakdown"] = "BENCH_LOCAL.json"
+    return full, line
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else None
+
+    from amorphous_mapreduce_spark import get_spark
+    from amorphous_mapreduce_spark.queries_registry import QUERIES
+    from perfbench.harness import run_pass
+
+    spark = get_spark(app_name="amorphous-mapreduce-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = {name: QUERIES[name] for name in HEADLINE if name in QUERIES}
+
+    # Warm each query's codegen/JIT at the smoke SF so the timed numbers
+    # measure data-proportional work, not one-time plan compilation.
+    # Warm-up failures are ignored; the timed pass records its own.
+    run_pass(spark, queries, "/root/testdata/sf0.001", "warm")
+
+    spin_before = spin_rate()
+    timed = run_pass(spark, queries, sf_dir, "timed")
+    spin_after = spin_rate()
+
+    full, line = bench_records(timed["queries"], (spin_before + spin_after) / 2.0, sf)
     with open(os.path.join(REPO, "BENCH_LOCAL.json"), "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
         f.write("\n")
-    flagship = [
-        "q1_pricing_summary",
-        "minhash_lsh_pairs",
-        "similarity_topk",
-        "recommend_parts",
-        "markov_removal_attribution",
-    ]
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_wall_clock",
-                "value": total,
-                "value_normalized": total_normalized,
-                "cpu_load_factor": cpu_load_factor,
-                "q1_load_factor": q1_load_factor,
-                "unit": "sec",
-                "sf": sf,
-                "n_queries": len(times),
-                "queries": {k: times[k] for k in flagship if k in times},
-                "full_breakdown": "BENCH_LOCAL.json",
-            }
-        )
-    )
+    print(json.dumps(line))
     spark.stop()
 
 

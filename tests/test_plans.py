@@ -70,6 +70,33 @@ def test_trace_categories_cover_reference_ir(spark, sf_dir):
     assert op_category("ProjectExec") == "VecOp"
 
 
+def test_cost_report_lines_up_with_op_list(spark, sf_dir):
+    """One walk feeds both exports, as in the reference, where each op_list
+    entry carries its own cost (src/op.rs:50-63): cost row i is op-list
+    row i of the executed plan, with the same dependency edges, and
+    neither lists a node the other lacks."""
+    from amorphous_mapreduce_spark.plans.metrics import cost_report
+    from amorphous_mapreduce_spark.plans.trace import op_category
+
+    li = load_table(spark, sf_dir, "lineitem")
+    ords = load_table(spark, sf_dir, "orders")
+    df = (
+        li.join(ords, li.l_orderkey == ords.o_orderkey)
+        .groupBy("l_returnflag")
+        .agg(F.count("*").alias("n"))
+    )
+    report = cost_report(df)
+    ops = json.loads(plan_to_json(df, plan="executedPlan"))["op_list"]
+    assert [r["index"] for r in report] == [o["index"] for o in ops]
+    assert [r["dependency"] for r in report] == [o["dependency"] for o in ops]
+    assert [op_category(r["op"]) for r in report] == [
+        o["op"]["category"] for o in ops
+    ]
+    aggs = [i for i, o in enumerate(ops) if o["op"]["class"] == "HashAggregateExec"]
+    assert aggs and all(report[i]["op"] == "HashAggregate" for i in aggs)
+    assert "ResultQueryStage" not in {r["op"] for r in report}
+
+
 def test_plan_pushdown_visible(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     df = li.filter(F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp")).select(

@@ -35,7 +35,7 @@ def main() -> int:
     results: dict[str, dict[str, int]] = {}
     for name in HEADLINE:
         df = QUERIES[name](spark, sf_dir)
-        summary = summarize_cost(cost_report(df, execute=True))
+        summary = summarize_cost(cost_report(df))
         results[name] = summary
         print(
             f"{name}: rows={summary['output_rows']} "

@@ -1,14 +1,15 @@
-"""Per-query optimization measurement harness (round 8).
+"""Per-query optimization measurement: a thin loop over ``perfbench.harness``.
 
-For each named query: warm at sf0.001, then run N timed iterations at the
-target SF through the noop sink (guide §1.4), report min/median, and dump
-``.explain("formatted")`` to plans/r08/<query>_<tag>.txt so plan-shape
-claims in OPTIMIZATION_r08.md are reproducible.
+For each named query: one ``run_pass`` at sf0.001 to warm codegen/JIT, then
+N timed ``run_pass`` runs of that query alone at the target SF (builder call
+through the noop sink, caches released after each run). Reports latency,
+process-tree CPU and host CPU steal per run, and writes
+``.explain("formatted")`` to .tmp/opt_measure/<query>_<tag>.txt so plan-shape
+claims in an OPTIMIZATION note are reproducible without committing the dumps.
 
 Usage: python tools/opt_measure.py <tag> <query> [query ...]
   tag: 'before' or 'after' (plan file suffix; 'none' skips the dump)
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), OPT_RUNS (default 3),
-     OPT_PLANS_DIR (default plans/r09 — round-9 deliverables)
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), OPT_RUNS (default 3)
 """
 
 from __future__ import annotations
@@ -17,10 +18,11 @@ import json
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+OUT_DIR = os.path.join(REPO, ".tmp", "opt_measure")
 
 
 def main() -> int:
@@ -30,67 +32,44 @@ def main() -> int:
     runs = int(os.environ.get("OPT_RUNS", "3"))
 
     from amorphous_mapreduce_spark import get_spark
+    from amorphous_mapreduce_spark.plans import explain_str
     from amorphous_mapreduce_spark.queries_registry import QUERIES
+    from perfbench.harness import release, run_pass
 
     spark = get_spark(
         app_name=f"opt-measure-{tag}",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    plans_dir = os.path.join(REPO, os.environ.get("OPT_PLANS_DIR", "plans/r09"))
-    os.makedirs(plans_dir, exist_ok=True)
-
-    from bench import spin_rate
+    os.makedirs(OUT_DIR, exist_ok=True)
 
     out: dict[str, dict] = {}
     for name in names:
         if name not in QUERIES:
             print(f"!! {name}: not registered", flush=True)
             continue
-        # Warm codegen/JIT at the smoke SF (same methodology as bench.py).
-        try:
-            QUERIES[name](spark, "/root/testdata/sf0.001").write.mode(
-                "overwrite"
-            ).format("noop").save()
-        except Exception as e:  # noqa: BLE001
-            print(f"!! {name}: warmup failed: {e}", flush=True)
+        one = {name: QUERIES[name]}
+        warm = run_pass(spark, one, "/root/testdata/sf0.001", f"warm/{name}")
+        passes = [run_pass(spark, one, sf_dir, f"{tag}/{name}/{i}") for i in range(runs)]
+        recs = [p["queries"][0] for p in [warm, *passes]]
+        if any("error" in r for r in recs):
+            print(f"!! {name}: {next(r['error'] for r in recs if 'error' in r)}", flush=True)
             continue
-        times = []
-        spins = []
-        for _ in range(runs):
-            spins.append(spin_rate(0.2))
-            # Isolate runs: drop caches accumulated by the previous run's
-            # persist() calls so every timed run computes from parquet
-            # (same cold-cache posture as one bench.py pass).
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"opt:{name}")
-            t0 = time.time()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            times.append(round(time.time() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        if tag != "none":
-            import contextlib
-            import io
-
-            df = QUERIES[name](spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
-                f.write(buf.getvalue())
+        times = [round(r["latency_s"], 3) for r in recs[1:]]
         out[name] = {
             "min": min(times),
-            "median": statistics.median(times),
+            "median": round(statistics.median(times), 3),
             "runs": times,
-            "spin_rate": round(statistics.median(spins)),
+            "cpu_s": [round(p["cpu_s"], 2) for p in passes],
+            "steal_s": [round(p["steal_s"], 2) for p in passes],
         }
-        print(
-            f"{name}: min={min(times)} median={statistics.median(times)} "
-            f"{times} spin={round(statistics.median(spins) / 1e6, 2)}M",
-            flush=True,
-        )
-    path = os.path.join(plans_dir, f"timings_{tag}.json")
+        print(f"{name}: {json.dumps(out[name])}", flush=True)
+        if tag != "none":
+            plan = explain_str(QUERIES[name](spark, sf_dir), "formatted")
+            release(spark)
+            with open(os.path.join(OUT_DIR, f"{name}_{tag}.txt"), "w") as f:
+                f.write(plan)
+    path = os.path.join(OUT_DIR, f"timings_{tag}.json")
     existing = {}
     if os.path.exists(path):
         with open(path) as f:

@@ -5,8 +5,10 @@ Round 3 measured one decade (sf0.01 -> sf0.1, 17 MB of data); round 5
 adds a second rung, sf1 (~170 MB, 6M-row lineitem, 50k docs), generated
 deterministically by tools/make_fixtures.py into fixtures/sf1. For each
 heavy query: warm at sf0.001 (plan/codegen compile), then two timed
-noop-sink runs per SF taking the min (ambient-load shaving). Each decade
-is a 10x data ratio, so:
+runs per SF taking the min (ambient-load shaving). Each run is one
+``perfbench.harness.measure`` call (builder through the noop sink, caches
+released after it), so the second run cannot reuse the first one's
+persisted frames. Each decade is a 10x data ratio, so:
 
   slope1 = t(sf0.1) / t(sf0.01)      (decade 1)
   slope2 = t(sf1)   / t(sf0.1)       (decade 2, when fixtures/sf1 exists)
@@ -115,6 +117,30 @@ RUNGS = [
 ]
 
 
+def _row(name: str, times: dict[str, float]) -> tuple[dict, list[float]]:
+    """One SLOPES.json row from seconds per rung, and its decade slopes.
+
+    Unrounded times ride along in ``_raw`` (ADVICE_r06): the merge path
+    recomputes slopes from stored times; 3-decimal rounding could flip a
+    near-threshold flag across subset runs (and a sub-ms rung rounded to
+    0.0 would produce slope=inf).
+    """
+    ordered = [k for k, _ in RUNGS if k in times]
+    rec: dict = {f"{k}_s": round(times[k], 3) for k in ordered}
+    rec["_raw"] = {k: times[k] for k in ordered}
+    slopes = [
+        times[b] / times[a] if times[a] > 0 else float("inf")
+        for a, b in zip(ordered, ordered[1:])
+    ]
+    for i, s in enumerate(slopes):
+        rec["slope" if i == 0 else f"slope{i + 1}"] = round(s, 2)
+    over = any(s > FLAG_RATIO * DATA_RATIO for s in slopes)
+    rec["flagged"] = over and name not in ALLOW
+    if over and name in ALLOW:
+        rec["explained"] = ALLOW[name]
+    return rec, slopes
+
+
 def _merge_and_write(out: dict, rungs, subset: bool) -> dict:
     """Merge fresh rows into SLOPES.json and write it. Called after
     EVERY measured query (round 7): a killed/timed-out run previously
@@ -158,30 +184,16 @@ def _merge_and_write(out: dict, rungs, subset: bool) -> dict:
                         if k.endswith("_s")
                     }
                 )
-                ordered = [k for k, _ in RUNGS if k in times]
-                merged: dict = {f"{k}_s": round(times[k], 3) for k in ordered}
-                merged["_raw"] = {k: times[k] for k in ordered}
+                merged, mslopes = _row(name, times)
                 if "measured_at" in rec:
                     merged["measured_at"] = rec["measured_at"]
                 if "measured_at" in old:
                     merged["prior_measured_at"] = old.get(
                         "prior_measured_at", old["measured_at"]
                     )
-                mslopes = [
-                    times[b] / times[a] if times[a] > 0 else float("inf")
-                    for a, b in zip(ordered, ordered[1:])
-                ]
-                for i, s in enumerate(mslopes):
-                    merged["slope" if i == 0 else f"slope{i + 1}"] = round(s, 2)
-                mover = any(s > FLAG_RATIO * DATA_RATIO for s in mslopes)
-                if mover and name in ALLOW:
-                    merged["flagged"] = False
-                    merged["explained"] = ALLOW[name]
-                else:
-                    merged["flagged"] = mover
-                    if "explained" in old:
-                        merged["explained"] = old["explained"]
-                if mover:
+                if "explained" in old and "explained" not in merged:
+                    merged["explained"] = old["explained"]
+                if any(s > FLAG_RATIO * DATA_RATIO for s in mslopes):
                     # Mixed-run slopes compare times measured under
                     # different machine load — re-measure every rung
                     # before trusting a flag that only appears here
@@ -217,6 +229,7 @@ def main() -> int:
 
     from amorphous_mapreduce_spark import get_spark
     from amorphous_mapreduce_spark.queries_registry import QUERIES
+    from perfbench.harness import measure
 
     spark = get_spark(app_name="scale-slopes")
     spark.sparkContext.setLogLevel("ERROR")
@@ -230,11 +243,10 @@ def main() -> int:
         )
 
     def run(name: str, sf_dir: str) -> float:
-        t0 = time.time()
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        return time.time() - t0
+        rec = measure(spark, name, QUERIES[name], sf_dir, f"slopes/{name}")
+        if "error" in rec:
+            raise RuntimeError(f"{name} at {sf_dir}: {rec['error']}")
+        return rec["latency_s"]
 
     out = {}
     for name in names:
@@ -243,25 +255,8 @@ def main() -> int:
             continue
         run(name, "/root/testdata/sf0.001")  # warm
         t = {k: min(run(name, d) for _ in range(2)) for k, d in rungs}
-        rec: dict = {f"{k}_s": round(v, 3) for k, v in t.items()}
-        # Unrounded times + measurement stamp (ADVICE_r06): the merge
-        # path recomputes slopes from stored times; 3-decimal rounding
-        # could flip a near-threshold flag across subset runs (and a
-        # sub-ms rung rounded to 0.0 would produce slope=inf).
-        rec["_raw"] = {k: v for k, v in t.items()}
+        rec, slopes = _row(name, t)
         rec["measured_at"] = time.strftime("%Y-%m-%dT%H:%M:%S")
-        slopes = []
-        for (ka, _), (kb, _) in zip(rungs, rungs[1:]):
-            slopes.append(t[kb] / t[ka] if t[ka] > 0 else float("inf"))
-        rec["slope"] = round(slopes[0], 2)
-        for i, sl in enumerate(slopes[1:], start=2):
-            rec[f"slope{i}"] = round(sl, 2)
-        over = any(s > FLAG_RATIO * DATA_RATIO for s in slopes)
-        if over and name in ALLOW:
-            rec["flagged"] = False
-            rec["explained"] = ALLOW[name]
-        else:
-            rec["flagged"] = over
         out[name] = rec
         print(
             f"{name}: "
