@@ -44,14 +44,6 @@ def davg(col: Column | str, typ: str = DEC) -> Column:
     return dsum(col, typ) / F.count(F.lit(1))
 
 
-# SQL-side counterparts (DuckDB), kept adjacent so the two stay in sync.
-SQL_DEC = "DECIMAL(12,2)"
-
-
-def sql_dsum(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS {SQL_DEC})) AS DOUBLE) AS {alias}"
-
-
 def dsum_scaled(expr: Column, scale: int = 6) -> Column:
     """Exact decimal sum returned as double via an exact scaled BIGINT.
 

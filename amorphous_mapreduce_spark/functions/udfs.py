@@ -5,7 +5,8 @@ with format/dump can join the op list. The Spark-native equivalents are
 the three UDF classes demonstrated here (plus the grouped-map
 applyInPandas in operators.gemm and mapInPandas in operators.multimodal):
 
-- scalar pandas UDF: operators.text_analysis.quality_scores_pandas;
+- scalar pandas UDF (iterator form):
+  operators.arrow_kernels.token_count_iter_udf;
 - grouped-agg pandas UDF (UDAF): ``geometric_mean()``;
 - Python UDTF (table function): ``sentence_splitter()``.
 

@@ -13,9 +13,6 @@ blocked path where np.dot's BLAS beats per-row expression eval.
 
 from __future__ import annotations
 
-import pandas as pd  # module scope: pandas_udf type-hint inference resolves
-import numpy as np   # annotations against module globals (PEP 563)
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -38,43 +35,3 @@ def l2_norm(a: Column | str) -> Column:
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """dot(a,b) / (|a||b|); NULL-safe only as far as the inputs are."""
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def cosine_batch(a: Column | str, b: Column | str) -> Column:
-    """Vectorized cosine_similarity — BIT-IDENTICAL to the expression form.
-
-    The Catalyst higher-order fold evaluates interpreted per element
-    (~7.7 µs/pair measured on 64-dim vectors); this pandas UDF does the
-    same arithmetic batched in numpy: per-DIMENSION ordered accumulation
-    (== the left-fold addition sequence), float32→double exact widening,
-    sqrt of the self-fold for each norm, then one multiply-then-divide —
-    every intermediate rounds exactly like the JVM expression, so oracle
-    hashes are unchanged (the _cell_scored_arrow precedent,
-    operators/similarity.py). Use on candidate-scoring paths with many
-    pairs; the expression form stays for small frames (guide §4.2).
-
-    PRECONDITION: both array columns must be non-NULL with no NULL
-    elements (np.vstack raises on None). A zero-norm vector comes back
-    NULL (numpy's 0/0 NaN is pandas' null sentinel, so the Arrow
-    serializer nulls it), where the expression form under ANSI mode
-    (Spark 4 default) raises DIVIDE_BY_ZERO instead. Callers outside an
-    inner-join candidate context must filter NULLs/zero-norms first.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.vstack(va.to_numpy()).astype(np.float64)
-        B = np.vstack(vb.to_numpy()).astype(np.float64)
-        acc = np.zeros(len(va), dtype=np.float64)
-        an = np.zeros(len(va), dtype=np.float64)
-        bn = np.zeros(len(va), dtype=np.float64)
-        for d in range(A.shape[1]):  # ordered over dims == left-fold order
-            acc += A[:, d] * B[:, d]
-            an += A[:, d] * A[:, d]
-            bn += B[:, d] * B[:, d]
-        return pd.Series(acc / (np.sqrt(an) * np.sqrt(bn)))
-
-    return _cos(_c(a), _c(b))

@@ -29,6 +29,7 @@ from amorphous_mapreduce_spark.operators.similarity import (
     cosine_pairs,
     cosine_topk,
     ivf_topk,
+    ivf_trained_ranked,
     lsh_topk,
 )
 from amorphous_mapreduce_spark.operators.skew import salted_count, salted_join
@@ -61,6 +62,7 @@ __all__ = [
     "gemm_block",
     "gemm_coordinate",
     "ivf_topk",
+    "ivf_trained_ranked",
     "jaccard_pairs",
     "language_id",
     "lsh_topk",

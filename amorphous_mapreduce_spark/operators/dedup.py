@@ -500,36 +500,22 @@ def simhash_near_pairs(
     bits: int = 60,
     id_col: str = "doc_id",
     text_col: str = "text",
-    banded: bool = True,
 ) -> DataFrame:
     """Pairs with Hamming(simhash) <= max_hamming: [qid, nid, hamming].
 
-    ``banded=True`` (default) generates candidates by the exact pigeonhole
-    argument: split the fingerprint into ``max_hamming+1`` disjoint bit
-    bands — any pair within the Hamming budget must agree exactly on at
-    least one band — then equi-join per band and verify the true distance.
+    Candidates come from the exact pigeonhole argument: split the
+    fingerprint into ``max_hamming+1`` disjoint bit bands — any pair
+    within the Hamming budget must agree exactly on at least one band —
+    then equi-join per band and verify the true distance.
     Result set is identical to the all-pairs form, but candidate
     generation is a hash join instead of an O(n²) nested loop: the 100 TB
-    path. ``banded=False`` keeps the brute-force baseline.
+    path.
     """
     # Persist: both join branches read the fingerprints — without this the
     # whole simhash pipeline (tokenise + 60-bit expansion + two aggs) runs
     # twice. One row per doc: negligible memory at any corpus size.
     fp = simhash(docs, bits, id_col, text_col).persist()
     ham = F.bit_count(F.col("qh").bitwiseXOR(F.col("nh")))
-    if not banded:
-        nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        a = fp.select(F.col("id").alias("qid"), F.col("simhash").alias("qh")).repartition(
-            nparts
-        )
-        b = fp.select(F.col("id").alias("nid"), F.col("simhash").alias("nh"))
-        return (
-            a.crossJoin(b)
-            .filter(F.col("qid") < F.col("nid"))
-            .select("qid", "nid", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-        )
-
     nbands = max_hamming + 1
     base, extra = divmod(bits, nbands)
     # Band b covers [off, off+w): widths base(+1 for the first `extra`).

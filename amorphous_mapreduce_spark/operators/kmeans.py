@@ -8,8 +8,8 @@ exact cross-engine reproducibility (the repo's oracle discipline):
   are exact integer sums divided once in double — no float-accumulation
   order sensitivity;
 - seeds are the ``k`` vectors with smallest md5(vec_id) (deterministic,
-  no RNG), mirroring operators.similarity.ivf_assign; selected via
-  orderBy(hash, id).limit(k) — TakeOrderedAndProject, a distributed
+  no RNG), selected via orderBy(hash, id).limit(k) —
+  TakeOrderedAndProject, a distributed
   per-partition top-k merge, NOT a single-partition global window — and
   labeled by the seed's own id (cell = seed vec_id);
 - assignment is argmin squared distance via argmax(q·c − |c|²/2)

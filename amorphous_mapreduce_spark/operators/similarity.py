@@ -1,18 +1,24 @@
 """Similarity search over embedding columns (north-star, SURVEY.md §2.5).
 
 Scores = E·Eᵀ — literally the reference's outer-product capability applied
-to the embeddings fixture. Two paths:
+to the embeddings fixture. Three paths:
 
 - **brute force** (`cosine_topk`): block-join all pairs, dot products as
   ordered double folds (functions.vectors — JVM higher-order functions,
   whole-stage codegen, bit-deterministic), Window top-k with total-order
-  tie-break. O(n²·d) — the correctness baseline; at 100 TB use the LSH path.
+  tie-break. O(n²·d) — the correctness baseline; at 100 TB use the LSH or
+  IVF path.
 - **LSH-bucketed ANN** (`lsh_topk`): random-hyperplane signatures (signs
   derived from MD5 so they're deterministic and engine-portable), banded
   into tables; candidate pairs only within matching (band, signature)
   buckets, then exact cosine re-rank. Sub-quadratic candidate generation:
   the bucket join shuffles on (band, sig) — skew-safe because signature
   entropy spreads keys; recall tuned by bands × band_bits.
+- **IVF-flat ANN** (`ivf_topk`, `ivf_probe_sweep_candidates`): a
+  k-means-trained coarse quantiser (`ivf_trained_ranked`, built once per
+  session and shared) ranks each vector's nearest cells; queries probe
+  their top cells against capped per-cell inverted lists, scored exactly
+  by one Arrow kernel per cell.
 """
 
 from __future__ import annotations
@@ -468,49 +474,6 @@ def lsh_candidate_pairs(
     )
 
 
-def ivf_assign(
-    emb: DataFrame,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantiser: (centroids [cell, cv], assignments [id, vec, cell]).
-
-    Centroids are ``n_cells`` corpus vectors chosen by smallest
-    md5(id) — deterministic pseudo-random seeding (IVF-flat without the
-    k-means refinement; swap in trained centroids without changing the
-    query path), selected via orderBy(hash, id).limit(k) which plans as
-    TakeOrderedAndProject (distributed per-partition top-k merge — no
-    single-partition window over the corpus). Cells are labeled by the
-    seed vector's own id. Assignment = argmax dot with the broadcast
-    centroid table.
-    """
-    centroids = (
-        emb.orderBy(hex_hash64(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_cells)
-        .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv"))
-    )
-    dot = F.aggregate(
-        F.zip_with(vec_col, "cv", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wbest = Window.partitionBy("id").orderBy(F.desc("_score"), F.asc("cell"))
-    assigned = (
-        emb.crossJoin(F.broadcast(centroids))
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            "cell",
-            dot.alias("_score"),
-        )
-        .withColumn("_rk", F.row_number().over(wbest))
-        .filter(F.col("_rk") == 1)
-        .select("id", "vec", "cell")
-    )
-    return centroids, assigned
-
-
 def ivf_trained_ranked(
     emb: DataFrame,
     n_cells: int | None = None,
@@ -556,7 +519,9 @@ def ivf_trained_ranked(
         train_sample=KM_TRAIN_N,
     )
     vecs = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    return _rank_cells_arrow(q, cents.persist(), max_rank).join(vecs, "id").select(
+    # cents is already persisted: kmeans_fit persists it whenever
+    # train_sample is set
+    return _rank_cells_arrow(q, cents, max_rank).join(vecs, "id").select(
         "id", "vec", "cell", "rk"
     )
 
@@ -749,101 +714,38 @@ def _capped_cell_members(
     )
 
 
-def ivf_topk(
-    emb: DataFrame,
-    k: int = 5,
-    n_cells: int | None = None,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    trained: bool = False,
-    ranked: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-flat ANN top-k: probe the ``n_probe`` nearest cells per query,
-    exact cosine re-rank within them: [qid, nid, sim, rnk].
+def ivf_topk(ranked: DataFrame, k: int = 5, n_probe: int = 4) -> DataFrame:
+    """IVF-flat ANN top-k over a trained index: probe the ``n_probe``
+    nearest cells per query, exact cosine re-rank within them:
+    [qid, nid, sim, rnk].
 
-    The candidate join is an equi-join on cell id — per-cell inverted
-    lists are the classic sub-linear search structure; at scale the
-    assignment table is partitioned by cell so probes touch only those
-    partitions, and the trained path caps each inverted list at
+    ``ranked`` is the :func:`ivf_trained_ranked` frame (k-means
+    centroids, ``max_rank >= n_probe``), built once and shared across
+    the queries of a session — a model is trained once and served to
+    every query. The candidate join is per cell: each query meets the
+    members of its probed cells, and each inverted list is capped at
     IVF_CELL_CAP md5-ordered members (round 7 — linear candidates at
-    fixed n_cells; never binds through sf0.1). ``trained=True`` uses
-    k-means centroids (:func:`ivf_trained_ranked`) instead of
-    md5-seeded corpus vectors — measured recall@5 uplift 0.485→0.579
+    fixed n_cells; never binds through sf0.1). Trained centroids lifted
+    recall@5 over md5-seeded corpus-vector centroids 0.485→0.579
     (sf0.01) / 0.492→0.546 (sf0.1) at the same probe budget.
-    ``n_cells=None`` derives k ≈ √n via :func:`adaptive_cells` (round 8).
-    ``ranked``: optional pre-built :func:`ivf_trained_ranked` frame (the
-    trained index, shared across queries in one session — a model is
-    trained once and served to every query).
     """
-    if trained:
-        if ranked is None:
-            if n_cells is None:
-                n_cells = adaptive_cells(emb.count())
-            ranked = ivf_trained_ranked(
-                emb, n_cells, n_probe, id_col, vec_col
-            ).persist()
-        probes = ranked.filter(F.col("rk") <= n_probe).select(
-            F.col("id").alias("qid"), F.col("vec").alias("qv"), "cell"
-        )
-        members = _capped_cell_members(
-            ranked.filter(F.col("rk") == 1).select("id", "vec", "cell"),
-            IVF_CELL_CAP,
-        )
-        # per-cell Arrow scoring with local top-k (global top-k ⊆ union
-        # of per-cell top-k); candidate pairs are unique (each nid lives
-        # in one cell), so no distinct is needed.
-        scored = _cell_scored_arrow(probes, members, local_topk=k).select(
-            "qid", "nid", "sim"
-        )
-        wk = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-        return scored.withColumn("rnk", F.row_number().over(wk)).filter(
-            F.col("rnk") <= k
-        )
-    else:
-        if n_cells is None:
-            n_cells = adaptive_cells(emb.count())
-        centroids, assigned = ivf_assign(emb, n_cells, id_col, vec_col)
-        assigned = assigned.persist()
-        dot_qc = F.aggregate(
-            F.zip_with(
-                "vec", "cv", lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        wprobe = Window.partitionBy("id").orderBy(F.desc("_score"), F.asc("cell"))
-        probes = (
-            assigned.select("id", "vec")
-            .crossJoin(F.broadcast(centroids))
-            .select("id", "vec", "cell", dot_qc.alias("_score"))
-            .withColumn("_rk", F.row_number().over(wprobe))
-            .filter(F.col("_rk") <= n_probe)
-            .select(F.col("id").alias("qid"), F.col("vec").alias("qv"), "cell")
-        )
-        cands = probes.join(
-            assigned.select(
-                F.col("id").alias("nid"), F.col("vec").alias("nv"), "cell"
-            ),
-            "cell",
-        ).filter(F.col("qid") != F.col("nid"))
-    dot_qn = F.aggregate(
-        F.zip_with("qv", "nv", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    probes = ranked.filter(F.col("rk") <= n_probe).select(
+        F.col("id").alias("qid"), F.col("vec").alias("qv"), "cell"
     )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(c, c, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    members = _capped_cell_members(
+        ranked.filter(F.col("rk") == 1).select("id", "vec", "cell"),
+        IVF_CELL_CAP,
     )
-    scored = cands.select(
-        "qid", "nid", (dot_qn / (norm("qv") * norm("nv"))).alias("sim")
-    ).distinct()
+    # per-cell Arrow scoring with local top-k (global top-k ⊆ union
+    # of per-cell top-k); candidate pairs are unique (each nid lives
+    # in one cell), so no distinct is needed.
+    scored = _cell_scored_arrow(probes, members, local_topk=k).select(
+        "qid", "nid", "sim"
+    )
     wk = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return scored.withColumn("rnk", F.row_number().over(wk)).filter(F.col("rnk") <= k)
+    return scored.withColumn("rnk", F.row_number().over(wk)).filter(
+        F.col("rnk") <= k
+    )
 
 
 def lsh_topk(
@@ -871,13 +773,10 @@ def lsh_topk(
         )
     # Precomputed-norm expression re-rank (round-9 A/B): norms fold once
     # per VECTOR here, so each candidate pair pays ONE interpreted dot
-    # fold + a multiply. The round-8 cosine_batch pandas-UDF variant
-    # recomputed both norms per PAIR inside the kernel and paid the
-    # Arrow transpose of two 64-dim arrays per pair — measured SLOWER
-    # at sf0.1 (alternating same-session A/B, median 12.0 s vs 16.5 s,
-    # identical output), so the §4.2 rewrite was reverted per
-    # VERDICT_r08 item 1. cosine_batch remains in functions/vectors for
-    # paths with per-pair work large enough to amortize the transpose.
+    # fold + a multiply. A pandas-UDF variant that recomputed both norms
+    # per PAIR and paid the Arrow transpose of two 64-dim arrays per pair
+    # measured SLOWER at sf0.1 (alternating same-session A/B, median
+    # 12.0 s vs 16.5 s, identical output) and was deleted.
     vecs = emb.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
@@ -897,99 +796,30 @@ def lsh_topk(
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
-def ivf_probe_sweep_candidates(
-    emb: DataFrame,
-    n_cells: int | None = None,
-    max_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    trained: bool = False,
-    ranked: DataFrame | None = None,
-) -> DataFrame:
+def ivf_probe_sweep_candidates(ranked: DataFrame) -> DataFrame:
     """Scored IVF candidates tagged with the probe depth that reaches
     them: [qid, nid, probe_needed, sim].
 
-    Each vector lives in exactly one cell, so a candidate's
-    ``probe_needed`` is the rank of its cell in the query's
-    centroid-similarity order — ONE assignment pass prices every probe
-    budget 1..max_probe at once (recall-vs-cost sweeps re-running the
-    index per setting would scan max_probe times).
-
-    ``trained=True`` sweeps against k-means centroids
-    (:func:`ivf_trained_ranked`) instead of md5-seeded corpus vectors,
-    with the same IVF_CELL_CAP inverted-list cap as ivf_topk.
-    ``n_cells=None`` derives k ≈ √n via :func:`adaptive_cells` (round 8);
-    ``ranked`` optionally supplies a shared pre-built trained index.
+    ``ranked`` is the :func:`ivf_trained_ranked` frame; its ``max_rank``
+    is the deepest probe budget priced. Each vector lives in exactly one
+    cell, so a candidate's ``probe_needed`` is the rank of its cell in
+    the query's centroid order — ONE assignment pass prices every probe
+    budget 1..max_rank at once (recall-vs-cost sweeps re-running the
+    index per setting would scan max_rank times). Inverted lists carry
+    the same IVF_CELL_CAP cap as :func:`ivf_topk`.
     """
-    if trained:
-        if ranked is None:
-            if n_cells is None:
-                n_cells = adaptive_cells(emb.count())
-            ranked = ivf_trained_ranked(
-                emb, n_cells, max_probe, id_col, vec_col
-            ).persist()
-        probes = ranked.select(
-            F.col("id").alias("qid"),
-            F.col("vec").alias("qv"),
-            "cell",
-            F.col("rk").alias("probe_needed"),
-        )
-        members = _capped_cell_members(
-            ranked.filter(F.col("rk") == 1).select("id", "vec", "cell"),
-            IVF_CELL_CAP,
-        )
-        # per-cell Arrow scoring, probe rank carried through; candidate
-        # pairs are unique (each nid lives in one cell) so no distinct.
-        return _cell_scored_arrow(
-            probes, members, probe_rank_col="probe_needed"
-        ).select("qid", "nid", F.col("prk").alias("probe_needed"), "sim")
-    else:
-        if n_cells is None:
-            n_cells = adaptive_cells(emb.count())
-        centroids, assigned = ivf_assign(emb, n_cells, id_col, vec_col)
-        assigned = assigned.persist()
-        dot_qc = F.aggregate(
-            F.zip_with(
-                "vec", "cv", lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        wprobe = Window.partitionBy("id").orderBy(F.desc("_score"), F.asc("cell"))
-        probes = (
-            assigned.select("id", "vec")
-            .crossJoin(F.broadcast(centroids))
-            .select("id", "vec", "cell", dot_qc.alias("_score"))
-            .withColumn("probe_needed", F.row_number().over(wprobe))
-            .filter(F.col("probe_needed") <= max_probe)
-            .select(
-                F.col("id").alias("qid"),
-                F.col("vec").alias("qv"),
-                "cell",
-                "probe_needed",
-            )
-        )
-        cands = probes.join(
-            assigned.select(
-                F.col("id").alias("nid"), F.col("vec").alias("nv"), "cell"
-            ),
-            "cell",
-        ).filter(F.col("qid") != F.col("nid"))
-    dot_qn = F.aggregate(
-        F.zip_with("qv", "nv", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    probes = ranked.select(
+        F.col("id").alias("qid"),
+        F.col("vec").alias("qv"),
+        "cell",
+        F.col("rk").alias("probe_needed"),
     )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(c, c, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    members = _capped_cell_members(
+        ranked.filter(F.col("rk") == 1).select("id", "vec", "cell"),
+        IVF_CELL_CAP,
     )
-    return cands.select(
-        "qid",
-        "nid",
-        "probe_needed",
-        (dot_qn / (norm("qv") * norm("nv"))).alias("sim"),
-    ).distinct()
+    # per-cell Arrow scoring, probe rank carried through; candidate
+    # pairs are unique (each nid lives in one cell) so no distinct.
+    return _cell_scored_arrow(
+        probes, members, probe_rank_col="probe_needed"
+    ).select("qid", "nid", F.col("prk").alias("probe_needed"), "sim")

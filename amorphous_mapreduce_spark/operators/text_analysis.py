@@ -11,7 +11,6 @@ and every operator is expressible in ANSI SQL for the DuckDB oracle.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -188,41 +187,6 @@ def bigram_counts(
         .select(F.explode(shingle_grams(F.col("_ws"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("cnt"))
-    )
-
-
-def quality_scores_pandas(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """The doc_stats quality score as an Arrow-vectorised @pandas_udf.
-
-    Exists to exercise the scalar pandas-UDF surface (SURVEY.md §2.4 UDF
-    registry): same semantics as the column-expression path in doc_stats,
-    verified equal in tests. Prefer the expression form in production —
-    it stays in whole-stage codegen; this form is the template for logic
-    that genuinely needs numpy/pandas.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    stop_set = set(STOPWORDS)
-
-    @pandas_udf("double")
-    def _quality(texts: pd.Series) -> pd.Series:
-        norm = (
-            texts.str.lower().str.strip().str.replace(r"\s+", " ", regex=True)
-        )
-        toks = norm.str.split(" ")
-        n_tokens = toks.str.len()
-        n_chars = norm.str.len()
-        n_punct = n_chars - norm.str.replace(r"[^\w\s]", "", regex=True).str.len()
-        stop_hits = toks.map(lambda ws: sum(w in stop_set for w in ws))
-        punct_ratio = n_punct / n_chars
-        stop_ratio = stop_hits / n_tokens
-        q = (n_tokens / 100).clip(upper=1.0) * (1 - punct_ratio) * (0.5 + stop_ratio)
-        return q.where(n_tokens >= 5, 0.0)
-
-    return docs.select(
-        F.col(id_col).alias("id"), _quality(F.col(text_col)).alias("quality")
     )
 
 

@@ -83,7 +83,12 @@ def walk(root: Any) -> list[tuple[Any, list[int]]]:
         if "QueryStage" in cls:
             children.append(node.plan())
         elif "AdaptiveSparkPlan" in cls:
-            children.append(node.finalPhysicalPlan())
+            # finalPhysicalPlan() on a plan that has not run EXECUTES it
+            # (AQE materializes every stage to re-plan), so an unexecuted
+            # plan shows its initial plan instead.
+            children.append(
+                node.finalPhysicalPlan() if node.isFinalPlan() else node.initialPlan()
+            )
         deps = [visit(c) for c in children]
         out.append((node, deps))
         return len(out) - 1

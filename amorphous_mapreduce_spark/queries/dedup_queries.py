@@ -255,13 +255,12 @@ WHERE a.id < b.id AND bit_count(xor(a.simhash, b.simhash)) <= 12
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs at Hamming <= 12.
 
-    banded=True: pigeonhole band join (exact result, hash-join candidate
-    generation) — the 100 TB path, and also the faster one on this corpus
-    (the fixture's near-dup clusters make band buckets correlate with
-    true pairs, so candidates ~ output, not ~ n²). The brute nested-loop
-    baseline remains available as banded=False.
+    Pigeonhole band join (exact result, hash-join candidate generation)
+    — the 100 TB path, and also the faster one on this corpus (the
+    fixture's near-dup clusters make band buckets correlate with true
+    pairs, so candidates ~ output, not ~ n²).
     """
-    return simhash_near_pairs(_docs(spark, sf_dir), max_hamming=12, banded=True)
+    return simhash_near_pairs(_docs(spark, sf_dir), max_hamming=12)
 
 
 def _simhash_topm_oracle(max_hamming: int = 12, m: int = 3, cap: int = 8) -> str:
@@ -1045,7 +1044,7 @@ def q_dedup_method_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     mh = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4).persist()
     sh = (
-        simhash_near_pairs(docs, max_hamming=12, banded=True)
+        simhash_near_pairs(docs, max_hamming=12)
         .select("qid", "nid")
         .persist()
     )

@@ -159,7 +159,7 @@ planes AS (
     ) WHERE rnk <= 5
 )"""
 
-# operators.similarity.ivf_topk(trained=True) replayed in SQL: the
+# operators.similarity.ivf_topk over ivf_trained_ranked replayed in SQL: the
 # k-means coarse quantiser (operators.kmeans, 2 Lloyd iterations over
 # round(x*1000)-quantized vectors, md5 seeds — the same unrolled CTEs as
 # kmeans_queries.KMEANS_ORACLE, at the ADAPTIVE k = adaptive_cells(n)
@@ -331,13 +331,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only escape). Trained centroids lift recall@5 at the same
     4-probe budget: 0.485→0.579 at sf0.01, 0.492→0.546 at sf0.1 (candidate budget unchanged, ~63k/1.0M)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
-        emb,
-        k=5,
-        n_probe=4,
-        trained=True,
-        ranked=_ivf_ranked_shared(spark, sf_dir, emb),
-    )
+    return ivf_topk(_ivf_ranked_shared(spark, sf_dir, emb), k=5, n_probe=4)
 
 
 @register("similarity_lsh_topk", LSH_TOPK_ORACLE)
@@ -495,13 +489,7 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall(
         spark,
         sf_dir,
-        ivf_topk(
-            emb,
-            k=5,
-            n_probe=4,
-            trained=True,
-            ranked=_ivf_ranked_shared(spark, sf_dir, emb),
-        ),
+        ivf_topk(_ivf_ranked_shared(spark, sf_dir, emb), k=5, n_probe=4),
     )
 
 
@@ -1165,10 +1153,7 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     scored = ivf_probe_sweep_candidates(
-        emb,
-        max_probe=4,
-        trained=True,
-        ranked=_ivf_ranked_shared(spark, sf_dir, emb),
+        _ivf_ranked_shared(spark, sf_dir, emb)
     ).persist()
     lv = spark.createDataFrame([(p,) for p in (1, 2, 3, 4)], "p int")
     widened = scored.crossJoin(F.broadcast(lv)).filter(

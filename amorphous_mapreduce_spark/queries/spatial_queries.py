@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from amorphous_mapreduce_spark.operators.spatial import (
     cell_histogram,
+    grid_halo_join,
     grid_nearest_neighbor,
     hashed_points,
 )
@@ -444,65 +445,7 @@ def q_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    pts = hashed_points(orders, "o_orderkey")
-    scal = pts.agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.floor(F.sqrt(F.count("*").cast("double")) / 2.0).cast("long"),
-        ).alias("axis")
-    )
-    cells = pts.crossJoin(F.broadcast(scal)).select(
-        "id",
-        "x",
-        "y",
-        F.expr("x div (1000000 div axis)").alias("cx"),
-        F.expr("y div (1000000 div axis)").alias("cy"),
-        F.expr("1000000 div axis").alias("cell"),
-    ).persist()  # probe side and candidate side both read it
-    probe = (
-        cells.select(
-            F.col("id").alias("qid"),
-            F.col("x").alias("qx"),
-            F.col("y").alias("qy"),
-            "cell",
-            "cx",
-            "cy",
-        )
-        .withColumn("dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .withColumn("dy", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .select(
-            "qid",
-            "qx",
-            "qy",
-            "cell",
-            (F.col("cx") + F.col("dx")).alias("cx"),
-            (F.col("cy") + F.col("dy")).alias("cy"),
-        )
-    )
-    d2 = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
-        F.col("y") - F.col("qy")
-    ) * (F.col("y") - F.col("qy"))
-    # shuffled-hash on the grid key (round 9, guide §3.1): Catalyst's
-    # size estimate after the 9-way halo explode undercounts the probe
-    # side, so the planner BROADCAST the 1.35M-row exploded frame
-    # (~160 MB hashed relation built on the driver) against the 150k-row
-    # cells cache — measured 8.6 s for the query. Forcing a shuffled
-    # hash join with the (smaller) cells side as build runs the same
-    # query in 3.6 s and is the 100 TB shape: both sides are
-    # corpus-sized, the grid key is uniform by construction (density-
-    # adaptive cell, expected occupancy ~4), and neither side can be
-    # assumed broadcastable.
-    cand = (
-        probe.join(
-            cells.select(
-                F.col("id").alias("nid"), "x", "y", "cx", "cy"
-            ).hint("shuffle_hash"),
-            ["cx", "cy"],
-        )
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", d2.alias("d2"), "cell")
-        .filter(F.col("d2") <= F.col("cell") * F.col("cell"))
-    )
+    _, cand = grid_halo_join(hashed_points(orders, "o_orderkey"))
     w = Window.partitionBy("qid").orderBy("d2", "nid")
     # rank, then CUT to rn <= k BEFORE persisting: only the top-k rows
     # are ever read again (k3 / kdist / completeness), and the full
@@ -655,58 +598,10 @@ def q_dbscan_point_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     3x3-halo join; class rules are pure set logic. Scale: the adaptive
     cell keeps halo candidates O(1) per point; core/border resolve with
     one aggregate and one semi/anti join pair."""
-    from pyspark.sql import Window  # noqa: F401  (parallel structure w/ LOF)
-
     orders = load_table(spark, sf_dir, "orders")
-    pts = hashed_points(orders, "o_orderkey")
-    scal = pts.agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.floor(F.sqrt(F.count("*").cast("double")) / 2.0).cast("long"),
-        ).alias("axis")
-    )
-    cells = pts.crossJoin(F.broadcast(scal)).select(
-        "id",
-        "x",
-        "y",
-        F.expr("x div (1000000 div axis)").alias("cx"),
-        F.expr("y div (1000000 div axis)").alias("cy"),
-        F.expr("1000000 div axis").alias("cell"),
-    ).persist()
-    probe = (
-        cells.select(
-            F.col("id").alias("qid"),
-            F.col("x").alias("qx"),
-            F.col("y").alias("qy"),
-            "cell",
-            "cx",
-            "cy",
-        )
-        .withColumn("dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .withColumn("dy", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .select(
-            "qid",
-            "qx",
-            "qy",
-            "cell",
-            (F.col("cx") + F.col("dx")).alias("cx"),
-            (F.col("cy") + F.col("dy")).alias("cy"),
-        )
-    )
-    d2 = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
-        F.col("y") - F.col("qy")
-    ) * (F.col("y") - F.col("qy"))
-    nbr = (
-        probe.join(
-            cells.select(F.col("id").alias("nid"), "x", "y", "cx", "cy"),
-            ["cx", "cy"],
-        )
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", d2.alias("d2"), "cell")
-        .filter(F.col("d2") <= F.col("cell") * F.col("cell"))
-        .select("qid", "nid")
-        .persist()  # degree count + the border join both read it
-    )
+    cells, pairs = grid_halo_join(hashed_points(orders, "o_orderkey"))
+    # degree count + the border join both read it
+    nbr = pairs.select("qid", "nid").persist()
     deg = (
         cells.select("id")
         .join(
@@ -821,54 +716,10 @@ def q_kdist_knee_eps(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    pts = hashed_points(orders, "o_orderkey")
-    scal = pts.agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.floor(F.sqrt(F.count("*").cast("double")) / 2.0).cast("long"),
-        ).alias("axis")
-    )
-    cells = pts.crossJoin(F.broadcast(scal)).select(
-        "id",
-        "x",
-        "y",
-        F.expr("x div (1000000 div axis)").alias("cx"),
-        F.expr("y div (1000000 div axis)").alias("cy"),
-        F.expr("1000000 div axis").alias("cell"),
-    ).persist()
-    probe = (
-        cells.select(
-            F.col("id").alias("qid"),
-            F.col("x").alias("qx"),
-            F.col("y").alias("qy"),
-            "cell",
-            "cx",
-            "cy",
-        )
-        .withColumn("dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .withColumn("dy", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .select(
-            "qid",
-            "qx",
-            "qy",
-            "cell",
-            (F.col("cx") + F.col("dx")).alias("cx"),
-            (F.col("cy") + F.col("dy")).alias("cy"),
-        )
-    )
-    d2 = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
-        F.col("y") - F.col("qy")
-    ) * (F.col("y") - F.col("qy"))
+    _, pairs = grid_halo_join(hashed_points(orders, "o_orderkey"))
     w = Window.partitionBy("qid").orderBy("d2", "nid")
     kd = (
-        probe.join(
-            cells.select(F.col("id").alias("nid"), "x", "y", "cx", "cy"),
-            ["cx", "cy"],
-        )
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", d2.alias("d2"), "cell")
-        .filter(F.col("d2") <= F.col("cell") * F.col("cell"))
-        .select("qid", "d2", F.row_number().over(w).alias("rn"))
+        pairs.select("qid", "d2", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") == _LOF_K)
         .select("qid", F.col("d2").alias("kdist"), F.lit(1).alias("one"))
     )

@@ -12,7 +12,6 @@ from amorphous_mapreduce_spark.sources.tables import (
     TABLES,
     load_table,
     read_lines,
-    register_views,
 )
 
-__all__ = ["TABLES", "load_table", "read_lines", "register_views"]
+__all__ = ["TABLES", "load_table", "read_lines"]

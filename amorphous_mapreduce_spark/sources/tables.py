@@ -61,12 +61,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for spark.sql use)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_lines(spark: SparkSession, path: str) -> DataFrame:
     """Line-oriented text scan: DataFrame[value: string], one row per line.
 

@@ -97,6 +97,29 @@ def test_cost_report_lines_up_with_op_list(spark, sf_dir):
     assert "ResultQueryStage" not in {r["op"] for r in report}
 
 
+def test_executed_plan_export_runs_no_job(spark, sf_dir):
+    """Exporting the executed plan of a frame that has not run starts no
+    Spark job: an adaptive plan that is not final is walked through its
+    initial plan, never through finalPhysicalPlan(), which executes it."""
+    li = load_table(spark, sf_dir, "lineitem")
+    ords = load_table(spark, sf_dir, "orders")
+    df = (
+        li.join(ords, li.l_orderkey == ords.o_orderkey)
+        .groupBy("l_returnflag")
+        .agg(F.count("*").alias("n"))
+    )
+    sc = spark.sparkContext
+    group = "plan-export-runs-no-job"
+    sc.setJobGroup(group, "plan_to_json on an unexecuted frame")
+    try:
+        ops = json.loads(plan_to_json(df, plan="executedPlan"))["op_list"]
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert any("Join" in o["op"]["class"] for o in ops)
+
+
 def test_plan_pushdown_visible(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     df = li.filter(F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp")).select(

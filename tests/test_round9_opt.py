@@ -1,15 +1,10 @@
 """Round-9 optimization equivalence tests.
 
-Round 8 shipped ``cosine_batch`` (functions/vectors.py) unbuildable and
-untested; round 9 fixed the pandas_udf signature and A/B-measured it
-against the expression form on the lsh_topk re-rank (the expression form
-with precomputed norms won and was restored). These tests pin:
-
-- cosine_batch BUILDS (the exact round-8 failure mode) and is
-  bit-identical to the expression-form cosine_similarity on float32
-  arrays, including the zero-norm NaN contract;
-- lsh_topk's restored re-rank matches a from-scratch cosine re-rank of
-  its own candidates (precomputed norms == per-pair norms, bit-exact).
+Round 9 A/B-measured a pandas-UDF cosine against the expression form on
+the lsh_topk re-rank; the expression form with precomputed norms won and
+was restored. This pins that lsh_topk's re-rank matches a from-scratch
+cosine re-rank of its own candidates (precomputed norms == per-pair
+norms, bit-exact).
 """
 
 from __future__ import annotations
@@ -17,50 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from amorphous_mapreduce_spark.queries_registry import QUERIES  # noqa: F401  (import order)
-from amorphous_mapreduce_spark.functions.vectors import (
-    cosine_batch,
-    cosine_similarity,
-)
-
-
-def _vec_frame(spark):
-    rows = [
-        (1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
-        (2, [0.1, -0.2, 0.3], [-0.4, 0.5, -0.6]),
-        (3, [1e-3, 2e7, -3e-5], [7.0, -8.0, 9.0]),
-        (4, [1.5, 2.5, 3.5], [1.5, 2.5, 3.5]),  # identical -> 1.0
-        (5, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),  # zero norm -> NaN
-    ]
-    return spark.createDataFrame(
-        rows, "id long, a array<float>, b array<float>"
-    )
-
-
-def test_cosine_batch_builds_and_matches_expression(spark):
-    df = _vec_frame(spark)
-    out = df.filter("id < 5").select(
-        "id",
-        cosine_batch("a", "b").alias("batch"),
-        cosine_similarity("a", "b").alias("expr"),
-    ).collect()
-    assert len(out) == 4
-    for r in out:
-        # bit-identical, not approx: both do per-dimension ordered
-        # double accumulation then one multiply-then-divide
-        assert r["batch"] == r["expr"], (r["id"], r["batch"], r["expr"])
-    # zero-norm contract: batch yields NULL (numpy NaN is pandas' null
-    # sentinel -> Arrow null; the ANSI expression form raises
-    # DIVIDE_BY_ZERO instead — documented divergence)
-    nan_row = (
-        df.filter("id = 5").select(cosine_batch("a", "b").alias("s")).collect()
-    )
-    assert nan_row[0]["s"] is None
-
-
-def test_cosine_batch_plan_is_arrow(spark):
-    df = _vec_frame(spark).select(cosine_batch("a", "b").alias("s"))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
+from amorphous_mapreduce_spark.functions.vectors import cosine_similarity
 
 
 def test_lsh_topk_rerank_matches_fresh_cosine(spark, sf_dir):

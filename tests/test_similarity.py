@@ -124,36 +124,48 @@ def test_lsh_determinism(spark):
 def test_ivf_finds_planted_duplicate(spark):
     import numpy as np
 
-    from amorphous_mapreduce_spark.operators.similarity import ivf_topk
+    from amorphous_mapreduce_spark.operators.similarity import (
+        ivf_topk,
+        ivf_trained_ranked,
+    )
 
     rng = np.random.default_rng(5)
     vecs = rng.normal(size=(40, 16)).astype(np.float32)
     vecs[11] = vecs[5]  # identical vector -> identical cell assignment
     df = _emb_df(spark, vecs)
-    top1 = {r["qid"]: r["nid"] for r in ivf_topk(df, k=1, n_cells=4, n_probe=2).collect()}
+    ranked = ivf_trained_ranked(df, n_cells=4, max_rank=2)
+    top1 = {r["qid"]: r["nid"] for r in ivf_topk(ranked, k=1, n_probe=2).collect()}
     assert top1[5] == 11 and top1[11] == 5
 
 
 def test_ivf_recall_floor(spark, sf_dir):
-    from amorphous_mapreduce_spark.operators.similarity import ivf_topk
+    from amorphous_mapreduce_spark.operators.similarity import (
+        ivf_topk,
+        ivf_trained_ranked,
+    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     exact = {(r["qid"], r["nid"]) for r in cosine_topk(emb, k=3).collect()}
+    ranked = ivf_trained_ranked(emb, n_cells=8, max_rank=4)
     approx = {
         (r["qid"], r["nid"])
-        for r in ivf_topk(emb, k=3, n_cells=8, n_probe=4).collect()
+        for r in ivf_topk(ranked, k=3, n_probe=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.3, f"IVF recall@3 too low: {recall:.2f}"
 
 
 def test_similarity_ops_on_empty_input(spark):
-    from amorphous_mapreduce_spark.operators.similarity import ivf_topk
+    from amorphous_mapreduce_spark.operators.similarity import (
+        ivf_topk,
+        ivf_trained_ranked,
+    )
 
     empty = spark.createDataFrame([], SCHEMA)
     assert cosine_topk(empty, k=3).count() == 0
     assert lsh_topk(empty, k=3, n_planes=8, band_bits=4).count() == 0
-    assert ivf_topk(empty, k=3, n_cells=4, n_probe=2).count() == 0
+    ranked = ivf_trained_ranked(empty, n_cells=4, max_rank=2)
+    assert ivf_topk(ranked, k=3, n_probe=2).count() == 0
 
 
 def test_blocked_topk_equals_rowwise(spark):

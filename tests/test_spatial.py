@@ -6,7 +6,9 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from amorphous_mapreduce_spark.operators.spatial import (
+    GRID_EXTENT,
     cell_histogram,
+    grid_halo_join,
     grid_nearest_neighbor,
     hashed_points,
     with_cells,
@@ -41,6 +43,30 @@ def test_grid_nn_matches_brute_force(spark):
         if best is not None:
             want[i] = (best[1], best[0])
     assert got == want
+
+
+def test_grid_halo_join_matches_brute_force(spark):
+    """The shared halo join returns exactly the all-pairs filter at the
+    density-adaptive cell, and joins as a shuffled hash join (a broadcast
+    of the 9-way exploded probe is what it exists to avoid)."""
+    n = 200
+    coords = [
+        ((i * 7919) % GRID_EXTENT, (i * 104729 * 37) % GRID_EXTENT)
+        for i in range(n)
+    ]
+    cells, pairs = grid_halo_join(_pts(spark, coords))
+    got = {(r.qid, r.nid, r.d2) for r in pairs.collect()}
+    cell = GRID_EXTENT // max(1, int(n**0.5 / 2))
+    want = {
+        (i, j, (xi - xj) ** 2 + (yi - yj) ** 2)
+        for i, (xi, yi) in enumerate(coords)
+        for j, (xj, yj) in enumerate(coords)
+        if i != j and (xi - xj) ** 2 + (yi - yj) ** 2 <= cell * cell
+    }
+    assert want and got == want
+    assert {r.cell for r in cells.select("cell").distinct().collect()} == {cell}
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
 
 
 def test_grid_nn_excludes_out_of_radius(spark):

@@ -76,18 +76,6 @@ def test_bigram_counts(spark):
     assert got == {"a b": 2, "b a": 2}
 
 
-def test_quality_pandas_udf_matches_expression(spark, sf_dir):
-    from amorphous_mapreduce_spark.operators.text_analysis import (
-        quality_scores_pandas,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    expr = {r["id"]: r["quality"] for r in doc_stats(docs).collect()}
-    udf = {r["id"]: r["quality"] for r in quality_scores_pandas(docs).collect()}
-    assert set(expr) == set(udf)
-    assert all(abs(expr[i] - udf[i]) < 1e-12 for i in expr)
-
-
 def test_bm25_ranks_and_rarity(spark):
     from amorphous_mapreduce_spark.operators.text_analysis import bm25_scores
 

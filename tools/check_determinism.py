@@ -27,6 +27,7 @@ def main() -> int:
 
     import __spark_entry__ as e
     from amorphous_mapreduce_spark import get_spark
+    from perfbench.harness import release
 
     spark = get_spark(app_name="determinism-check")
     spark.sparkContext.setLogLevel("ERROR")
@@ -34,8 +35,12 @@ def main() -> int:
     for name, fn in e.queries().items():
         if only and name not in only:
             continue
+        # released after each run, so the second run cannot reuse the
+        # first one's cached frames
         a = canon(fn(spark, sf_dir).toPandas())
+        release(spark)
         b = canon(fn(spark, sf_dir).toPandas())
+        release(spark)
         try:
             pd.testing.assert_frame_equal(a, b, check_dtype=True, check_exact=True)
             print(f"  {name}: deterministic ({len(a)} rows)")

@@ -150,6 +150,7 @@ def main() -> int:
 
     import __spark_entry__ as e
     from amorphous_mapreduce_spark import get_spark
+    from perfbench.harness import release
 
     spark = get_spark(app_name="oracle-check")
 
@@ -271,6 +272,8 @@ def main() -> int:
         finally:
             if done is not None:
                 done.set()
+            # a later query must not reuse a frame this one left cached
+            release(spark)
         status = "OK"
         if len(sdf) != len(odf):
             status = f"ROWCOUNT {len(sdf)} vs {len(odf)}"

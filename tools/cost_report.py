@@ -30,12 +30,14 @@ def main() -> int:
     from amorphous_mapreduce_spark import get_spark
     from amorphous_mapreduce_spark.plans.metrics import cost_report, summarize_cost
     from amorphous_mapreduce_spark.queries_registry import QUERIES
+    from perfbench.harness import release
 
     spark = get_spark()
     results: dict[str, dict[str, int]] = {}
     for name in HEADLINE:
         df = QUERIES[name](spark, sf_dir)
         summary = summarize_cost(cost_report(df))
+        release(spark)
         results[name] = summary
         print(
             f"{name}: rows={summary['output_rows']} "

@@ -1139,6 +1139,7 @@ def main() -> int:
 
     from amorphous_mapreduce_spark.queries_registry import QUERIES
     from amorphous_mapreduce_spark.session import get_spark
+    from perfbench.harness import release
 
     spark = get_spark()
     results = []
@@ -1154,6 +1155,8 @@ def main() -> int:
             n_red += 1
             print(f"ERROR  {name}: {exc}")
             continue
+        finally:
+            release(spark)  # the builders' eager jobs may cache frames
         r = audit_plan(name, plan)
         r["sf_dir"] = sf_dir  # per-row provenance (ADVICE_r04 item 4)
         results.append(r)
