@@ -32,7 +32,6 @@ from amorphous_mapreduce_spark.operators.similarity import (
     ivf_trained_ranked,
     lsh_topk,
 )
-from amorphous_mapreduce_spark.operators.skew import salted_count, salted_join
 from amorphous_mapreduce_spark.operators.temporal import asof_join, range_join
 from amorphous_mapreduce_spark.operators.text_analysis import (
     bigram_counts,
@@ -71,8 +70,6 @@ __all__ = [
     "normalize_text",
     "range_join",
     "resize_images",
-    "salted_count",
-    "salted_join",
     "sample_frames",
     "shingles",
     "simhash",

@@ -161,18 +161,13 @@ def _assign_arrow(q: DataFrame, centroids: DataFrame) -> DataFrame:
     doubles, the model, not data (same class as the dims probe)."""
     import numpy as np
 
-    rows = sorted(centroids.collect(), key=lambda r: r["cell"])
-    if not rows:
+    model = _centroid_matrix(centroids)
+    if model is None:
         spark = q.sparkSession
         return spark.createDataFrame(
             [], schema="id long, qv array<bigint>, cell long"
         )
-    cells = np.array([r["cell"] for r in rows], dtype=np.int64)
-    C = np.array([list(r["cv"]) for r in rows], dtype=np.float64)  # k x d
-    # c2 via the same ordered left fold (python float add == IEEE add)
-    c2 = np.array(
-        [_ordered_fold_sq(list(r["cv"])) for r in rows], dtype=np.float64
-    )
+    cells, C, c2 = model
     dims = C.shape[1]
 
     def kernel(it):
@@ -196,6 +191,23 @@ def _assign_arrow(q: DataFrame, centroids: DataFrame) -> DataFrame:
             )
 
     return q.mapInPandas(kernel, "id long, qv array<bigint>, cell long")
+
+
+def _centroid_matrix(centroids: DataFrame):
+    """Collect the centroid frame [cell, cv] for the Arrow scoring
+    kernels: (cells, C, c2) in cell-ascending order, where C is k x d and
+    c2 is each |c|² by the ordered left fold, or None with no centroids.
+    k·d doubles: the model, not data."""
+    import numpy as np
+
+    rows = sorted(centroids.collect(), key=lambda r: r["cell"])
+    if not rows:
+        return None
+    cells = np.array([r["cell"] for r in rows], dtype=np.int64)
+    C = np.array([list(r["cv"]) for r in rows], dtype=np.float64)
+    # c2 via the same ordered left fold (python float add == IEEE add)
+    c2 = np.array([_ordered_fold_sq(list(r["cv"])) for r in rows], dtype=np.float64)
+    return cells, C, c2
 
 
 def _ordered_fold_sq(cv: list[float]) -> float:

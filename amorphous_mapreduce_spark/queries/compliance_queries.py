@@ -156,7 +156,7 @@ def q_forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstone cohort propagated customer -> orders -> lineitem, with
     per-table deleted/surviving counts and the exact (decimal) value mass
     that remains — the proof sheet a deletion job emits before the
-    physical rewrite (sources/merge.py applies the actual MERGE).
+    physical rewrite (a MERGE the engine leaves to the table format).
 
     Scale: each table is scanned once; membership is a left join against
     the tombstone key set, which is a fixed small fraction of the dim

@@ -139,7 +139,7 @@ ORDER BY cnt DESC, l_partkey ASC LIMIT 20
 @register("key_skew_profile", SKEW_ORACLE)
 def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 hottest join keys with their share of rows — the skew
-    diagnostic that decides salting/AQE-skew-join (operators.skew);
+    diagnostic that decides salting vs AQE's skew-join split;
     total via 1-row scalar agg broadcast back, top-k via
     TakeOrderedAndProject (no global sort materialised)."""
     li = load_table(spark, sf_dir, "lineitem")

@@ -1252,12 +1252,10 @@ def q_salted_shuffle_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-balance evidence for skew salting, emitted as data: the
     5-value order-priority key hashes into at most 5 of 32 reducers
     (27 idle, the hottest holding ~20-25% of all rows); the same key
-    salted 8 ways (key#salt, salt from a second row-level hash —
-    operators.skew's scheme) spreads to ~32 reducers with max share
-    near 1/32. Both placements use the portable MD5 hash so the oracle
-    replays reducer assignment bit-for-bit — this is the query form of
-    the salted_count/salted_join operator tests, scoring placement
-    balance instead of asserting result equality.
+    salted 8 ways (key#salt, salt from a second row-level hash) spreads
+    to ~32 reducers with max share near 1/32. Both placements use the
+    portable MD5 hash so the oracle replays reducer assignment
+    bit-for-bit, scoring placement balance as data.
 
     Scale: one scan, one (variant, reducer) count (map-side combined,
     <= 64 groups), one 2-row summary. The imbalance it measures is

@@ -612,8 +612,12 @@ def q_dbscan_point_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", F.coalesce("dg", F.lit(0)).cast("long").alias("dg"))
     )
     core = deg.filter(F.col("dg") >= _DB_MINPTS).select("id").persist()
+    # core builds a shuffled hash join (halo_pairs' hint); unhinted, the
+    # planner broadcast the 1.9M-row nbr frame (66 MB at sf0.1).
     border = (
-        nbr.join(core.select(F.col("id").alias("nid")), "nid")
+        nbr.join(
+            core.select(F.col("id").alias("nid")).hint("shuffle_hash"), "nid"
+        )
         .select(F.col("qid").alias("id"))
         .distinct()
         .join(core, "id", "left_anti")

@@ -506,7 +506,7 @@ def q_incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 'late-arriving' delta batch are aggregated independently and then
     MERGED by adding states — the algebraic-aggregate property that lets
     a 100 TB rollup absorb new partitions without rescanning history
-    (and the batch twin of the streaming sink's state update). Split is
+    (the batch twin of a streaming aggregate's state update). Split is
     simulated by event-id parity; merged result equals a full recompute
     because decimal addition is associative."""
     ev = _t(spark, sf_dir, "events").select(

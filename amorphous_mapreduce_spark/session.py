@@ -30,18 +30,16 @@ def _cpu_count() -> int:
 
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's defaults.
+    """Build (or fetch) a local[cpus] SparkSession with the engine's
+    defaults.
 
     Confs passed via ``extra_conf`` win over the defaults. An existing
     active session is reused (Spark semantics); runtime-settable confs are
     still applied to it.
     """
     cpus = _cpu_count()
-    master = master or f"local[{cpus}]"
     conf = {
         # Driver JVM heap: builder-time conf, honoured at JVM launch. The
         # 1 GB Spark default OOMs long test sessions (hundreds of jobs /
@@ -59,7 +57,7 @@ def get_spark(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # Shuffle width: ~2x cores locally; AQE coalesces downward.
-        "spark.sql.shuffle.partitions": str(shuffle_partitions or 2 * cpus),
+        "spark.sql.shuffle.partitions": str(2 * cpus),
         # Arrow-batched pandas UDF exchange (block GEMM, multimodal).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Dims (region/nation/customer at test SF) should broadcast.
@@ -75,7 +73,7 @@ def get_spark(
     if extra_conf:
         conf.update(extra_conf)
 
-    builder = SparkSession.builder.appName(app_name).master(master)
+    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

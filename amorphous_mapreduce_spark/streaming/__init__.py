@@ -3,27 +3,17 @@
 The reference's wave loop with buffer-capacity back-pressure
 (src/word_count.rs:50-71, src/outer_product.rs:177-192) is the moral
 ancestor of micro-batching; here it's done natively: readStream ->
-watermarked event-time windows -> writeStream.
+watermarked event-time windows (tumbling, sliding, session) ->
+writeStream. The registered streaming queries run the same windows in
+batch.
 """
 
-from amorphous_mapreduce_spark.streaming.stateful import (
-    bounded_watermark_dedup,
-    streaming_exact_dedup,
-    streaming_sessionize,
-)
 from amorphous_mapreduce_spark.streaming.windows import (
-    interval_join_streams,
     sessionized_event_counts,
-    streaming_word_counts,
     windowed_event_stats,
 )
 
 __all__ = [
-    "bounded_watermark_dedup",
-    "interval_join_streams",
-    "streaming_exact_dedup",
-    "streaming_sessionize",
     "sessionized_event_counts",
-    "streaming_word_counts",
     "windowed_event_stats",
 ]

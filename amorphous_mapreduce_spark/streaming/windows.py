@@ -70,53 +70,3 @@ def sessionized_event_counts(
             "n_events",
         )
     )
-
-
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    max_delay: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Stream-stream interval join: each left event paired with the right
-    events for the same key whose timestamp lands in
-    [left.ts, left.ts + max_delay] — the impression->click attribution
-    shape. [key, l_ts, r_ts, l_type, r_type].
-
-    Both sides carry watermarks and the join condition bounds r_ts
-    relative to l_ts from BOTH directions, so Spark can expire state on
-    both sides (unbounded conditions would grow state forever). The join
-    itself is an equi-join on ``key`` with the range as a post-filter —
-    state is hash-partitioned by key exactly like a batch shuffle join.
-    """
-    li = left.select(
-        F.col(key).alias("k"),
-        F.col("ts").alias("l_ts"),
-        F.col("event_type").alias("l_type"),
-    ).withWatermark("l_ts", watermark)
-    ri = right.select(
-        F.col(key).alias("k"),
-        F.col("ts").alias("r_ts"),
-        F.col("event_type").alias("r_type"),
-    ).withWatermark("r_ts", watermark)
-    cond = (
-        (li["k"] == ri["k"])
-        & (ri["r_ts"] >= li["l_ts"])
-        & (ri["r_ts"] <= li["l_ts"] + F.expr(f"INTERVAL {max_delay}"))
-    )
-    return li.join(ri, cond).select(
-        li["k"].alias(key), "l_ts", "r_ts", "l_type", "r_type"
-    )
-
-
-def streaming_word_counts(lines: DataFrame, text_col: str = "value") -> DataFrame:
-    """The reference word-count pipeline as a continuous query.
-
-    Same tokenise/normalise/count as operators.wordcount (W1-W8); under a
-    stream source the groupBy maintains incremental state per word
-    (update/complete output modes).
-    """
-    from amorphous_mapreduce_spark.operators.wordcount import word_counts
-
-    return word_counts(lines, text_col=text_col)

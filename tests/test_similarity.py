@@ -157,6 +157,7 @@ def test_ivf_recall_floor(spark, sf_dir):
 
 def test_similarity_ops_on_empty_input(spark):
     from amorphous_mapreduce_spark.operators.similarity import (
+        adaptive_cells,
         ivf_topk,
         ivf_trained_ranked,
     )
@@ -166,6 +167,11 @@ def test_similarity_ops_on_empty_input(spark):
     assert lsh_topk(empty, k=3, n_planes=8, band_bits=4).count() == 0
     ranked = ivf_trained_ranked(empty, n_cells=4, max_rank=2)
     assert ivf_topk(ranked, k=3, n_probe=2).count() == 0
+    # The registered IVF queries pass n_cells=None, so an empty corpus
+    # reaches adaptive_cells(0): the 16-cell floor, as the oracle's
+    # length(bin(n)) - 1 form gives, and an empty ranking.
+    assert adaptive_cells(0) == 16
+    assert ivf_trained_ranked(empty, n_cells=None).count() == 0
 
 
 def test_blocked_topk_equals_rowwise(spark):

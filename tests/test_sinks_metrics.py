@@ -2,46 +2,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from amorphous_mapreduce_spark.plans import explain_str
 from amorphous_mapreduce_spark.plans.metrics import cost_report, summarize_cost
 from amorphous_mapreduce_spark.sources import load_table
-from amorphous_mapreduce_spark.sources.sinks import (
-    read_csv,
-    read_json,
-    write_csv,
-    write_json,
-    write_parquet,
-)
-
-
-def test_parquet_roundtrip_partitioned(spark, sf_dir, tmp_path):
-    li = load_table(spark, sf_dir, "lineitem")
-    out = str(tmp_path / "li_part")
-    write_parquet(li, out, partition_by=["l_returnflag"])
-    back = spark.read.parquet(out)
-    assert back.count() == li.count()
-    # partition pruning: filtering on the partition key prunes directories
-    plan = explain_str(back.filter(F.col("l_returnflag") == "R"))
-    assert "PartitionFilters" in plan and "l_returnflag" in plan
-
-
-def test_json_roundtrip(spark, sf_dir, tmp_path):
-    nation = load_table(spark, sf_dir, "nation")
-    out = str(tmp_path / "nation_json")
-    write_json(nation, out)
-    back = read_json(spark, out)
-    assert back.count() == 25
-    assert set(back.columns) == set(nation.columns)
-
-
-def test_csv_roundtrip(spark, sf_dir, tmp_path):
-    region = load_table(spark, sf_dir, "region")
-    out = str(tmp_path / "region_csv")
-    write_csv(region, out)
-    back = read_csv(spark, out)
-    assert sorted(r["r_name"] for r in back.collect()) == sorted(
-        r["r_name"] for r in region.collect()
-    )
 
 
 def test_cost_report_metrics(spark, sf_dir):
@@ -54,58 +16,3 @@ def test_cost_report_metrics(spark, sf_dir):
     totals = summarize_cost(report)
     assert totals["output_rows"] > 0
     assert totals["n_ops"] == len(report)
-
-
-def test_bucketed_join_skips_shuffle(spark, sf_dir, tmp_path):
-    # bucketBy persists co-partitioning: a join on the bucket key between
-    # two bucketed tables needs no Exchange (the reference's fixed
-    # mapper->reducer routing, made durable).
-    import uuid
-
-    from amorphous_mapreduce_spark.sources.sinks import write_bucketed_table
-
-    # warehouse dir is a static conf — tables are unique-named instead
-    suffix = uuid.uuid4().hex[:8]
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    write_bucketed_table(
-        li.select("l_orderkey", "l_quantity"), f"li_b_{suffix}", ["l_orderkey"], 8
-    )
-    write_bucketed_table(
-        orders.select("o_orderkey", "o_totalprice"), f"or_b_{suffix}", ["o_orderkey"], 8
-    )
-    a = spark.table(f"li_b_{suffix}")
-    b = spark.table(f"or_b_{suffix}")
-    # force the non-broadcast path so bucketing is what saves the shuffle
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b, a.l_orderkey == b.o_orderkey)
-        plan = explain_str(joined, "formatted")
-        assert joined.count() == li.count()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan, "bucketed join still shuffles"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_orc_round_trip_with_pushdown(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from amorphous_mapreduce_spark.sources.sinks import read_orc, write_orc
-
-    df = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 7).alias("g"), (F.col("id") * 3).alias("v")
-    )
-    path = str(tmp_path / "orc_rt")
-    write_orc(df, path, partition_by=["g"])
-    back = read_orc(spark, path)
-    assert back.count() == 1000
-    filtered = back.filter(F.col("g") == 3)
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    # partition pruning reaches the ORC scan
-    assert filtered.count() == df.filter(F.col("g") == 3).count()
-    assert "PartitionFilters" in plan or "g#" in plan
-    # value filters push down to the ORC reader
-    vplan = back.filter(F.col("v") > 900)._jdf.queryExecution().toString()
-    assert "PushedFilters" in vplan

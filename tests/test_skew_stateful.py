@@ -1,101 +1,10 @@
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from amorphous_mapreduce_spark.operators.skew import salted_count, salted_join
-
-
-@pytest.fixture(scope="module")
-def skewed_df(spark):
-    # one hot key (90% of rows) + a tail
-    hot = spark.range(900).select(
-        F.lit(1).alias("k"), F.col("id").alias("payload")
-    )
-    tail = spark.range(100).select(
-        (F.col("id") % 10 + 2).cast("long").alias("k"), F.col("id").alias("payload")
-    )
-    return hot.unionByName(tail)
-
-
-def test_salted_count_equals_plain(spark, skewed_df):
-    plain = {
-        r["k"]: r["count"] for r in skewed_df.groupBy("k").count().collect()
-    }
-    salted = {
-        r["k"]: r["cnt"]
-        for r in salted_count(skewed_df, "k", ["payload"], buckets=8).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_equals_plain(spark, skewed_df):
-    small = spark.createDataFrame(
-        [(k, f"dim_{k}") for k in range(1, 12)], ["k", "name"]
-    )
-    plain = sorted(
-        map(tuple, skewed_df.join(small, "k").select("k", "payload", "name").collect())
-    )
-    salted = sorted(
-        map(
-            tuple,
-            salted_join(skewed_df, small, "k", ["payload"], buckets=8)
-            .select("k", "payload", "name")
-            .collect(),
-        )
-    )
-    assert salted == plain
-
-
-def test_streaming_exact_dedup_across_batches(spark, tmp_path):
-    from amorphous_mapreduce_spark.streaming.stateful import streaming_exact_dedup
-
-    src = str(tmp_path / "docs_src")
-    ckpt = str(tmp_path / "ckpt")
-    batch1 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], ["doc_id", "text"]
-    )
-    batch2 = spark.createDataFrame(
-        [(3, "alpha  beta"), (4, "epsilon zeta"), (5, "gamma delta")],
-        ["doc_id", "text"],
-    )
-    # two files -> two micro-batches (maxFilesPerTrigger=1) -> cross-batch state
-    batch1.coalesce(1).write.mode("overwrite").parquet(src + "/b1")
-    batch2.coalesce(1).write.mode("append").parquet(src + "/b2")
-    stream = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("sdedup")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM sdedup").collect()
-    by_hash = {}
-    for r in rows:
-        assert r["content_hash"] not in by_hash, "duplicate hash emitted"
-        by_hash[r["content_hash"]] = r["doc_id"]
-    emitted = set(by_hash.values())
-    # 3 distinct contents; docs {1,3} share content (modulo whitespace), as
-    # do {2,5}; exactly one of each pair is emitted (which one depends on
-    # micro-batch file order), plus unique doc 4.
-    assert len(by_hash) == 3
-    assert 4 in emitted
-    assert len(emitted & {1, 3}) == 1
-    assert len(emitted & {2, 5}) == 1
-
 
 def test_aqe_splits_skewed_join_partitions(spark):
     # With skew thresholds lowered, AQE must split the hot key's partition
-    # (OptimizeSkewedJoin) — the automatic path; operators.skew is for the
-    # residual cases.
+    # (OptimizeSkewedJoin): the engine leaves join skew to AQE rather than
+    # salting keys by hand.
     from amorphous_mapreduce_spark.plans import explain_str
     from pyspark.sql import functions as F
 

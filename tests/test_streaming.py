@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from amorphous_mapreduce_spark.sources import load_table
 from amorphous_mapreduce_spark.streaming import (
     sessionized_event_counts,
-    streaming_word_counts,
     windowed_event_stats,
 )
 
@@ -48,17 +47,6 @@ def test_windowed_event_stats_batch_stream_parity(spark, sf_dir, tmp_path):
     merged = s.merge(b, on=key, suffixes=("_s", "_b"))
     assert (merged["n_events_s"] == merged["n_events_b"]).all()
     assert (merged["sum_value_s"] == merged["sum_value_b"]).all()
-
-
-def test_streaming_word_counts(spark, tmp_path):
-    lines = spark.createDataFrame(
-        [("spark streams spark",), ("streams of spark",)], ["value"]
-    )
-    got = _run_stream_over_parquet(
-        spark, lines, streaming_word_counts, tmp_path, "wc", mode="complete"
-    )
-    counts = {r["word"]: r["cnt"] for r in got.collect()}
-    assert counts == {"spark": 3, "streams": 2, "of": 1}
 
 
 def test_sessionized_event_counts_batch(spark, sf_dir):
@@ -162,41 +150,6 @@ def test_stream_static_join(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_stream_stream_interval_join(spark, sf_dir, tmp_path):
-    # impression->click attribution: two event streams joined on user
-    # within a bounded time interval; batch run of the same logic is the
-    # ground truth (unified semantics).
-    from amorphous_mapreduce_spark.streaming import interval_join_streams
-
-    events = load_table(spark, sf_dir, "events")
-    left = events.filter(F.col("event_type") == "view")
-    right = events.filter(F.col("event_type") == "purchase")
-    lsrc, rsrc = str(tmp_path / "ivl_l"), str(tmp_path / "ivl_r")
-    left.write.mode("overwrite").parquet(lsrc)
-    right.write.mode("overwrite").parquet(rsrc)
-
-    ls = spark.readStream.schema(left.schema).parquet(lsrc)
-    rs = spark.readStream.schema(right.schema).parquet(rsrc)
-    joined = interval_join_streams(ls, rs, max_delay="30 minutes")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ivl")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["l_ts"], r["r_ts"])
-        for r in spark.sql("SELECT * FROM ivl").collect()
-    }
-    want = {
-        (r["user_id"], r["l_ts"], r["r_ts"])
-        for r in interval_join_streams(left, right, max_delay="30 minutes").collect()
-    }
-    assert got == want and len(want) > 0
-
-
 def test_sliding_window_stats_batch_stream_parity(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
     batch = windowed_event_stats(
@@ -216,41 +169,6 @@ def test_sliding_window_stats_batch_stream_parity(spark, sf_dir, tmp_path):
     merged = s.merge(b, on=key, suffixes=("_s", "_b"))
     assert (merged["n_events_s"] == merged["n_events_b"]).all()
     assert (merged["sum_value_s"] == merged["sum_value_b"]).all()
-
-
-def test_streaming_sessionize_closed_sessions_match_batch(spark, sf_dir, tmp_path):
-    """Custom-stateful sessionization (applyInPandasWithState) emits the
-    same closed sessions as the batch session_window path; each user's
-    final session stays open pending the event-time timeout."""
-    from amorphous_mapreduce_spark.streaming import streaming_sessionize
-
-    events = load_table(spark, sf_dir, "events")
-    batch = (
-        sessionized_event_counts(events, gap="30 minutes")
-        .select(
-            "user_id",
-            F.unix_micros("session_start").alias("session_start_us"),
-            F.unix_micros("session_end").alias("session_end_us"),
-            "n_events",
-        )
-        .toPandas()
-    )
-    streamed = _run_stream_over_parquet(
-        spark,
-        events,
-        lambda s: streaming_sessionize(s, gap_minutes=30),
-        tmp_path,
-        "stateful_sessions",
-    ).toPandas()
-    # drop each user's final (possibly-open) session from the batch view
-    last = batch.groupby("user_id")["session_start_us"].transform("max")
-    closed = batch[batch["session_start_us"] < last]
-    key = ["user_id", "session_start_us"]
-    merged = streamed.merge(closed, on=key, suffixes=("_s", "_b"))
-    # every closed batch session appears in the stream output, identically
-    assert len(merged) == len(closed)
-    assert (merged["session_end_us_s"] == merged["session_end_us_b"]).all()
-    assert (merged["n_events_s"] == merged["n_events_b"]).all()
 
 
 def test_streaming_cms_partials_merge_to_batch_sketch(spark, sf_dir, tmp_path):
@@ -291,25 +209,6 @@ def test_streaming_cms_partials_merge_to_batch_sketch(spark, sf_dir, tmp_path):
         (r["depth"], r["bucket"]): r["cell"] for r in cms_cells(docs).collect()
     }
     assert dict(merged) == want
-
-
-def test_bounded_watermark_dedup_drops_replayed_rows(spark, sf_dir, tmp_path):
-    """A stream carrying every event twice dedups back to the distinct
-    set with bounded (watermark-horizon) state."""
-    from amorphous_mapreduce_spark.streaming import bounded_watermark_dedup
-
-    events = load_table(spark, sf_dir, "events").limit(500)
-    doubled = events.unionByName(events)
-    got = _run_stream_over_parquet(
-        spark,
-        doubled,
-        lambda s: bounded_watermark_dedup(s, ["event_id"], "ts", "1 hour"),
-        tmp_path,
-        "wm_dedup",
-    ).toPandas()
-    want = events.toPandas()
-    assert sorted(got.event_id) == sorted(want.event_id)
-    assert got.event_id.is_unique
 
 
 def test_streaming_drift_cells_merge_to_batch_verdicts(spark, sf_dir, tmp_path):
