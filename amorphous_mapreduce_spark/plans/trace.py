@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 # Substring -> category, first match wins (reference classes src/op.rs:29-173).
@@ -62,35 +63,45 @@ def node_class(node: Any) -> str:
     return node.getClass().getSimpleName().removesuffix("$")
 
 
-def walk(root: Any) -> list[tuple[Any, list[int]]]:
-    """Children-first walk over a JVM TreeNode: (node, child indices) per node.
+def _seq(scala_seq: Any) -> list[Any]:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
 
-    Each node follows its children, so a dependency index always points at
-    an earlier entry. Unlike ``TreeNode.toJSON`` (which hides the subtrees
-    of AQE ``QueryStageExec`` wrappers and nested ``AdaptiveSparkPlanExec``
-    nodes — the round-4 exporter missed every operator below the first
-    materialized shuffle stage), this walk EXPANDS them: a faithful G14
-    trace must show the ops that actually executed inside each stage.
+
+def walk(root: Any) -> list[tuple[Any, list[int]]]:
+    """Children-first DAG walk over a JVM plan: (node, dependency indices).
+
+    Dependencies always point at earlier entries (src/op.rs:15-16). AQE
+    query stages are expanded through ``plan()``, an adaptive plan through
+    its final plan once final, else its initial plan (``finalPhysicalPlan()``
+    EXECUTES an unrun plan; the walk runs no job). Every other node also
+    follows ``innerChildren()``: a cached scan's relation, the relation's
+    cached plan, subquery plans. Each cached plan is emitted once, keyed on
+    the JVM identity of its ``cacheBuilder()``; later consumers depend on
+    that entry (plan text repeats it under every consumer).
     """
+    identity = SparkContext._jvm.System.identityHashCode  # type: ignore[union-attr]
     out: list[tuple[Any, list[int]]] = []
+    cached: dict[int, int] = {}
 
     def visit(node: Any) -> int:
         cls = node_class(node)
-        children = [
-            node.children().apply(i) for i in range(node.children().size())
-        ]
-        # AQE wrappers: the real subtree hangs off a non-child accessor.
+        if cls == "InMemoryRelation":
+            key = identity(node.cacheBuilder())
+            if key in cached:
+                return cached[key]
+        children = _seq(node.children())
         if "QueryStage" in cls:
             children.append(node.plan())
         elif "AdaptiveSparkPlan" in cls:
-            # finalPhysicalPlan() on a plan that has not run EXECUTES it
-            # (AQE materializes every stage to re-plan), so an unexecuted
-            # plan shows its initial plan instead.
             children.append(
                 node.finalPhysicalPlan() if node.isFinalPlan() else node.initialPlan()
             )
+        else:
+            children += _seq(node.innerChildren())
         deps = [visit(c) for c in children]
         out.append((node, deps))
+        if cls == "InMemoryRelation":
+            cached[key] = len(out) - 1
         return len(out) - 1
 
     visit(root)
@@ -103,8 +114,9 @@ def plan_to_json(df: DataFrame, plan: str = "executedPlan") -> str:
     ``plan``: 'logical' | 'analyzed' | 'optimizedPlan' | 'sparkPlan' |
     'executedPlan'. Nodes are emitted children-first with dependency
     edges, mirroring the reference's dependency-ordered op_list
-    (src/op.rs:15-16: deps always point at already-emitted ops). AQE
-    query stages and nested adaptive plans are expanded, so an
+    (src/op.rs:15-16: deps always point at already-emitted ops). The
+    nodes are those of ``walk``: AQE query stages, nested adaptive plans,
+    cached plans (each once) and subqueries are expanded, so an
     executed-plan trace covers every operator that actually ran.
     """
     qe = df._jdf.queryExecution()

@@ -265,23 +265,18 @@ GROUP BY cntry_group
 @register("idle_wealthy_customers", Q22_ORACLE)
 def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: above-global-average customers with no large orders —
-    scalar subquery (1-row aggregate, broadcast cross join) + left-anti join.
-    Pure dataflow: the scalar average stays in-plan (no driver action),
-    the same crossJoin-the-scalar pattern used repo-wide."""
+    uncorrelated scalar subquery (``DataFrame.scalar()``, one 1-row
+    aggregate per execution) + left-anti join. Pure dataflow: the average
+    stays in-plan (no driver action)."""
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     avg_bal = (
         cust.filter(F.col("c_acctbal") > 0)
-        .agg(
-            (F.sum(dec("c_acctbal")).cast("double") / F.count("*")).alias(
-                "_avg_bal"
-            )
-        )
+        .agg(F.sum(dec("c_acctbal")).cast("double") / F.count("*"))
+        .scalar()
     )
     big_orders = orders.filter(F.col("o_totalprice") > 450000)
-    wealthy = cust.crossJoin(F.broadcast(avg_bal)).filter(
-        F.col("c_acctbal") > F.col("_avg_bal")
-    )
+    wealthy = cust.filter(F.col("c_acctbal") > avg_bal)
     return (
         wealthy.join(big_orders, wealthy.c_custkey == big_orders.o_custkey, "left_anti")
         .groupBy((F.col("c_nationkey") % 5).cast("int").alias("cntry_group"))

@@ -49,9 +49,7 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         # Output-bound baselines (simhash_near_pairs at sf1: 77M rows)
         # exceed the 1g default when an oracle check collects them.
-        "spark.driver.maxResultSize": os.environ.get(
-            "SPARK_GRAFT_MAX_RESULT", "6g"
-        ),
+        "spark.driver.maxResultSize": "6g",
         # Runtime re-planning: partition coalescing, skew-join handling.
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",

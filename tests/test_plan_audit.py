@@ -1,0 +1,64 @@
+"""Rules of ``tools/plan_audit.audit_plan`` on synthetic frames.
+
+The audit reads the nodes of ``plans.trace.walk``: a flag is a node class
+(or a SinglePartition shuffle whose consumer is not a scalar sink), and a
+cached sub-plan counts once however many consumers read it.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from amorphous_mapreduce_spark.plans.trace import walk
+from tools.plan_audit import ALLOW, audit_plan
+
+
+def _audit(name, df):
+    return audit_plan(name, walk(df._jdf.queryExecution().executedPlan()))
+
+
+def _non_equi_join(spark):
+    a = spark.range(20).withColumnRenamed("id", "a")
+    b = spark.range(10).withColumnRenamed("id", "b")
+    return a.join(b, F.col("a") < F.col("b"))
+
+
+def test_scalar_aggregate_is_not_flagged(spark):
+    r = _audit("synthetic", spark.range(1000).agg(F.sum("id").alias("s")))
+    assert r["flags"] == {}
+    assert r["unexplained"] == {}
+
+
+def test_global_window_is_flagged_single_partition(spark):
+    df = spark.range(100).withColumn("r", F.row_number().over(Window.orderBy("id")))
+    r = _audit("synthetic", df)
+    assert r["flags"] == {"Exchange SinglePartition": 1}
+
+
+def test_non_equi_join_is_flagged_nested_loop(spark):
+    r = _audit("synthetic", _non_equi_join(spark))
+    assert r["flags"] == {"BroadcastNestedLoopJoin": 1}
+
+
+def test_cached_nested_loop_join_counts_once(spark):
+    """Plan text prints the cached plan under each of its two consumers;
+    the walk lists it once."""
+    cached = _non_equi_join(spark).persist()
+    try:
+        df = cached.filter("a < 5").unionByName(cached.filter("a >= 15"))
+        r = _audit("synthetic", df)
+    finally:
+        cached.unpersist()
+    assert r["flags"] == {"BroadcastNestedLoopJoin": 1}
+
+
+def test_allowlisted_flag_goes_to_notes(spark):
+    name = next(q for q, a in ALLOW.items() if "BroadcastNestedLoopJoin" in a)
+    allowed = _audit(name, _non_equi_join(spark))
+    assert allowed["unexplained"] == {}
+    assert len(allowed["notes"]) == 1
+    assert allowed["notes"][0].startswith("BroadcastNestedLoopJoin: allowed")
+    unlisted = _audit("synthetic", _non_equi_join(spark))
+    assert unlisted["unexplained"] == {"BroadcastNestedLoopJoin": 1}
+    assert unlisted["notes"] == []

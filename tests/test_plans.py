@@ -138,3 +138,66 @@ def test_executed_plan_has_wholestage_codegen(spark, sf_dir):
     plan = explain_str(df, "simple")
     # '*(n)' marks whole-stage-codegen spans in the AQE final plan
     assert "*(" in plan or "WholeStageCodegen" in plan
+
+
+def test_walk_lists_a_cached_plan_once_and_subqueries(spark):
+    """The walk is the reference's op DAG (src/op.rs:15-16): a persisted
+    frame read by two consumers is ONE InMemoryRelation entry that both
+    scans depend on, a scalar subquery's plan is walked, every dependency
+    points at an earlier entry, and exporting runs nothing. After the cost
+    report the cached plan's shuffle is counted once, and cost row i is
+    still op-list row i."""
+    from amorphous_mapreduce_spark.plans.metrics import cost_report, summarize_cost
+    from amorphous_mapreduce_spark.plans.trace import node_class, walk
+
+    cached = (
+        spark.range(1000)
+        .selectExpr("id % 10 AS k", "id AS v")
+        .repartition(3, "k")
+        .persist()
+    )
+    try:
+        # one-partition source: the subquery's aggregate needs no exchange,
+        # so the cached plan holds the frame's only shuffle.
+        top = spark.range(0, 10, 1, 1).agg(F.max("id")).scalar()
+        df = cached.filter("k < 5").unionByName(cached.filter(F.col("v") > top))
+        sc = spark.sparkContext
+        group = "walk-cached-plan-once"
+        sc.setJobGroup(group, "plan_to_json on a frame with a cache and a subquery")
+        try:
+            ops = json.loads(plan_to_json(df, plan="executedPlan"))["op_list"]
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        rels = [
+            n
+            for n, _ in walk(df._jdf.queryExecution().executedPlan())
+            if node_class(n) == "InMemoryRelation"
+        ]
+        assert len(rels) == 1
+        assert not rels[0].cacheBuilder().isCachedColumnBuffersLoaded()
+
+        (rel,) = [o["index"] for o in ops if o["op"]["class"] == "InMemoryRelation"]
+        scans = [o for o in ops if o["op"]["class"] == "InMemoryTableScanExec"]
+        assert len(scans) == 2
+        assert all(rel in o["dependency"] for o in scans)
+        assert all(d < o["index"] for o in ops for d in o["dependency"])
+        classes = {o["op"]["class"] for o in ops}
+        # the subquery's aggregate: neither the cached plan nor the union has one
+        assert {"SubqueryExec", "HashAggregateExec"} <= classes
+
+        report = cost_report(df)
+        after = json.loads(plan_to_json(df, plan="executedPlan"))["op_list"]
+        assert [r["index"] for r in report] == [o["index"] for o in after]
+        assert [r["dependency"] for r in report] == [o["dependency"] for o in after]
+        assert [o["op"]["class"] for o in after].count("InMemoryRelation") == 1
+        shuffles = [
+            r["metrics"].get("shuffleBytesWritten", 0)
+            for r in report
+            if r["op"] == "Exchange"
+        ]
+        assert len(shuffles) == 1
+        assert summarize_cost(report)["shuffle_bytes"] == shuffles[0] > 0
+    finally:
+        cached.unpersist()

@@ -2,24 +2,24 @@
 
 The 100 TB question ("would this plan survive 1000 executors?") is asked
 per-query and answered from the *physical plan*, not from timing. This
-tool builds each registered query and scans its executed-plan text for
-the anti-patterns that break at scale:
+tool builds each registered query, walks its executed plan with
+``plans.trace.walk`` (AQE stages expanded, each cached sub-plan once,
+subqueries included) and flags the node classes that break at scale:
 
   - ``CartesianProduct``            unbounded all-pairs join over data
   - ``Exchange SinglePartition``    everything through one task — benign
-                                    only as the 1-row final step of a
-                                    scalar aggregate (detected from the
-                                    surrounding plan lines)
+                                    only when it feeds a scalar aggregate,
+                                    a global ordered limit or an ``Expand``
   - ``BroadcastNestedLoopJoin``     benign only when one side is a 1-row
                                     scalar (per-query allowlist, each
                                     entry carrying its justification)
   - ``BatchEvalPython``             row-at-a-time Python UDF in the plan
                                     (Arrow/pandas nodes are fine)
 
-and records the good signals (``PushedFilters`` reaching scans,
-``WholeStageCodegen`` spans, broadcast joins, ``TakeOrderedAndProject``
-top-k). Output: one summary line per query, a JSON report at
-``PLAN_AUDIT.json``, exit 1 on any unexplained red flag.
+and records the good signals (scans with ``PushedFilters``, broadcast
+joins, ``TakeOrderedAndProject`` top-k, Arrow Python nodes). Output: one
+summary line per query, a JSON report at ``PLAN_AUDIT.json``, exit 1 on
+any unexplained red flag.
 
 Usage::
 
@@ -34,10 +34,11 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from amorphous_mapreduce_spark.plans.trace import node_class, walk  # noqa: E402
 
 # Queries whose plan legitimately contains a flagged node, with the
 # reason it is scale-safe anyway. Every entry must say WHY.
@@ -1058,79 +1059,68 @@ ALLOW: dict[str, dict[str, str]] = {
     },
 }
 
-# NOTE: WholeStageCodegen deliberately absent — pre-execution AQE plan
-# strings don't carry codegen markers, so counting them here would
-# always read 0 and imply something was measured that wasn't.
+FLAGGED = ("CartesianProductExec", "BroadcastNestedLoopJoinExec", "BatchEvalPythonExec")
+# NOTE: WholeStageCodegen deliberately absent — pre-execution AQE plans
+# carry no codegen nodes, so counting them here would always read 0 and
+# imply something was measured that wasn't.
 GOOD = {
-    "broadcast_joins": r"BroadcastHashJoin",
-    "sort_merge_joins": r"SortMergeJoin",
-    "topk_take_ordered": r"TakeOrderedAndProject",
-    "arrow_python": r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas|"
-    r"FlatMapGroupsInPandasWithState",
+    "broadcast_joins": ("BroadcastHashJoinExec",),
+    "sort_merge_joins": ("SortMergeJoinExec",),
+    "topk_take_ordered": ("TakeOrderedAndProjectExec",),
+    "arrow_python": ("ArrowEvalPythonExec", "FlatMapGroupsInPandasExec",
+                     "MapInPandasExec", "FlatMapGroupsInPandasWithStateExec"),
 }
+# Nodes between a SinglePartition exchange and its real consumer.
+PASS_THROUGH = {"ProjectExec", "FilterExec", "WholeStageCodegenExec", "InputAdapter",
+                "ColumnarToRowExec", "ShuffleQueryStageExec", "AQEShuffleReadExec"}
+# Besides a scalar aggregate: a global ordered limit, or the grouping-set
+# rewrite of a scalar aggregate (percentile plans).
+SINGLE_ROW_SINKS = {"TakeOrderedAndProjectExec", "CollectLimitExec", "ExpandExec"}
 
 
-def _singlepartition_is_scalar(lines: list[str], i: int) -> bool:
-    """True if the Exchange SinglePartition at ``lines[i]`` feeds a scalar
-    (no-grouping-key) aggregate or a global ordered limit — the plan text
-    lists consumers ABOVE the exchange."""
-    for j in range(i - 1, max(-1, i - 5), -1):
-        up = lines[j]
-        if "HashAggregate(keys=[]" in up or "SortAggregate(key=[]" in up:
-            return True
-        if "TakeOrderedAndProject" in up or "CollectLimit" in up:
-            return True
-        # grouping-set rewrite of a scalar agg (percentile plans)
-        if "Expand" in up or "ObjectHashAggregate(keys=[]" in up:
-            return True
-        if "Exchange" in up:  # another boundary — stop looking
-            break
-    return False
+def audit_plan(name: str, nodes: list) -> dict:
+    """Flags and good signals of one plan, from the nodes of
+    ``plans.trace.walk`` (each cached sub-plan once, subqueries included)."""
+    classes = [node_class(n) for n, _ in nodes]
+    parent = {d: i for i, (_, deps) in enumerate(nodes) for d in deps}
 
+    def feeds_single_row_sink(i: int) -> bool:
+        i = parent.get(i)
+        while i is not None and classes[i] in PASS_THROUGH:
+            i = parent.get(i)
+        if i is None:
+            return False
+        if classes[i].endswith("AggregateExec"):
+            return nodes[i][0].groupingExpressions().isEmpty()
+        return classes[i] in SINGLE_ROW_SINKS
 
-def audit_plan(name: str, plan: str) -> dict:
-    lines = plan.splitlines()
-    flags: dict[str, int] = {}
-    notes: list[str] = []
+    bad_sp = sum(
+        1
+        for i, (n, _) in enumerate(nodes)
+        if classes[i] == "ShuffleExchangeExec"
+        and node_class(n.outputPartitioning()) == "SinglePartition"
+        and not feeds_single_row_sink(i)
+    )
+    counts = {c.removesuffix("Exec"): classes.count(c) for c in FLAGGED}
+    counts["Exchange SinglePartition"] = bad_sp
+    flags = {k: v for k, v in counts.items() if v}
 
-    n_cart = len(re.findall(r"CartesianProduct", plan))
-    if n_cart:
-        flags["CartesianProduct"] = n_cart
-
-    n_bnlj = len(re.findall(r"BroadcastNestedLoopJoin", plan))
-    if n_bnlj:
-        flags["BroadcastNestedLoopJoin"] = n_bnlj
-
-    bad_sp = 0
-    for i, ln in enumerate(lines):
-        if "Exchange SinglePartition" in ln and not _singlepartition_is_scalar(
-            lines, i
-        ):
-            bad_sp += 1
-    if bad_sp:
-        flags["Exchange SinglePartition"] = bad_sp
-
-    n_batch = len(re.findall(r"BatchEvalPython", plan))
-    if n_batch:
-        flags["BatchEvalPython"] = n_batch
-
-    good = {k: len(re.findall(rx, plan)) for k, rx in GOOD.items()}
-    scans = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    good["scans"] = len(scans)
-    good["scans_with_pushed_filters"] = sum(1 for s in scans if s.strip())
+    good = {k: sum(map(classes.count, names)) for k, names in GOOD.items()}
+    pushed = [
+        n.metadata().get("PushedFilters")
+        for (n, _), cls in zip(nodes, classes)
+        if cls == "FileSourceScanExec"
+    ]
+    good["scans"] = len(pushed)
+    good["scans_with_pushed_filters"] = sum(
+        1 for p in pushed if p.isDefined() and p.get().strip("[] ")
+    )
 
     allowed = ALLOW.get(name, {})
     unexplained = {k: v for k, v in flags.items() if k not in allowed}
-    for k in flags:
-        if k in allowed:
-            notes.append(f"{k}: allowed — {allowed[k]}")
-    return {
-        "query": name,
-        "flags": flags,
-        "unexplained": unexplained,
-        "good": good,
-        "notes": notes,
-    }
+    notes = [f"{k}: allowed — {allowed[k]}" for k in flags if k in allowed]
+    return {"query": name, "flags": flags, "unexplained": unexplained,
+            "good": good, "notes": notes}
 
 
 def main() -> int:
@@ -1149,7 +1139,7 @@ def main() -> int:
             continue
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            nodes = walk(df._jdf.queryExecution().executedPlan())
         except Exception as exc:  # builder failure is itself a finding
             results.append({"query": name, "error": str(exc)[:300]})
             n_red += 1
@@ -1157,7 +1147,7 @@ def main() -> int:
             continue
         finally:
             release(spark)  # the builders' eager jobs may cache frames
-        r = audit_plan(name, plan)
+        r = audit_plan(name, nodes)
         r["sf_dir"] = sf_dir  # per-row provenance (ADVICE_r04 item 4)
         results.append(r)
         if r["unexplained"]:
@@ -1185,15 +1175,13 @@ def main() -> int:
             prior = {"sf_dir": sf_dir, "results": []}
         audited = {r["query"] for r in results}
         # drop stale rows: renamed/deleted queries must not linger.
-        # Carried-over rows keep their own sf_dir (backfilled from the
-        # prior summary when absent) — the subset run's sf_dir must not
-        # be stamped onto plans captured at another SF (ADVICE_r04 4).
-        prior_sf = prior.get("sf_dir")
-        carried = []
-        for r in prior["results"]:
-            if r["query"] not in audited and r["query"] in QUERIES:
-                r.setdefault("sf_dir", prior_sf)
-                carried.append(r)
+        # Carried-over rows keep their own sf_dir — the subset run's sf_dir
+        # must not be stamped onto plans captured at another SF.
+        carried = [
+            r
+            for r in prior["results"]
+            if r["query"] not in audited and r["query"] in QUERIES
+        ]
         if carried and any(r.get("sf_dir") != sf_dir for r in carried):
             print(
                 f"note: merged rows span multiple sf_dirs (subset run at"
