@@ -29,9 +29,9 @@ def dec(col: Column | str, typ: str = DEC) -> Column:
     return (F.col(col) if isinstance(col, str) else col).cast(typ)
 
 
-def dsum(col: Column | str, typ: str = DEC) -> Column:
+def dsum(col: Column | str) -> Column:
     """Order-insensitive exact sum of a double measure, returned as double."""
-    return F.sum(dec(col, typ)).cast("double")
+    return F.sum(dec(col)).cast("double")
 
 
 def dsum_expr(expr: Column) -> Column:
@@ -39,9 +39,9 @@ def dsum_expr(expr: Column) -> Column:
     return F.sum(expr).cast("double")
 
 
-def davg(col: Column | str, typ: str = DEC) -> Column:
+def davg(col: Column | str) -> Column:
     """Exact-sum-based average: identical double division on both engines."""
-    return dsum(col, typ) / F.count(F.lit(1))
+    return dsum(col) / F.count(F.lit(1))
 
 
 def dsum_scaled(expr: Column, scale: int = 6) -> Column:

@@ -2,9 +2,9 @@
 
 Spark's builtin ``hash()`` (murmur3) has no DuckDB equivalent, so every
 operator that must be oracle-checkable derives integers from MD5 hex
-digests instead: ``conv(substr(md5(x), pos, 15), 16, 10)`` yields a
+digests instead: ``conv(substr(md5(x), 1, 15), 16, 10)`` yields a
 non-negative 60-bit integer identically computable in DuckDB as
-``CAST('0x' || substr(md5(x), pos, 15) AS BIGINT)``. MD5 is used as a
+``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``. MD5 is used as a
 stable mixing function, not for security.
 
 All hashing stays JVM-side (builtin md5/conv/substring — whole-stage
@@ -22,13 +22,9 @@ def md5_hex(col: Column | str) -> Column:
     return F.md5(F.col(col) if isinstance(col, str) else col)
 
 
-def hex_hash64(col: Column | str, pos: int = 1) -> Column:
-    """Non-negative 60-bit integer hash from 15 MD5 hex chars at ``pos``.
+def hex_hash64(col: Column | str) -> Column:
+    """Non-negative 60-bit integer hash from the first 15 MD5 hex chars.
 
-    ``pos`` (1-based) selects independent hash functions from one digest:
-    pos=1 and pos=17 give two disjoint 60-bit values. DuckDB equivalent:
-    ``CAST('0x' || substr(md5(x), pos, 15) AS BIGINT)``.
+    DuckDB equivalent: ``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``.
     """
-    if not 1 <= pos <= 18:
-        raise ValueError("pos must be in [1, 18] to fit 15 hex chars in the digest")
-    return F.conv(F.substring(md5_hex(col), pos, 15), 16, 10).cast("long")
+    return F.conv(F.substring(md5_hex(col), 1, 15), 16, 10).cast("long")

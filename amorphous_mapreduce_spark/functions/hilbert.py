@@ -30,9 +30,7 @@ class HilbertRound(TypedDict):
     hd: str
 
 
-def hilbert_rounds(
-    n_bits: int, intdiv: str, x: str = "hx", y: str = "hy", d: str = "hd"
-) -> list[HilbertRound]:
+def hilbert_rounds(n_bits: int, intdiv: str) -> list[HilbertRound]:
     """Per-round (hx, hy, hd) replacement expressions for xy2d on the
     2^n_bits grid.  Apply round i's three expressions simultaneously
     (they all reference round i-1's columns)."""
@@ -40,28 +38,26 @@ def hilbert_rounds(
     rounds: list[HilbertRound] = []
     for i in range(n_bits):
         s = n >> (i + 1)
-        rx = f"(({x} {intdiv} {s}) % 2)"
-        ry = f"(({y} {intdiv} {s}) % 2)"
+        rx = f"((hx {intdiv} {s}) % 2)"
+        ry = f"((hy {intdiv} {s}) % 2)"
         quad = f"(CASE WHEN {rx} = 0 THEN {ry} ELSE 3 - {ry} END)"
         rounds.append(
             HilbertRound(
-                hd=f"({d} + {s * s} * {quad})",
+                hd=f"(hd + {s * s} * {quad})",
                 hx=(
-                    f"(CASE WHEN {ry} = 1 THEN {x}"
-                    f" WHEN {rx} = 1 THEN {n - 1} - {y} ELSE {y} END)"
+                    f"(CASE WHEN {ry} = 1 THEN hx"
+                    f" WHEN {rx} = 1 THEN {n - 1} - hy ELSE hy END)"
                 ),
                 hy=(
-                    f"(CASE WHEN {ry} = 1 THEN {y}"
-                    f" WHEN {rx} = 1 THEN {n - 1} - {x} ELSE {x} END)"
+                    f"(CASE WHEN {ry} = 1 THEN hy"
+                    f" WHEN {rx} = 1 THEN {n - 1} - hx ELSE hx END)"
                 ),
             )
         )
     return rounds
 
 
-def hilbert_cte_chain(
-    n_bits: int, base_cte: str, passthrough: str, first: str = "hb0"
-) -> tuple[str, str]:
+def hilbert_cte_chain(n_bits: int, base_cte: str, passthrough: str) -> tuple[str, str]:
     """DuckDB chained-CTE text computing hd from (hx, hy) in ``base_cte``
     (which must expose hx, hy, hd=0 and the passthrough columns).
     Returns (cte_sql_fragment, final_cte_name)."""
@@ -69,7 +65,7 @@ def hilbert_cte_chain(
     parts = []
     prev = base_cte
     for i, r in enumerate(rounds):
-        name = f"{first}{i + 1}"
+        name = f"hb0{i + 1}"
         parts.append(
             f", {name} AS (SELECT {passthrough}, {r['hx']} AS hx,"
             f" {r['hy']} AS hy, {r['hd']} AS hd FROM {prev})"

@@ -30,12 +30,7 @@ from amorphous_mapreduce_spark.functions.hashing import hex_hash64, md5_hex
 from amorphous_mapreduce_spark.operators.dedup import normalize_text, tokenized
 
 
-def epoch_shards(
-    docs: DataFrame,
-    n_shards: int = 8,
-    epoch: int = 0,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def epoch_shards(docs: DataFrame, n_shards: int = 8, epoch: int = 0) -> DataFrame:
     """Deterministic epoch shuffle + shard manifest: [id, shard_id, pos].
 
     A training run needs every document exactly once per epoch, in an
@@ -45,8 +40,8 @@ def epoch_shards(
     workers never reorders data, and no global sort exists anywhere —
     the only window is per-shard (keyed).
     """
-    h = hex_hash64(F.concat(F.lit(f"ep{epoch}:"), F.col(id_col).cast("string")))
-    base = docs.select(F.col(id_col).alias("id"), h.alias("h"))
+    h = hex_hash64(F.concat(F.lit(f"ep{epoch}:"), F.col("doc_id").cast("string")))
+    base = docs.select(F.col("doc_id").alias("id"), h.alias("h"))
     w = Window.partitionBy("shard_id").orderBy(F.asc("h"), F.asc("id"))
     return (
         base.withColumn("shard_id", F.col("h") % F.lit(n_shards))
@@ -120,12 +115,7 @@ def doc_rarity(docs: DataFrame) -> DataFrame:
     )
 
 
-def incremental_exact_dedup(
-    new_docs: DataFrame,
-    old_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def incremental_exact_dedup(new_docs: DataFrame, old_docs: DataFrame) -> DataFrame:
     """Dedup an incoming batch against an existing corpus:
     [id, content_hash, dup_of, is_dup].
 
@@ -134,13 +124,13 @@ def incremental_exact_dedup(
     content, then a left join marks each new document. is_dup is an int
     flag (0/1) so the driver's value hash is engine-stable.
     """
-    digest = md5_hex(normalize_text(text_col))
+    digest = md5_hex(normalize_text("text"))
     old = (
-        old_docs.select(digest.alias("content_hash"), F.col(id_col).alias("_oid"))
+        old_docs.select(digest.alias("content_hash"), F.col("doc_id").alias("_oid"))
         .groupBy("content_hash")
         .agg(F.min("_oid").alias("dup_of"))
     )
-    new = new_docs.select(F.col(id_col).alias("id"), digest.alias("content_hash"))
+    new = new_docs.select(F.col("doc_id").alias("id"), digest.alias("content_hash"))
     return new.join(old, "content_hash", "left").select(
         "id",
         "content_hash",
@@ -213,9 +203,7 @@ def distributed_prefix_sum(
     )
 
 
-def vocab_coverage(
-    docs: DataFrame, thresholds: tuple[int, ...] = (50, 90, 99)
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame) -> DataFrame:
     """[threshold_pct, vocab_k, tokens_covered]: smallest vocabulary
     (by corpus frequency, ties broken by word) covering each percentage
     of all token occurrences — the tokenizer-sizing curve.
@@ -234,7 +222,7 @@ def vocab_coverage(
         counts, "cnt", [F.desc("cnt"), F.asc("word")]
     )
     thr = spark.range(1).select(
-        F.explode(F.array(*[F.lit(int(t)) for t in thresholds])).alias(
+        F.explode(F.array(*[F.lit(int(t)) for t in (50, 90, 99)])).alias(
             "threshold_pct"
         )
     )

@@ -22,36 +22,23 @@ from amorphous_mapreduce_spark.operators.graph import dedup_clusters
 from amorphous_mapreduce_spark.operators.text_analysis import doc_stats
 
 
-def curate_corpus(
-    docs: DataFrame,
-    min_quality: float = 0.2,
-    num_hashes: int = 16,
-    band_bits: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def curate_corpus(docs: DataFrame, min_quality: float = 0.2) -> DataFrame:
     """Curated corpus: [doc_id, lang, quality] of surviving documents.
 
     Survivors are docs that (1) score >= min_quality, (2) are the
     smallest-id doc of their exact-content group, (3) are the canonical
     keeper of their near-dup cluster.
     """
-    stats = doc_stats(docs, id_col=id_col, text_col=text_col).select(
-        F.col("id").alias(id_col), "quality"
-    )
+    stats = doc_stats(docs).select(F.col("id").alias("doc_id"), "quality")
     # Persisted: both the exact-dedup branch and q2's probe side re-read
     # this (tokenize + agg + join) lineage; without the cache the whole
     # quality stage runs twice.
     qdocs = docs.join(
-        stats.filter(F.col("quality") >= min_quality), id_col
+        stats.filter(F.col("quality") >= min_quality), "doc_id"
     ).persist()
-    exact_keepers = exact_dedup(qdocs, id_col=id_col, text_col=text_col).select(
-        F.col("keeper_id").alias(id_col)
-    )
-    q2 = qdocs.join(exact_keepers, id_col).persist()
-    pairs = minhash_lsh_pairs(
-        q2, num_hashes=num_hashes, band_bits=band_bits, id_col=id_col, text_col=text_col
-    )
-    clusters = dedup_clusters(q2, pairs, id_col=id_col)
-    keepers = clusters.filter(F.col("is_keeper")).select(F.col("id").alias(id_col))
-    return q2.join(keepers, id_col).select(id_col, "lang", "quality")
+    exact_keepers = exact_dedup(qdocs).select(F.col("keeper_id").alias("doc_id"))
+    q2 = qdocs.join(exact_keepers, "doc_id").persist()
+    pairs = minhash_lsh_pairs(q2, num_hashes=16, band_bits=4)
+    clusters = dedup_clusters(q2, pairs)
+    keepers = clusters.filter(F.col("is_keeper")).select(F.col("id").alias("doc_id"))
+    return q2.join(keepers, "doc_id").select("doc_id", "lang", "quality")

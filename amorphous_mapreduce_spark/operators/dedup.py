@@ -33,18 +33,14 @@ from amorphous_mapreduce_spark.functions.hashing import hex_hash64
 MINHASH_P = 2_147_483_647
 
 
-def normalize_text(col: Column | str, lower: bool = True) -> Column:
-    """Whitespace-collapse + trim (+ lowercase): the canonical form every
+def normalize_text(col: Column | str) -> Column:
+    """Lowercase + whitespace-collapse + trim: the canonical form every
     dedup variant hashes. Mirrors W4/W5 normalisation semantics."""
-    c = F.col(col) if isinstance(col, str) else col
-    if lower:
-        c = F.lower(c)
+    c = F.lower(F.col(col) if isinstance(col, str) else col)
     return F.regexp_replace(F.trim(c), r"\s+", " ")
 
 
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups: [content_hash, keeper_id, n_copies].
 
     groupBy(md5(normalised text)) with min(id) as the canonical survivor —
@@ -52,18 +48,19 @@ def exact_dedup(
     """
     return (
         docs.select(
-            F.col(id_col), F.md5(normalize_text(text_col)).alias("content_hash")
+            F.col("doc_id"), F.md5(normalize_text("text")).alias("content_hash")
         )
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             F.count("*").alias("n_copies"),
         )
     )
 
 
-def tokenized(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """[id, pos, word]: position-indexed tokens of the normalised text.
+def tokenized(docs: DataFrame) -> DataFrame:
+    """[id, pos, word]: position-indexed tokens of the normalised ``text``
+    of each ``doc_id``.
 
     Docs are spread across the cluster BEFORE the explode: a small corpus
     often scans as one partition, and everything downstream (split,
@@ -74,8 +71,8 @@ def tokenized(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return (
         docs.repartition(nparts)
         .select(
-            F.col(id_col).alias("id"),
-            F.posexplode(F.split(normalize_text(text_col), " ")).alias("pos", "word"),
+            F.col("doc_id").alias("id"),
+            F.posexplode(F.split(normalize_text("text"), " ")).alias("pos", "word"),
         )
         .filter(F.length("word") > 0)
     )
@@ -119,12 +116,7 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def _gram_hashes(
-    docs: DataFrame,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def _gram_hashes(docs: DataFrame, shingle_size: int = 3) -> DataFrame:
     """[id, sh] — one row per gram OCCURRENCE (non-distinct).
 
     Internal fast path: consumers whose aggregate is duplicate-invariant
@@ -137,7 +129,7 @@ def _gram_hashes(
         # is a separate projection so the tokenise runs ONCE per row (see
         # shingle_grams docstring).
         docs.repartition(nparts)
-        .select(F.col(id_col).alias("id"), word_array(text_col).alias("_ws"))
+        .select(F.col("doc_id").alias("id"), word_array("text").alias("_ws"))
         .select(
             "id",
             F.explode(shingle_grams(F.col("_ws"), shingle_size)).alias("gram"),
@@ -146,28 +138,17 @@ def _gram_hashes(
     )
 
 
-def shingles(
-    docs: DataFrame,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def shingles(docs: DataFrame, shingle_size: int = 3) -> DataFrame:
     """Distinct word-``shingle_size``-gram hashes per doc: [id, sh].
 
     Shingle text is the space-joined n-gram; hash is the portable 60-bit
     MD5-derived integer. Grams come from per-row array math
     (:func:`shingle_grams`); only the distinct shuffles.
     """
-    return _gram_hashes(docs, shingle_size, id_col, text_col).distinct()
+    return _gram_hashes(docs, shingle_size).distinct()
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int = 16) -> DataFrame:
     """MinHash signatures: [id, hid, mh] — min over shingles per hash fn.
 
     All ``num_hashes`` minima ride ONE aggregation pass as separate agg
@@ -176,7 +157,7 @@ def minhash_signatures(
     large corpus. The wide row then unpivots via stack() (no shuffle).
     """
     stack_args = ", ".join(f"{i}L, mh{i}" for i in range(num_hashes))
-    return _minhash_wide(docs, num_hashes, shingle_size, id_col, text_col).select(
+    return _minhash_wide(docs, num_hashes).select(
         "id", F.expr(f"stack({num_hashes}, {stack_args}) AS (hid, mh)")
     )
 
@@ -184,9 +165,6 @@ def minhash_signatures(
 def _minhash_wide(
     docs: DataFrame,
     num_hashes: int = 16,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """Wide minhash signatures [id, mh0..mh{n-1}] in ONE shuffle.
@@ -198,9 +176,7 @@ def _minhash_wide(
     (e.g. the Fellegi-Sunter frames) tokenize the corpus once, not
     twice (round 9, guide §2.4/§5).
     """
-    sh = grams if grams is not None else _gram_hashes(
-        docs, shingle_size, id_col, text_col
-    )
+    sh = grams if grams is not None else _gram_hashes(docs)
 
     def perm(i: int):
         return ((F.col("sh") % MINHASH_P) * (2 * i + 1) + i * 12345) % MINHASH_P
@@ -231,9 +207,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     num_hashes: int = 16,
     band_bits: int = 4,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct near-dup candidate pairs [qid, nid] (qid < nid) that agree
@@ -244,7 +217,7 @@ def minhash_lsh_pairs(
     # Band signatures straight off the WIDE aggregate (per-row concat +
     # explode — no long-format groupBy shuffle); identical [id, band, sig]
     # rows to minhash_band_buckets(minhash_signatures(...)).
-    wide = _minhash_wide(docs, num_hashes, shingle_size, id_col, text_col, grams)
+    wide = _minhash_wide(docs, num_hashes, grams)
     nbands = (num_hashes + band_bits - 1) // band_bits
     band_structs = [
         F.struct(
@@ -279,9 +252,6 @@ def minhash_lsh_pairs(
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.0,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over pairs sharing >= 1 shingle:
@@ -296,7 +266,7 @@ def jaccard_pairs(
     makes the self-join quadratic on that key — a shingle with df=d
     produces d²/2 candidate rows.
     """
-    sh = shingles(docs, shingle_size, id_col, text_col)
+    sh = shingles(docs)
     if max_df is not None:
         rare = (
             sh.groupBy("sh")
@@ -330,9 +300,6 @@ def jaccard_pairs(
 def containment_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int | None = None,
 ) -> DataFrame:
     """Asymmetric shingle containment |A∩B| / |A| >= threshold:
@@ -354,7 +321,7 @@ def containment_pairs(
     AND intersections so the score stays exact over the capped
     vocabulary. The only double is one division of two int64s.
     """
-    sh = shingles(docs, shingle_size, id_col, text_col)
+    sh = shingles(docs)
     if max_df is not None:
         rare = (
             sh.groupBy("sh")
@@ -385,21 +352,15 @@ def containment_pairs(
     )
 
 
-def jaccard_prefix_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact Jaccard >= threshold pairs via LOSSLESS prefix filtering
-    (the AllPairs/PPJoin candidate scheme): [qid, nid, inter, union_sz,
+def jaccard_prefix_pairs(docs: DataFrame) -> DataFrame:
+    """Exact Jaccard >= 0.5 pairs via LOSSLESS prefix filtering (the
+    AllPairs/PPJoin candidate scheme): [qid, nid, inter, union_sz,
     jaccard].
 
     Global shingle order = (document frequency asc, shingle asc) — rare
     shingles first. Each doc keeps only its first
-    ``L = sz - ceil(threshold*sz) + 1`` shingles under that order; by the
-    pigeonhole prefix property, two sets with Jaccard >= threshold MUST
+    ``L = sz - ceil(0.5*sz) + 1`` shingles under that order; by the
+    pigeonhole prefix property, two sets with Jaccard >= 0.5 MUST
     share at least one prefix shingle, so the equi-join on prefix
     shingles misses no qualifying pair. Candidates are then verified with
     an exact intersection count, making the result identical to the
@@ -413,7 +374,7 @@ def jaccard_prefix_pairs(
     by doc id (no global rank materialisation: the order (df, sh) is
     used directly as a sort key inside each doc's partition).
     """
-    sh = shingles(docs, shingle_size, id_col, text_col)
+    sh = shingles(docs)
     # Read by the df count, the prefix build, and both verify sides —
     # persist so tokenize+shingle runs once (self-join lineage gotcha).
     sh = sh.persist()
@@ -431,7 +392,7 @@ def jaccard_prefix_pairs(
         )
     )
     prefix = ranked.filter(
-        F.col("_r") <= F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
+        F.col("_r") <= F.col("_sz") - F.ceil(F.lit(0.5) * F.col("_sz")) + 1
     ).select("id", "sh")
     cand = (
         prefix.select(F.col("id").alias("qid"), "sh")
@@ -452,55 +413,41 @@ def jaccard_prefix_pairs(
         .join(sizes.select(F.col("id").alias("nid"), F.col("sz").alias("nsz")), "nid")
         .withColumn("union_sz", F.col("qsz") + F.col("nsz") - F.col("inter"))
         .withColumn("jaccard", F.col("inter") / F.col("union_sz"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
         .select("qid", "nid", "inter", "union_sz", "jaccard")
     )
 
 
-def simhash(
-    docs: DataFrame,
-    bits: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """64-bit SimHash fingerprints: [id, simhash].
+def simhash(docs: DataFrame) -> DataFrame:
+    """60-bit SimHash fingerprints (hex_hash64 yields 60 usable bits):
+    [id, simhash].
 
     Component b of the fingerprint is the sign of Σ_tokens (±1), where the
     ±1 is bit b of the token's portable hash. Token multiplicity counts
     (bag semantics), matching the classic Charikar construction.
     """
-    if bits > 60:
-        bits = 60  # hex_hash64 yields 60 usable bits
     # tokenized() already spreads docs across partitions, so the per-token
     # hash below is computed in parallel.
-    toks = tokenized(docs, id_col, text_col).select(
-        "id", hex_hash64("word").alias("th")
-    )
-    # One aggregation pass with `bits` sum expressions — NOT a token×bits
+    toks = tokenized(docs).select("id", hex_hash64("word").alias("th"))
+    # One aggregation pass with 60 sum expressions — NOT a token×60
     # row explosion (a 60x shuffle blowup on large corpora). All 60 sums
     # ride the same partial+final HashAggregate.
     bitsums = toks.groupBy("id").agg(
         *[
             F.sum(F.expr(f"(shiftright(th, {b}) & 1) * 2 - 1")).alias(f"s{b}")
-            for b in range(bits)
+            for b in range(60)
         ]
     )
     fingerprint = sum(
         F.when(F.col(f"s{b}") >= 0, F.lit(1 << b).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
-        for b in range(bits)
+        for b in range(60)
     )
     return bitsums.select("id", fingerprint.alias("simhash"))
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    max_hamming: int = 12,
-    bits: int = 60,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 12) -> DataFrame:
     """Pairs with Hamming(simhash) <= max_hamming: [qid, nid, hamming].
 
     Candidates come from the exact pigeonhole argument: split the
@@ -514,10 +461,10 @@ def simhash_near_pairs(
     # Persist: both join branches read the fingerprints — without this the
     # whole simhash pipeline (tokenise + 60-bit expansion + two aggs) runs
     # twice. One row per doc: negligible memory at any corpus size.
-    fp = simhash(docs, bits, id_col, text_col).persist()
+    fp = simhash(docs).persist()
     ham = F.bit_count(F.col("qh").bitwiseXOR(F.col("nh")))
     nbands = max_hamming + 1
-    base, extra = divmod(bits, nbands)
+    base, extra = divmod(60, nbands)
     # Band b covers [off, off+w): widths base(+1 for the first `extra`).
     bands = []
     off = 0
@@ -582,9 +529,6 @@ def simhash_capped_topm(
     max_hamming: int = 12,
     m: int = 3,
     cap: int = 8,
-    bits: int = 60,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-doc top-m approximate near-neighbors by SimHash Hamming
     distance: [doc_id, neighbor_id, hamming, rank].
@@ -608,8 +552,8 @@ def simhash_capped_topm(
     both break ties on id, so the result is a pure function of the
     corpus on both engines.
     """
-    fp = simhash(docs, bits, id_col, text_col)
-    spec = simhash_band_spec(min(bits, 60), max_hamming + 1)
+    fp = simhash(docs)
+    spec = simhash_band_spec(60, max_hamming + 1)
     band_arr = F.array(
         *[
             F.struct(

@@ -27,25 +27,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_DIST = 2  # edit budget
+Q = 2  # q-gram length
 
-def fuzzy_pairs(
-    df: DataFrame,
-    value_col: str,
-    max_dist: int = 2,
-    q: int = 2,
-) -> DataFrame:
-    """Distinct value pairs within ``max_dist`` edits: [a, b, dist]
+
+def fuzzy_pairs(df: DataFrame, value_col: str) -> DataFrame:
+    """Distinct value pairs within MAX_DIST edits: [a, b, dist]
     with a < b (each unordered pair once)."""
     names = df.select(F.col(value_col).alias("v")).distinct().persist()
-    min_safe = q * (max_dist + 1) + 1
+    min_safe = Q * (MAX_DIST + 1) + 1
 
     grams = names.filter(F.length("v") >= min_safe).select(
         "v",
         F.explode(
             F.array_distinct(
                 F.expr(
-                    f"transform(sequence(1, length(v) - {q} + 1),"
-                    f" i -> substring(v, i, {q}))"
+                    f"transform(sequence(1, length(v) - {Q} + 1),"
+                    f" i -> substring(v, i, {Q}))"
                 )
             )
         ).alias("g"),
@@ -72,8 +70,8 @@ def fuzzy_pairs(
     cand = long_cand.unionByName(short_cand).distinct()
     return (
         cand.filter(
-            F.abs(F.length("a") - F.length("b")) <= max_dist
+            F.abs(F.length("a") - F.length("b")) <= MAX_DIST
         )
         .select("a", "b", F.levenshtein("a", "b").alias("dist"))
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= MAX_DIST)
     )

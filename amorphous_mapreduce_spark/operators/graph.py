@@ -15,40 +15,57 @@ driver-side data is the single convergence counter.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# The k-core and k-truss query specs; their SQL oracles unroll the same
+# values.
+KCORE_K = 2
+KTRUSS_K = 3
+KTRUSS_ROUNDS = 3
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    src: str = "qid",
-    dst: str = "nid",
-    max_iter: int = 20,
-) -> DataFrame:
+
+def symmetric_edges(pairs: DataFrame) -> DataFrame:
+    """[a, b]: each (qid, nid) pair as an edge in both directions, once."""
+    return (
+        pairs.select(F.col("qid").alias("a"), F.col("nid").alias("b"))
+        .unionByName(pairs.select(F.col("nid").alias("a"), F.col("qid").alias("b")))
+        .distinct()
+    )
+
+
+@contextmanager
+def size_based_coalescing(spark: SparkSession):
+    """Scope AQE's size-based partition coalescing over a driver loop.
+
+    A loop's joins and aggregates run over kilobytes of edge or label
+    state per round. AQE's parallelism-first coalescing keeps ~2x-cores
+    partitions even then, so every round pays hundreds of empty-task
+    overheads. The caller's setting (parallelism-first suits pandas-UDF
+    stages) is restored on exit.
+    """
+    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    old = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def connected_components(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
     """[id, component] — component = min node id reachable from id.
 
     ``edges`` is undirected input (each pair once is fine); ``nodes``
     optionally supplies isolated vertices (they become singletons).
     """
-    # The loop's joins/aggs are narrow JVM row work over the (small) edge
-    # set; AQE's parallelism-first coalescing keeps ~2x-cores partitions
-    # even when a round's data is kilobytes, so every round pays hundreds
-    # of empty-task overheads. Size-based coalescing is the right policy
-    # for the whole loop INCLUDING the initial label checkpoint (set
-    # before it, so init materialises a handful of right-sized partitions
-    # instead of shuffle.partitions mostly-empty ones) — scoped +
-    # restored so the caller's session policy (parallelism-first suits
-    # pandas-UDF stages) is untouched.
-    spark = edges.sparkSession
-    pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    pf_old = spark.conf.get(pf_key, "true")
-    spark.conf.set(pf_key, "false")
-    try:
-        sym = edges.select(
-            F.col(src).alias("a"), F.col(dst).alias("b")
-        ).unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        sym = sym.distinct().persist()
+    # Size-based coalescing covers the whole loop INCLUDING the initial
+    # label checkpoint, so init materialises a handful of right-sized
+    # partitions instead of shuffle.partitions mostly-empty ones.
+    with size_based_coalescing(edges.sparkSession):
+        sym = symmetric_edges(edges).persist()
 
         # Iterate ONLY over edge-incident nodes: isolated vertices can
         # never change label, and in a near-dup graph they are the
@@ -70,9 +87,7 @@ def connected_components(
             .select(F.col("a").alias("id"), "component")
             .localCheckpoint(eager=False)
         )
-        labels = _cc_loop(sym, labels, max_iter)
-    finally:
-        spark.conf.set(pf_key, pf_old)
+        labels = _cc_loop(sym, labels)
     sym.unpersist()
     if nodes is not None:
         singletons = (
@@ -85,17 +100,15 @@ def connected_components(
     return labels
 
 
-def _cc_loop(
-    sym: DataFrame, labels: DataFrame, max_iter: int, pj_after: int = 4
-) -> DataFrame:
-    """Min-label propagation until no label changes; pointer jumping is
-    switched on only from round ``pj_after`` onward.
+def _cc_loop(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """Min-label propagation until no label changes (at most 20 rounds);
+    pointer jumping is switched on only from round 4 onward.
 
     Near-dup graphs are almost always shallow (pairs/triangles/small
     stars converge in 2-3 min-label rounds), where the pointer-jump join
     is a pure extra cost — measured ~35% of loop wall-clock at sf0.1 for
     zero saved rounds. A genuinely deep component (long chains) makes
-    rounds start exceeding ``pj_after``, and from there label distances
+    rounds start exceeding 4, and from there label distances
     halve per round (O(log diameter) total) — adaptive: cheap rounds in
     the common case, the asymptotic guarantee in the adversarial one.
 
@@ -107,11 +120,9 @@ def _cc_loop(
     ``_old`` carry column, no comparison join. The checkpoint is lazy
     (eager=False) so the probe's 1-row aggregate materialises it:
     ONE job per round instead of two. ``labels`` enters callers'
-    round-0-fused aggregate; the loop here runs rounds 1..max_iter-1
+    round-0-fused aggregate; the loop here runs rounds 1..19
     (same total propagation count as the init-then-propagate form).
     """
-    spark = sym.sparkSession
-
     def _label_sum(frame: DataFrame):
         # decimal(38,0): at 1e12 nodes x 1e12 max id the exact sum needs
         # ~1e24 — far past int64, comfortably inside decimal(38,0)
@@ -120,7 +131,7 @@ def _cc_loop(
         ).collect()[0]["s"]
 
     cur_sum = _label_sum(labels)
-    for it in range(1, max_iter):
+    for it in range(1, 20):
         # adopt the minimum label among self and neighbours: neighbour
         # messages unioned with the current labels, one grouped MIN
         msg = sym.join(labels, sym.b == labels.id).select(
@@ -133,7 +144,7 @@ def _cc_loop(
         )
         # pointer jumping: follow component -> its component (labels
         # halve the remaining distance each round)
-        if it >= pj_after:
+        if it >= 4:
             parents = stepped.select(
                 F.col("id").alias("_pid"), F.col("component").alias("_pcomp")
             )
@@ -155,15 +166,11 @@ def _cc_loop(
     return labels
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """[id, cluster, is_keeper] — near-dup clusters over candidate pairs;
     the keeper is the smallest doc id in each cluster (singletons keep
     themselves)."""
-    nodes = docs.select(F.col(id_col).alias("id"))
+    nodes = docs.select(F.col("doc_id").alias("id"))
     cc = connected_components(pairs, nodes=nodes)
     return cc.select(
         "id",
@@ -172,20 +179,13 @@ def dedup_clusters(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 3,
-    damping_pct: int = 85,
-    scale: int = 10**12,
-    src: str = "qid",
-    dst: str = "nid",
-) -> DataFrame:
+def pagerank(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """Fixed-point PageRank over an undirected pair graph: [id, deg,
     rank_fp] after ``n_iter`` unrolled power iterations.
 
-    Ranks live in integer fixed-point units (``scale`` = 1.0), and every
+    Ranks live in integer fixed-point units (10^12 = 1.0), and every
     step — the 1/N init, the per-edge contribution r div deg, the
-    damping (d%) and teleport ((100-d)%/N) — is integer arithmetic, so
+    damping (85%) and teleport (15%/N) — is integer arithmetic, so
     sums are order-insensitive and both engines reproduce the exact same
     integers (the kmeans quantisation discipline applied to graph
     ranking; all operands non-negative, so Spark ``div`` and DuckDB
@@ -198,27 +198,14 @@ def pagerank(
     edges, the same shuffle shape as connected_components without the
     driver loop.
     """
-    # Same loop policy as connected_components: rank/edge frames are
-    # kilobytes per round, so size-based AQE coalescing (scoped +
-    # restored) keeps each of the ~4 stages/iteration at a handful of
-    # tasks instead of shuffle.partitions mostly-empty ones. The state is
-    # ALSO materialised per iteration (localCheckpoint): each iteration
-    # reads the previous state twice (contribution + carry-forward), so
-    # an unmaterialised unrolled lineage re-executes the whole edge
-    # pipeline 2^t times.
-    spark = edges.sparkSession
-    pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    pf_old = spark.conf.get(pf_key, "true")
-    spark.conf.set(pf_key, "false")
-    try:
-        sym = (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .unionByName(
-                edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-            )
-            .distinct()
-            .persist()
-        )
+    # Same loop policy as connected_components: size-based coalescing
+    # keeps each of the ~4 stages/iteration at a handful of tasks. The
+    # state is ALSO materialised per iteration (localCheckpoint): each
+    # iteration reads the previous state twice (contribution +
+    # carry-forward), so an unmaterialised unrolled lineage re-executes
+    # the whole edge pipeline 2^t times.
+    with size_based_coalescing(edges.sparkSession):
+        sym = symmetric_edges(edges).persist()
         deg = sym.groupBy(F.col("a").alias("id")).agg(F.count("*").alias("deg"))
         nn = deg.agg(F.count("*").alias("_n"))
         # [id, deg, _n, rank_fp] — _n rides along so every later
@@ -226,13 +213,11 @@ def pagerank(
         state = (
             deg.crossJoin(F.broadcast(nn))
             .select(
-                "id", "deg", "_n", F.expr(f"{scale} div _n").alias("rank_fp")
+                "id", "deg", "_n", F.expr("1000000000000 div _n").alias("rank_fp")
             )
             .localCheckpoint()
         )
-        teleport = (
-            f"(({100 - damping_pct} * CAST({scale} AS BIGINT)) div (100 * _n))"
-        )
+        teleport = "((15 * CAST(1000000000000 AS BIGINT)) div (100 * _n))"
         for _ in range(n_iter):
             contrib = (
                 sym.join(state, sym.a == state.id)
@@ -247,24 +232,16 @@ def pagerank(
                     "deg",
                     "_n",
                     F.expr(
-                        f"{teleport} + ({damping_pct} * coalesce(_s, 0L)) div 100"
+                        f"{teleport} + (85 * coalesce(_s, 0L)) div 100"
                     ).alias("rank_fp"),
                 )
                 .localCheckpoint()
             )
         sym.unpersist()
-    finally:
-        spark.conf.set(pf_key, pf_old)
     return state.select("id", "deg", "rank_fp")
 
 
-def bfs_hops(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int = 6,
-    src: str = "qid",
-    dst: str = "nid",
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 6) -> DataFrame:
     """[id, hop] — minimum hop distance from the seed set, capped at
     ``max_hops`` (multi-source BFS by frontier expansion).
 
@@ -276,19 +253,8 @@ def bfs_hops(
     connected_components). Seeds not present in the graph remain
     hop-0 singletons.
     """
-    spark = edges.sparkSession
-    pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    pf_old = spark.conf.get(pf_key, "true")
-    spark.conf.set(pf_key, "false")
-    try:
-        sym = (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .unionByName(
-                edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-            )
-            .distinct()
-            .persist()
-        )
+    with size_based_coalescing(edges.sparkSession):
+        sym = symmetric_edges(edges).persist()
         visited = (
             seeds.select(F.col("id"))
             .distinct()
@@ -309,21 +275,14 @@ def bfs_hops(
                 break
             visited = visited.unionByName(nxt).localCheckpoint()
             frontier = nxt.select("id")
-    finally:
-        spark.conf.set(pf_key, pf_old)
     sym.unpersist()
     return visited
 
 
-def kcore(
-    edges: DataFrame,
-    k: int = 2,
-    n_rounds: int = 8,
-    src: str = "qid",
-    dst: str = "nid",
-) -> DataFrame:
+def kcore(edges: DataFrame, n_rounds: int = 8) -> DataFrame:
     """[id, core_deg]: nodes surviving ``n_rounds`` of k-core peeling
-    (drop nodes with degree < k, cascade), with their in-core degree.
+    (drop nodes with degree < KCORE_K, cascade), with their in-core
+    degree.
 
     The round count is part of the query spec so the SQL oracle can
     unroll the identical number of rounds; when peeling converges
@@ -334,19 +293,14 @@ def kcore(
     peel is the standard distributed k-core: rounds needed equal the
     peel depth, each a linear pass.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = symmetric_edges(edges).localCheckpoint()
     cur = sym
     prev_n = cur.count()
     for _ in range(n_rounds):
         alive = (
             cur.groupBy("a")
             .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
+            .filter(F.col("deg") >= KCORE_K)
             .select("a")
         )
         cur = (
@@ -367,12 +321,7 @@ def kcore(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    n_rounds: int = 4,
-    src: str = "qid",
-    dst: str = "nid",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_rounds: int = 4) -> DataFrame:
     """[id, community]: synchronous label propagation (LPA) community
     detection — every node adopts its neighbourhood's modal label each
     round, ties broken by the smallest label, labels initialised to the
@@ -394,12 +343,7 @@ def label_propagation(
     """
     from pyspark.sql import Window as W
 
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = symmetric_edges(edges).localCheckpoint()
     labels = sym.select(F.col("a").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )
@@ -417,16 +361,10 @@ def label_propagation(
     return labels.withColumnRenamed("label", "community")
 
 
-def ktruss(
-    edges: DataFrame,
-    k: int = 3,
-    n_rounds: int = 4,
-    src: str = "qid",
-    dst: str = "nid",
-) -> DataFrame:
+def ktruss(edges: DataFrame) -> DataFrame:
     """[id, truss_deg]: nodes of the k-truss (every edge sits in >= k-2
-    triangles among surviving edges), peeled for ``n_rounds``, with the
-    node's surviving-edge count.
+    triangles among surviving edges, k = KTRUSS_K), peeled for
+    KTRUSS_ROUNDS rounds, with the node's surviving-edge count.
 
     The edge-level sibling of :func:`kcore`: each round recomputes
     per-edge triangle support with one wedge join (edges joined to
@@ -443,15 +381,10 @@ def ktruss(
     the LSH-bucketed edge list — linear in edges x avg-degree per
     round, never all-pairs.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = symmetric_edges(edges).localCheckpoint()
     cur = sym
     prev_n = cur.count()
-    for _ in range(n_rounds):
+    for _ in range(KTRUSS_ROUNDS):
         x = cur.select(F.col("a").alias("xa"), F.col("b").alias("cn"))
         y = cur.select(F.col("a").alias("ya"), F.col("b").alias("cn2"))
         sup = (
@@ -465,7 +398,7 @@ def ktruss(
             .agg(F.count("cn2").alias("s"))
         )
         cur = (
-            sup.filter(F.col("s") >= k - 2).select("a", "b").localCheckpoint()
+            sup.filter(F.col("s") >= KTRUSS_K - 2).select("a", "b").localCheckpoint()
         )
         n = cur.count()
         if n == prev_n:

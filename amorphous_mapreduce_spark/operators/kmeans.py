@@ -77,8 +77,6 @@ def kmeans_fit(
     emb: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_sample: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Run ``iters`` Lloyd iterations; return (quantized, assigned,
@@ -96,7 +94,7 @@ def kmeans_fit(
     size the sample is the whole corpus and results are identical to
     unsampled training. The oracle replays the same ORDER BY hash LIMIT
     n sample, so sampled training stays hash-checkable."""
-    q = _quantize(emb, id_col, vec_col).persist()
+    q = _quantize(emb, "vec_id", "embedding").persist()
     if train_sample is None:
         train = q
     else:
@@ -221,12 +219,10 @@ def kmeans_assign(
     emb: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_sample: int | None = None,
 ) -> DataFrame:
     """Cluster assignments after ``iters`` Lloyd iterations: [id, cell]."""
-    _, assigned, _ = kmeans_fit(emb, k, iters, id_col, vec_col, train_sample)
+    _, assigned, _ = kmeans_fit(emb, k, iters, train_sample=train_sample)
     return assigned.select("id", "cell")
 
 

@@ -170,7 +170,6 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes, dict], "object"] = default_decoder,
-    feature_dim: int = 64,
 ) -> DataFrame:
     """Decode + feature-extract: [media_id, feature: array<float>].
 
@@ -187,7 +186,7 @@ def extract_features(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             feats = [
-                [float(x) for x in decoder(content, meta)][:feature_dim]
+                [float(x) for x in decoder(content, meta)][:64]
                 for content, meta in zip(pdf["content"], pdf["meta"])
             ]
             yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats})

@@ -36,8 +36,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 32,
     stride: int = 24,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Overlapping token windows: [id, chunk_id, n_tokens, chunk_text].
 
@@ -49,7 +47,7 @@ def chunk_documents(
     magnitude sit far from integer boundaries except when exact, so the
     result is engine-stable.
     """
-    toks = tokenized(docs, id_col, text_col)
+    toks = tokenized(docs)
     lo = F.greatest(
         F.lit(0),
         F.ceil((F.col("pos") - F.lit(chunk_size) + 1) / F.lit(float(stride))),
@@ -73,13 +71,7 @@ def chunk_documents(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    ctx_len: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stratum_col: str = "lang",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, ctx_len: int = 512) -> DataFrame:
     """Deterministic sequence packing: [lang, id, n_tokens, tok_offset, bin].
 
     The concatenate-and-cut packing a pretraining loader uses: within
@@ -90,11 +82,11 @@ def pack_sequences(
     layout is bit-identical on any engine and any partitioning.
     """
     ntok = (
-        tokenized(docs, id_col, text_col)
+        tokenized(docs)
         .groupBy("id")
         .agg(F.count("*").alias("n_tokens"))
     )
-    strata = docs.select(F.col(id_col).alias("id"), F.col(stratum_col).alias("lang"))
+    strata = docs.select(F.col("doc_id").alias("id"), "lang")
     w = (
         Window.partitionBy("lang")
         .orderBy("id")
@@ -108,12 +100,7 @@ def pack_sequences(
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    rate_pct: int = 10,
-    id_col: str = "doc_id",
-    stratum_col: str = "lang",
-) -> DataFrame:
+def stratified_sample(docs: DataFrame, rate_pct: int = 10) -> DataFrame:
     """Deterministic ~rate_pct% hash sample per stratum: [id, lang].
 
     Membership = md5-derived hash of (stratum, id) mod 100 < rate — a
@@ -122,40 +109,30 @@ def stratified_sample(
     the only sane sampling primitive; fraction-based `sample()` is
     partition-order dependent.
     """
-    key = F.concat_ws(":", F.col(stratum_col), F.col(id_col).cast("string"))
+    key = F.concat_ws(":", F.col("lang"), F.col("doc_id").cast("string"))
     return docs.filter(F.pmod(hex_hash64(key), F.lit(100)) < rate_pct).select(
-        F.col(id_col).alias("id"), F.col(stratum_col).alias("lang")
+        F.col("doc_id").alias("id"), "lang"
     )
 
 
-def stratified_topn(
-    docs: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    stratum_col: str = "lang",
-) -> DataFrame:
+def stratified_topn(docs: DataFrame, n: int = 5) -> DataFrame:
     """Exactly-n-per-stratum deterministic sample: [id, lang, rnk].
 
     Smallest-hash-first with the id as total-order tie-break; one
     shuffle on the stratum key + per-partition top-n (Window row_number
     — bounded strata cardinality makes the window safe)."""
-    key = F.concat_ws(":", F.col(stratum_col), F.col(id_col).cast("string"))
-    w = Window.partitionBy(stratum_col).orderBy(
-        hex_hash64(key).asc(), F.col(id_col).asc()
+    key = F.concat_ws(":", F.col("lang"), F.col("doc_id").cast("string"))
+    w = Window.partitionBy("lang").orderBy(
+        hex_hash64(key).asc(), F.col("doc_id").asc()
     )
     return (
         docs.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= n)
-        .select(F.col(id_col).alias("id"), F.col(stratum_col).alias("lang"), "rnk")
+        .select(F.col("doc_id").alias("id"), "lang", "rnk")
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k terms per document by TF-IDF: [id, word, tf, df, score, rnk].
 
     IDF uses the rational form N/df (not log(N/df)): libm log differs in
@@ -164,10 +141,10 @@ def tfidf_top_terms(
     log form for per-document top-k. N is a 1-row scalar aggregate
     broadcast back (no global window).
     """
-    toks = tokenized(docs, id_col, text_col)
+    toks = tokenized(docs)
     tf = toks.groupBy("id", "word").agg(F.count("*").alias("tf")).persist()
     df_ = tf.groupBy("word").agg(F.count("*").alias("df"))
-    n_docs = docs.agg(F.countDistinct(id_col).alias("_n"))
+    n_docs = docs.agg(F.countDistinct("doc_id").alias("_n"))
     scored = (
         tf.join(df_, "word")
         .crossJoin(F.broadcast(n_docs))
@@ -188,14 +165,7 @@ def tfidf_top_terms(
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 
-def quality_rules(
-    docs: DataFrame,
-    min_words: int = 30,
-    max_top_bigram_frac: float = 0.1,
-    min_uniq_frac: float = 0.3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def quality_rules(docs: DataFrame) -> DataFrame:
     """Gopher-style per-document quality rules: [id, n_words, mean_wlen,
     uniq_frac, top_bigram_frac, stop_frac, rules_pass].
 
@@ -213,7 +183,7 @@ def quality_rules(
     a bigram string determines its first word, per-(id, bg) groups carry
     the word-level sums losslessly.
     """
-    toks = tokenized(docs, id_col, text_col)
+    toks = tokenized(docs)
     w = Window.partitionBy("id").orderBy("pos")
     toksw = toks.select(
         "id",
@@ -252,22 +222,14 @@ def quality_rules(
         top_bg_frac.alias("top_bigram_frac"),
         stop_frac.alias("stop_frac"),
         (
-            (F.col("n_words") >= min_words)
-            & (top_bg_frac <= max_top_bigram_frac)
-            & (uniq_frac >= min_uniq_frac)
+            (F.col("n_words") >= 30)
+            & (top_bg_frac <= 0.1)
+            & (uniq_frac >= 0.3)
         ).alias("rules_pass"),
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    eval_source: str,
-    min_shared: int = 5,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, eval_source: str, min_shared: int = 5) -> DataFrame:
     """Train/eval contamination flags: [id, n_shared] of training docs
     sharing >= min_shared distinct shingles with the eval set.
 
@@ -284,21 +246,11 @@ def decontaminate(
     fan-out join).
     """
     eval_sh = (
-        shingles(
-            docs.filter(F.col(source_col) == eval_source),
-            shingle_size=shingle_size,
-            id_col=id_col,
-            text_col=text_col,
-        )
+        shingles(docs.filter(F.col("source") == eval_source))
         .select("sh")
         .distinct()
     )
-    train_sh = shingles(
-        docs.filter(F.col(source_col) != eval_source),
-        shingle_size=shingle_size,
-        id_col=id_col,
-        text_col=text_col,
-    )
+    train_sh = shingles(docs.filter(F.col("source") != eval_source))
     return (
         train_sh.join(F.broadcast(eval_sh), "sh")
         .groupBy("id")
@@ -307,12 +259,7 @@ def decontaminate(
     )
 
 
-def source_mixing_weights(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def source_mixing_weights(docs: DataFrame) -> DataFrame:
     """Data-mixing stats per source: [source, n_docs, n_tokens,
     tok_share, w_sqrt].
 
@@ -324,8 +271,8 @@ def source_mixing_weights(
     accumulation order could differ. The corpus total is a 1-row scalar
     aggregate broadcast back (no global window).
     """
-    toks = tokenized(docs, id_col, text_col)
-    src = docs.select(F.col(id_col).alias("id"), F.col(source_col).alias("source"))
+    toks = tokenized(docs)
+    src = docs.select(F.col("doc_id").alias("id"), "source")
     per_src = (
         toks.join(F.broadcast(src), "id")
         .groupBy("source")
@@ -346,12 +293,7 @@ def source_mixing_weights(
     )
 
 
-def importance_sample(
-    docs: DataFrame,
-    base_rate: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def importance_sample(docs: DataFrame, base_rate: float = 0.5) -> DataFrame:
     """Quality-weighted deterministic sampling: [id, quality, coin] of
     docs kept with probability ``base_rate * quality``.
 
@@ -366,9 +308,7 @@ def importance_sample(
     """
     from amorphous_mapreduce_spark.operators.text_analysis import doc_stats
 
-    stats = doc_stats(docs, id_col=id_col, text_col=text_col).select(
-        "id", "quality"
-    )
+    stats = doc_stats(docs).select("id", "quality")
     coin = hex_hash64(
         F.concat(F.lit("imp_"), F.col("id").cast("string"))
     ) / F.lit(float(2**60))
@@ -378,11 +318,7 @@ def importance_sample(
     )
 
 
-def quantize_embeddings(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """Int8 scalar quantization: [id, scale, n_sat, q_sum].
 
     q[i] = trunc(v[i] / scale * 127) with scale = max(|v|) — a pure
@@ -393,14 +329,14 @@ def quantize_embeddings(
     (integers, so the audit is engine-exact; truncation toward zero is
     CAST semantics on Spark and TRUNC on DuckDB).
     """
-    absd = F.transform(F.col(vec_col), lambda x: F.abs(x.cast("double")))
+    absd = F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
     scale = F.array_max(absd)
     q = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: (x.cast("double") / F.col("scale") * F.lit(127.0)).cast("int"),
     )
     return (
-        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias(vec_col), scale.alias("scale"))
+        emb.select(F.col("vec_id").alias("id"), "embedding", scale.alias("scale"))
         .filter(F.col("scale") > 0)
         .withColumn("q", q)
         .select(

@@ -88,8 +88,6 @@ def cosine_topk_blocked(
     emb: DataFrame,
     k: int = 5,
     n_blocks: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_label_col: str | None = None,
     query_ids: DataFrame | None = None,
 ) -> DataFrame:
@@ -133,10 +131,10 @@ def cosine_topk_blocked(
     )
 
     cols = [
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(vec_col).alias("norm"),
-        F.pmod(hex_hash64(F.col(id_col).cast("string")), F.lit(n_blocks)).alias(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        l2_norm("embedding").alias("norm"),
+        F.pmod(hex_hash64(F.col("vec_id").cast("string")), F.lit(n_blocks)).alias(
             "blk"
         ),
     ]
@@ -221,8 +219,6 @@ def cosine_near_dup_blocked(
     emb: DataFrame,
     threshold: float,
     n_blocks: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine near-duplicate pairs above ``threshold`` via the same
     blocked E·Eᵀ tiling as :func:`cosine_topk_blocked`: [qid, nid, sim]
@@ -245,10 +241,10 @@ def cosine_near_dup_blocked(
     )
 
     v = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(vec_col).alias("norm"),
-        F.pmod(hex_hash64(F.col(id_col).cast("string")), F.lit(n_blocks)).alias(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        l2_norm("embedding").alias("norm"),
+        F.pmod(hex_hash64(F.col("vec_id").cast("string")), F.lit(n_blocks)).alias(
             "blk"
         ),
     )
@@ -315,27 +311,20 @@ def cosine_near_dup_blocked(
     return pairs.mapInPandas(kernel, out_schema)
 
 
-def _plane_sign(seed: str, plane: int, dim: int) -> float:
+def _plane_sign(plane: int, dim: int) -> float:
     """±1 component of hyperplane ``plane`` at ``dim``: the same value as
-    functions.hashing.hex_hash64(f"{seed}_{plane}_{dim}") % 2, computed
+    functions.hashing.hex_hash64(f"lsh_{plane}_{dim}") % 2, computed
     driver-side (hashlib md5 == Spark md5 on the same bytes)."""
     import hashlib
 
-    h = hashlib.md5(f"{seed}_{plane}_{dim}".encode()).hexdigest()
+    h = hashlib.md5(f"lsh_{plane}_{dim}".encode()).hexdigest()
     return 1.0 if int(h[:15], 16) % 2 == 0 else -1.0
 
 
-def hyperplane_signatures(
-    emb: DataFrame,
-    n_planes: int,
-    band_bits: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: str = "lsh",
-) -> DataFrame:
+def hyperplane_signatures(emb: DataFrame, n_planes: int, band_bits: int) -> DataFrame:
     """Per (vector, band) signature strings: [id, band, sig].
 
-    Hyperplane p has ±1 components s(p,d) derived from md5(seed_p_d) —
+    Hyperplane p has ±1 components s(p,d) derived from md5("lsh_p_d") —
     deterministic, no RNG state, reproducible across engines and runs.
     sign bit = [Σ_d s(p,d)·v[d] >= 0]. Bits are band-grouped (LSH banding:
     ``n_planes/band_bits`` independent tables OR-ed for recall).
@@ -352,7 +341,7 @@ def hyperplane_signatures(
     """
     import pandas as pd
 
-    first = emb.select(F.size(vec_col).alias("d")).first()
+    first = emb.select(F.size("embedding").alias("d")).first()
     if first is None:  # empty input: empty signature table, same schema
         spark = emb.sparkSession
         return spark.createDataFrame([], schema="id long, band long, sig string")
@@ -361,11 +350,11 @@ def hyperplane_signatures(
 
     # dims x planes sign matrix, derived from md5 driver-side (tiny).
     S = np.array(
-        [[_plane_sign(seed, p, d) for p in range(n_planes)] for d in range(dims)],
+        [[_plane_sign(p, d) for p in range(n_planes)] for d in range(dims)],
         dtype=np.float64,
     )
     n_bands = (n_planes + band_bits - 1) // band_bits
-    src = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    src = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
 
     def kernel(it):
         for pdf in it:
@@ -387,12 +376,7 @@ def hyperplane_signatures(
     return src.mapInPandas(kernel, "id long, band long, sig string")
 
 
-def adaptive_band_bits(
-    n: int,
-    min_bits: int = 4,
-    max_bits: int = 16,
-    target_log2_bucket: int = 6,
-) -> int:
+def adaptive_band_bits(n: int) -> int:
     """Scale-correct LSH band width: bits = floor(log2 n) - 6, clamped.
 
     Expected bucket occupancy is n / 2^bits; holding it at ~2^6 = 64
@@ -404,10 +388,10 @@ def adaptive_band_bits(
     the engine-portable length(bin(n)) - 1 (Python: bit_length() - 1),
     so the DuckDB oracle derives the identical width from the data.
     """
-    return min(max_bits, max(min_bits, n.bit_length() - 1 - target_log2_bucket))
+    return min(16, max(4, n.bit_length() - 1 - 6))
 
 
-def adaptive_cells(n: int, min_cells: int = 16, max_cells: int = 4096) -> int:
+def adaptive_cells(n: int) -> int:
     """Scale-correct IVF/k-means cell count: k = 2^(floor(log2 n) // 2),
     clamped to [16, 4096] — i.e. k ≈ √n within a factor of √2.
 
@@ -425,15 +409,13 @@ def adaptive_cells(n: int, min_cells: int = 16, max_cells: int = 4096) -> int:
     never exceed the training sample.
     """
     # max(n, 1): an empty corpus gets the floor, not a negative shift.
-    return min(max_cells, max(min_cells, 1 << ((max(n, 1).bit_length() - 1) // 2)))
+    return min(4096, max(16, 1 << ((max(n, 1).bit_length() - 1) // 2)))
 
 
 def lsh_candidate_pairs(
     emb: DataFrame,
     n_planes: int = 32,
     band_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cap: int | None = None,
 ) -> DataFrame:
     """Candidate pairs sharing any band bucket.
@@ -453,7 +435,7 @@ def lsh_candidate_pairs(
     """
     # Persist: both join branches read the signatures — without it the
     # whole signature pipeline runs twice. One row per (vector, band).
-    sigs = hyperplane_signatures(emb, n_planes, band_bits, id_col, vec_col).persist()
+    sigs = hyperplane_signatures(emb, n_planes, band_bits).persist()
     a = sigs.select(F.col("id").alias("qid"), "band", "sig")
     if cap is None:
         b = sigs.select(F.col("id").alias("nid"), "band", "sig")
@@ -484,9 +466,6 @@ def ivf_trained_ranked(
     emb: DataFrame,
     n_cells: int | None = None,
     max_rank: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_iters: int = 2,
 ) -> DataFrame:
     """K-means-trained IVF cell ranking: [id, vec, cell, rk] for each
     vector's ``max_rank`` nearest trained centroids (rk = 1 is the
@@ -514,12 +493,10 @@ def ivf_trained_ranked(
     q, _, cents = kmeans_fit(
         emb,
         k=n_cells,
-        iters=train_iters,
-        id_col=id_col,
-        vec_col=vec_col,
+        iters=2,
         train_sample=KM_TRAIN_N,
     )
-    vecs = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    vecs = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     # cents is already persisted: kmeans_fit persists it whenever
     # train_sample is set
     return _rank_cells_arrow(q, cents, max_rank).join(vecs, "id").select(
@@ -743,8 +720,6 @@ def lsh_topk(
     k: int = 5,
     n_planes: int = 32,
     band_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cap: int | None = None,
 ) -> DataFrame:
     """ANN top-k: LSH candidates -> exact cosine re-rank: [qid, nid, sim, rnk].
@@ -753,7 +728,7 @@ def lsh_topk(
     :func:`lsh_candidate_pairs`) — the capped candidates are already
     directed with every vector on the query side, so no symmetrisation.
     """
-    cands = lsh_candidate_pairs(emb, n_planes, band_bits, id_col, vec_col, cap=cap)
+    cands = lsh_candidate_pairs(emb, n_planes, band_bits, cap=cap)
     if cap is not None:
         sym = cands
     else:
@@ -768,9 +743,9 @@ def lsh_topk(
     # measured SLOWER at sf0.1 (alternating same-session A/B, median
     # 12.0 s vs 16.5 s, identical output) and was deleted.
     vecs = emb.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(vec_col).alias("_n"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        l2_norm("embedding").alias("_n"),
     ).persist()
     dot = F.aggregate(
         F.zip_with("qv", "nv", lambda x, y: x.cast("double") * y.cast("double")),

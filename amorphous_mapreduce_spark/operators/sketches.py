@@ -29,38 +29,36 @@ from amorphous_mapreduce_spark.functions.hashing import hex_hash64
 from amorphous_mapreduce_spark.operators.dedup import tokenized
 
 
+# Rows of every count-min grid; the SQL oracles unroll the same depth.
+CMS_DEPTH = 4
+
+
 def _bucket(word, depth: int, width: int):
     """MD5-derived CMS bucket for ``word`` at ``depth`` — replayable in
     DuckDB as the same md5-substring arithmetic."""
     return F.pmod(hex_hash64(F.concat(F.lit(f"cms{depth}_"), word)), F.lit(width))
 
 
-def cms_cells(
-    docs: DataFrame,
-    depth: int = 4,
-    width: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cms_cells(docs: DataFrame, width: int = 256) -> DataFrame:
     """The sketch state: [depth, bucket, cell] — d x m counter grid.
 
     Built from per-word exact partials (one token-stream aggregate),
     then d rows per vocab word summed into cells. Cells are mergeable:
     grids from disjoint corpus shards add elementwise.
     """
-    tf = _word_counts(docs, id_col, text_col)
-    return _cells_from_tf(tf, depth, width)
+    tf = _word_counts(docs)
+    return _cells_from_tf(tf, width)
 
 
-def _word_counts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _word_counts(docs: DataFrame) -> DataFrame:
     return (
-        tokenized(docs, id_col, text_col)
+        tokenized(docs)
         .groupBy("word")
         .agg(F.count("*").alias("c"))
     )
 
 
-def _depth_rows(depth: int, width: int):
+def _depth_rows(width: int):
     """Explode each vocab word into its d (depth, bucket) coordinates —
     ONE pass over the tf frame (a d-branch union would re-execute the
     token aggregation once per depth)."""
@@ -71,29 +69,22 @@ def _depth_rows(depth: int, width: int):
                     F.lit(d).alias("depth"),
                     _bucket(F.col("word"), d, width).alias("bucket"),
                 )
-                for d in range(depth)
+                for d in range(CMS_DEPTH)
             ]
         )
     )
 
 
-def _cells_from_tf(tf: DataFrame, depth: int, width: int) -> DataFrame:
+def _cells_from_tf(tf: DataFrame, width: int) -> DataFrame:
     return (
-        tf.select(_depth_rows(depth, width).alias("db"), "c")
+        tf.select(_depth_rows(width).alias("db"), "c")
         .select("db.depth", "db.bucket", "c")
         .groupBy("depth", "bucket")
         .agg(F.sum("c").alias("cell"))
     )
 
 
-def cms_heavy_hitters(
-    docs: DataFrame,
-    k: int = 20,
-    depth: int = 4,
-    width: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cms_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
     """Top-k words by exact count, with their count-min estimate:
     [word, exact_count, cms_est] — demonstrating the sketch's
     overestimate bound (cms_est >= exact_count always; equality when no
@@ -104,12 +95,12 @@ def cms_heavy_hitters(
     """
     # persisted: both the cell grid and the estimation rows read the
     # token aggregate — without the cache it would run twice
-    tf = _word_counts(docs, id_col, text_col).persist()
-    cells = _cells_from_tf(tf, depth, width)
+    tf = _word_counts(docs).persist()
+    cells = _cells_from_tf(tf, 256)
     wb = tf.select(
         "word",
         F.col("c").alias("exact_count"),
-        _depth_rows(depth, width).alias("db"),
+        _depth_rows(256).alias("db"),
     ).select("word", "exact_count", F.col("db.depth"), F.col("db.bucket"))
     est = (
         wb.join(F.broadcast(cells), ["depth", "bucket"])
@@ -127,13 +118,7 @@ def _trailing_zeros(col):
     return F.bit_count((col.bitwiseAND(-col)) - F.lit(1))
 
 
-def fm_cardinality(
-    docs: DataFrame,
-    n_buckets: int = 32,
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def fm_cardinality(docs: DataFrame) -> DataFrame:
     """Flajolet-Martin cardinality sketch state per language:
     [lang, n_distinct_exact, fm_sum_pow2, buckets_used, max_rho].
 
@@ -150,8 +135,8 @@ def fm_cardinality(
     maxima + counts -> per-lang rollup; each level groups by a prefix
     superset so no branch re-executes the token scan.
     """
-    toks = tokenized(docs, id_col, text_col)
-    langs = docs.select(F.col(id_col).alias("id"), F.col(lang_col).alias("lang"))
+    toks = tokenized(docs)
+    langs = docs.select(F.col("doc_id").alias("id"), "lang")
     h = hex_hash64(F.concat(F.lit("fm_"), F.col("word")))
     per_word = (
         toks.join(F.broadcast(langs), "id")
@@ -159,7 +144,7 @@ def fm_cardinality(
         .distinct()
         .select(
             "lang",
-            F.pmod(h, F.lit(n_buckets)).alias("bucket"),
+            F.pmod(h, F.lit(32)).alias("bucket"),
             (
                 F.least(
                     _trailing_zeros(F.shiftright(h, 5)) + F.lit(1), F.lit(40)
@@ -186,13 +171,7 @@ def fm_cardinality(
 _HLL_EST_NUM_64 = 1.046802484394006e20
 
 
-def hll_cardinality(
-    docs: DataFrame,
-    m: int = 64,
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def hll_cardinality(docs: DataFrame) -> DataFrame:
     """HyperLogLog distinct-count sketch per language:
     [lang, n_distinct_exact, registers_used, zero_registers,
     hll_sum_scaled, hll_raw_est].
@@ -213,8 +192,8 @@ def hll_cardinality(
     double division of exact integers — bit-identical on both engines.
     Zero-register count rides along (the linear-counting regime signal).
     """
-    toks = tokenized(docs, id_col, text_col)
-    langs = docs.select(F.col(id_col).alias("id"), F.col(lang_col).alias("lang"))
+    toks = tokenized(docs)
+    langs = docs.select(F.col("doc_id").alias("id"), "lang")
     h = hex_hash64(F.concat(F.lit("hll_"), F.col("word")))
     w = F.shiftright(h, 6)
     per_word = (
@@ -223,7 +202,7 @@ def hll_cardinality(
         .distinct()
         .select(
             "lang",
-            F.pmod(h, F.lit(m)).alias("bucket"),
+            F.pmod(h, F.lit(64)).alias("bucket"),
             F.when(w == 0, F.lit(55))
             .otherwise(F.lit(55) - F.length(F.bin(w)))
             .alias("rho"),
@@ -241,14 +220,14 @@ def hll_cardinality(
     )
     sum_scaled = (
         F.col("_present_scaled")
-        + (F.lit(m) - F.col("registers_used")).cast("long")
+        + (F.lit(64) - F.col("registers_used")).cast("long")
         * F.lit(1 << 55).cast("long")
     )
     return per_lang.select(
         "lang",
         "n_distinct_exact",
         "registers_used",
-        (F.lit(m) - F.col("registers_used")).cast("long").alias("zero_registers"),
+        (F.lit(64) - F.col("registers_used")).cast("long").alias("zero_registers"),
         sum_scaled.alias("hll_sum_scaled"),
         (F.lit(_HLL_EST_NUM_64) / sum_scaled.cast("double")).alias(
             "hll_raw_est"
@@ -261,8 +240,6 @@ def bloom_semi_join(
     dim_keys: DataFrame,
     fact_key: str,
     group_col: str,
-    n_bits: int = 4096,
-    n_hashes: int = 3,
 ) -> DataFrame:
     """Bloom-filter pre-join pruning audit: [group, n_probe,
     n_bloom_pass, n_exact] per ``group_col``.
@@ -277,11 +254,11 @@ def bloom_semi_join(
     replay the filter exactly.
     """
     bits = None
-    for j in range(n_hashes):
+    for j in range(3):
         pos_j = dim_keys.select(
             F.pmod(
                 hex_hash64(F.concat(F.lit(f"bf{j}_"), F.col(fact_key).cast("string"))),
-                F.lit(n_bits),
+                F.lit(4096),
             ).alias("pos")
         )
         bits = pos_j if bits is None else bits.unionByName(pos_j)
@@ -290,17 +267,17 @@ def bloom_semi_join(
     probe = fact.select(
         F.col(group_col).alias("grp"), F.col(fact_key).alias("k")
     )
-    for j in range(n_hashes):
+    for j in range(3):
         pos_col = F.pmod(
             hex_hash64(F.concat(F.lit(f"bf{j}_"), F.col("k").cast("string"))),
-            F.lit(n_bits),
+            F.lit(4096),
         )
         bj = bits.select(F.col("pos").alias(f"_b{j}"))
         probe = probe.withColumn(f"_p{j}", pos_col).join(
             F.broadcast(bj), F.col(f"_p{j}") == F.col(f"_b{j}"), "left"
         )
     passes = F.lit(True)
-    for j in range(n_hashes):
+    for j in range(3):
         passes = passes & F.col(f"_b{j}").isNotNull()
     exact = fact.join(
         dim_keys.select(F.col(fact_key)).distinct(), fact_key, "semi"
@@ -321,10 +298,11 @@ def bloom_semi_join(
     )
 
 
-def _key_cells(keys: DataFrame, salt: str, depth: int, width: int) -> DataFrame:
-    """CMS counter grid [depth, bucket, cell] over a bare key column
-    ``k`` — the join-cardinality variant of ``cms_cells`` (same salt on
-    both sides so matching keys land in matching buckets)."""
+def _key_cells(keys: DataFrame) -> DataFrame:
+    """CMS counter grid [depth, bucket, cell], 512 buckets wide, over a
+    bare key column ``k`` — the join-cardinality variant of ``cms_cells``
+    (the same ``cmsj`` salt on both sides so matching keys land in
+    matching buckets)."""
     tf = keys.groupBy("k").agg(F.count("*").alias("c"))
     rows = tf.select(
         F.explode(
@@ -335,14 +313,14 @@ def _key_cells(keys: DataFrame, salt: str, depth: int, width: int) -> DataFrame:
                         F.pmod(
                             hex_hash64(
                                 F.concat(
-                                    F.lit(f"{salt}{d}_"),
+                                    F.lit(f"cmsj{d}_"),
                                     F.col("k").cast("string"),
                                 )
                             ),
-                            F.lit(width),
+                            F.lit(512),
                         ).alias("bucket"),
                     )
-                    for d in range(depth)
+                    for d in range(CMS_DEPTH)
                 ]
             )
         ).alias("db"),
@@ -355,13 +333,7 @@ def _key_cells(keys: DataFrame, salt: str, depth: int, width: int) -> DataFrame:
     )
 
 
-def cms_join_size(
-    left_keys: DataFrame,
-    right_keys: DataFrame,
-    depth: int = 4,
-    width: int = 512,
-    salt: str = "cmsj",
-) -> DataFrame:
+def cms_join_size(left_keys: DataFrame, right_keys: DataFrame) -> DataFrame:
     """Sketch-based equi-join cardinality estimate next to the exact
     count: ONE row [cms_est, exact_rows, overestimate].
 
@@ -377,8 +349,8 @@ def cms_join_size(
     Oracle-checkable end to end: counts, buckets, products and minima
     are MD5-derived integer arithmetic (functions.hashing.hex_hash64).
     """
-    gl = _key_cells(left_keys, salt, depth, width)
-    gr = _key_cells(right_keys, salt, depth, width)
+    gl = _key_cells(left_keys)
+    gr = _key_cells(right_keys)
     per_depth = (
         gl.join(
             gr.select(
@@ -406,13 +378,7 @@ def cms_join_size(
     )
 
 
-def hll_pairwise_overlap(
-    docs: DataFrame,
-    m: int = 64,
-    key_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def hll_pairwise_overlap(docs: DataFrame) -> DataFrame:
     """Pairwise vocabulary overlap between corpus partitions from MERGED
     HyperLogLog registers: [src_a, src_b, denom_a, denom_b, denom_union,
     est_a, est_b, est_union, est_intersection].
@@ -430,8 +396,8 @@ def hll_pairwise_overlap(
     distinct (key, word) tagging — identical to hll_cardinality's.
     Reference: bounded-state per-key agg (W7, src/word_count.rs:121-123).
     """
-    toks = tokenized(docs, id_col, text_col)
-    keys = docs.select(F.col(id_col).alias("id"), F.col(key_col).alias("src"))
+    toks = tokenized(docs)
+    keys = docs.select(F.col("doc_id").alias("id"), F.col("source").alias("src"))
     h = hex_hash64(F.concat(F.lit("hll_"), F.col("word")))
     w = F.shiftright(h, 6)
     per_bucket = (
@@ -440,7 +406,7 @@ def hll_pairwise_overlap(
         .distinct()
         .select(
             "src",
-            F.pmod(h, F.lit(m)).alias("bucket"),
+            F.pmod(h, F.lit(64)).alias("bucket"),
             F.when(w == 0, F.lit(55))
             .otherwise(F.lit(55) - F.length(F.bin(w)))
             .alias("rho"),
@@ -448,10 +414,10 @@ def hll_pairwise_overlap(
         .groupBy("src", "bucket")
         .agg(F.max("rho").alias("reg"))
     )
-    srcs = docs.select(F.col(key_col).alias("src")).distinct()
+    srcs = docs.select(F.col("source").alias("src")).distinct()
     dense = (
         srcs.select(
-            "src", F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("bucket")
+            "src", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bucket")
         )
         .join(per_bucket, ["src", "bucket"], "left")
         .select(

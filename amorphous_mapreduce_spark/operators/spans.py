@@ -40,12 +40,7 @@ from amorphous_mapreduce_spark.operators.dedup import (
 )
 
 
-def positioned_shingles(
-    docs: DataFrame,
-    shingle_size: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def positioned_shingles(docs: DataFrame, shingle_size: int = 6) -> DataFrame:
     """[id, pos, sh]: k-gram hash at every token position (keeps repeats).
 
     Same rows as ``dedup.shingles``' construction but position-preserving
@@ -57,7 +52,7 @@ def positioned_shingles(
     nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return (
         docs.repartition(nparts)
-        .select(F.col(id_col).alias("id"), word_array(text_col).alias("_ws"))
+        .select(F.col("doc_id").alias("id"), word_array("text").alias("_ws"))
         .select(
             "id",
             F.posexplode(shingle_grams(F.col("_ws"), shingle_size)).alias(
@@ -73,8 +68,6 @@ def duplicate_passages(
     shingle_size: int = 6,
     min_tokens: int = 12,
     max_df: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Verbatim shared passages: [id1, id2, start1, start2, span_tokens].
 
@@ -90,7 +83,7 @@ def duplicate_passages(
     if min_run < 1:
         raise ValueError("min_tokens must be >= shingle_size")
 
-    ps = positioned_shingles(docs, shingle_size, id_col, text_col)
+    ps = positioned_shingles(docs, shingle_size)
     # Three consumers (df counts + both join sides) read the shingle
     # table — persist so tokenize+window+md5 runs once, not three times.
     ps = ps.persist()

@@ -25,96 +25,83 @@ from pyspark.sql import functions as F
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "ts",
-    by: str = "user_id",
-    right_cols: tuple[str, ...] = (),
     direction: str = "backward",
     tolerance_us: int | None = None,
 ) -> DataFrame:
-    """For each left row, attach the nearest right row within the same
-    ``by`` key: the latest with ``right.on <= left.on`` (backward,
-    default) or the earliest with ``right.on >= left.on`` (forward).
+    """For each left row, attach the nearest right row of the same
+    ``user_id``: the latest with ``right.ts <= left.ts`` (backward,
+    default) or the earliest with ``right.ts >= left.ts`` (forward).
 
-    Returns left columns + ``asof_<on>`` + ``asof_<c>`` for each
-    ``right_cols``. Left rows with no matching right row keep NULLs
-    (left-outer as-of semantics). At equal timestamps the right row is
-    considered visible (<=/>=), matching DuckDB's ASOF JOIN. With
-    ``tolerance_us``, matches farther than that many microseconds from
-    the left timestamp are nulled out (pandas merge_asof ``tolerance``
-    semantics) — the mask is applied AFTER the carry, so it is one
-    scalar comparison per row, not a second join.
+    Returns left columns + ``asof_ts`` + ``asof_value``. Left rows with
+    no matching right row keep NULLs (left-outer as-of semantics). At
+    equal timestamps the right row is considered visible (<=/>=),
+    matching DuckDB's ASOF JOIN. With ``tolerance_us``, matches farther
+    than that many microseconds from the left timestamp are nulled out
+    (pandas merge_asof ``tolerance`` semantics) — the mask is applied
+    AFTER the carry, so it is one scalar comparison per row, not a
+    second join.
 
-    Duplicate right (by, on) pairs resolve deterministically: backward
-    carries the greatest payload tuple, forward the smallest (each is
-    the payload adjacent to the left row in the total window order).
+    Duplicate right (user_id, ts) pairs resolve deterministically:
+    backward carries the greatest ``value``, forward the smallest (each
+    is the payload adjacent to the left row in the total window order).
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     lcols = left.columns
     l = left.withColumn("_side", F.lit(1))
     r = right.select(
-        F.col(by),
-        F.col(on),
-        *[F.col(c) for c in right_cols],
+        F.col("user_id"),
+        F.col("ts"),
+        F.col("value"),
     ).withColumn("_side", F.lit(0))
     # Align schemas: left payload columns are NULL on right rows & v.v.
     for c in lcols:
-        if c not in (by, on) and c not in r.columns:
+        if c not in ("user_id", "ts") and c not in r.columns:
             r = r.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
-    for c in right_cols:
-        if c not in l.columns:
-            l = l.withColumn(c, F.lit(None).cast(dict(right.dtypes)[c]))
+    if "value" not in l.columns:
+        l = l.withColumn("value", F.lit(None).cast(dict(right.dtypes)["value"]))
     unioned = l.unionByName(r.select(*l.columns))
-    # Right rows sort before left rows at identical (on) so they are
+    # Right rows sort before left rows at identical ts so they are
     # visible to them (ASOF's <=). Among right rows with the SAME
-    # (by, on) the payload struct ascending makes the ordering total, so
-    # F.last deterministically carries the greatest payload tuple —
+    # (user_id, ts) the payload struct ascending makes the ordering
+    # total, so F.last deterministically carries the greatest payload —
     # without it the carried right row is arbitrary run-to-run.
     fwd = direction == "forward"
-    order_exprs = [
-        F.col(on).desc() if fwd else F.col(on).asc(),
-        F.col("_side").asc(),
-    ]
-    if right_cols:
-        payload = F.when(
-            F.col("_side") == 0, F.struct(*[F.col(c) for c in right_cols])
-        )
-        # Walking the window order, F.last carries the right row closest
-        # to the left row; ordering the same-(by, on) payloads so the
-        # carried one is greatest (backward) / smallest (forward).
-        order_exprs.append(payload.desc_nulls_first() if fwd else payload.asc_nulls_first())
+    payload = F.when(F.col("_side") == 0, F.struct(F.col("value")))
     w = (
-        Window.partitionBy(by)
-        .orderBy(*order_exprs)
+        Window.partitionBy("user_id")
+        .orderBy(
+            F.col("ts").desc() if fwd else F.col("ts").asc(),
+            F.col("_side").asc(),
+            # Walking the window order, F.last carries the right row
+            # closest to the left row; ordering the same-(user_id, ts)
+            # payloads so the carried one is greatest (backward) /
+            # smallest (forward).
+            payload.desc_nulls_first() if fwd else payload.asc_nulls_first(),
+        )
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = unioned.select(
         *[F.col(c) for c in unioned.columns],
-        F.last(F.when(F.col("_side") == 0, F.col(on)), ignorenulls=True)
-        .over(w)
-        .alias(f"asof_{on}"),
         *[
             F.last(F.when(F.col("_side") == 0, F.col(c)), ignorenulls=True)
             .over(w)
             .alias(f"asof_{c}")
-            for c in right_cols
+            for c in ("ts", "value")
         ],
     )
-    out_cols = lcols + [f"asof_{on}"] + [f"asof_{c}" for c in right_cols]
+    out_cols = lcols + ["asof_ts", "asof_value"]
     result = carried.filter(F.col("_side") == 1).select(*out_cols)
     if tolerance_us is not None:
         gap = (
-            F.unix_micros(F.col(f"asof_{on}")) - F.unix_micros(F.col(on))
+            F.unix_micros(F.col("asof_ts")) - F.unix_micros(F.col("ts"))
             if fwd
-            else F.unix_micros(F.col(on)) - F.unix_micros(F.col(f"asof_{on}"))
+            else F.unix_micros(F.col("ts")) - F.unix_micros(F.col("asof_ts"))
         )
-        in_tol = F.col(f"asof_{on}").isNotNull() & (gap <= F.lit(tolerance_us))
+        in_tol = F.col("asof_ts").isNotNull() & (gap <= F.lit(tolerance_us))
         result = result.select(
             *lcols,
-            *[
-                F.when(in_tol, F.col(c)).alias(c)
-                for c in [f"asof_{on}"] + [f"asof_{c}" for c in right_cols]
-            ],
+            *[F.when(in_tol, F.col(c)).alias(c) for c in ("asof_ts", "asof_value")],
         )
     return result
 
@@ -122,9 +109,6 @@ def asof_join(
 def range_join(
     events: DataFrame,
     intervals: DataFrame,
-    ts_col: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
     bucket: str = "1 hour",
 ) -> DataFrame:
     """Rows of ``events`` matched to every interval containing them
@@ -137,15 +121,15 @@ def range_join(
         bucket
     ]
     ev = events.withColumn(
-        "_b", (F.unix_timestamp(F.col(ts_col)) / n_secs).cast("long")
+        "_b", (F.unix_timestamp(F.col("ts")) / n_secs).cast("long")
     )
     iv = intervals.withColumn(
-        "_bs", (F.unix_timestamp(F.col(start_col)) / n_secs).cast("long")
+        "_bs", (F.unix_timestamp(F.col("start")) / n_secs).cast("long")
     ).withColumn(
         # end is exclusive: a zero-length tail bucket is still generated,
         # the containment filter discards spurious matches.
         "_be",
-        (F.unix_timestamp(F.col(end_col)) / n_secs).cast("long"),
+        (F.unix_timestamp(F.col("end")) / n_secs).cast("long"),
     )
     iv_exploded = iv.withColumn("_b", F.explode(F.sequence("_bs", "_be"))).drop(
         "_bs", "_be"
@@ -153,18 +137,13 @@ def range_join(
     return (
         ev.join(iv_exploded, "_b")
         .filter(
-            (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) < F.col(end_col))
+            (F.col("ts") >= F.col("start")) & (F.col("ts") < F.col("end"))
         )
         .drop("_b")
     )
 
 
-def gap_fill_daily(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def gap_fill_daily(events: DataFrame) -> DataFrame:
     """Hypertable-style gap-filled daily rollup with forward fill:
     [event_type, day, n_events, filled_sum].
 
@@ -185,12 +164,12 @@ def gap_fill_daily(
     # aggregation would run three times
     daily = (
         events.groupBy(
-            F.date_trunc("day", F.col(ts_col)).alias("day"),
-            F.col(key_col).alias("k"),
+            F.date_trunc("day", F.col("ts")).alias("day"),
+            F.col("event_type").alias("k"),
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col(value_col).cast("decimal(18,6)"))
+            F.sum(F.col("value").cast("decimal(18,6)"))
             .cast("double")
             .alias("_sum"),
         )
@@ -212,7 +191,7 @@ def gap_fill_daily(
     return (
         spine.join(daily, ["k", "day"], "left")
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("event_type"),
             "day",
             F.coalesce(F.col("n_events"), F.lit(0)).alias("n_events"),
             F.last("_sum", ignorenulls=True).over(w).alias("filled_sum"),
@@ -224,30 +203,29 @@ def asof_nearest_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    by: str = "user_id",
     right_cols: tuple[str, ...] = (),
     tolerance_us: int | None = None,
 ) -> DataFrame:
     """Nearest-direction as-of join (pandas merge_asof direction=
     'nearest'): each left row gets the right row minimizing |right.on −
-    left.on| within the same ``by`` key, preferring the BACKWARD match
+    left.on| within the same ``user_id``, preferring the BACKWARD match
     on exact distance ties. ``on`` must be an integer column (e.g.
     epoch microseconds) so the distance is exact integer arithmetic.
 
     Same scale shape as asof_join: ONE shuffle on the key, two ordered
     carries inside the same window partition (ascending for the
     backward candidate, descending for the forward candidate), then a
-    scalar chooser — never a row-pair blowup. Duplicate right (by, on)
+    scalar chooser — never a row-pair blowup. Duplicate right (user_id, on)
     rows resolve like asof_join: the backward carry keeps the greatest
     payload tuple, the forward carry the smallest.
     """
     lcols = left.columns
     l = left.withColumn("_side", F.lit(1))
     r = right.select(
-        F.col(by), F.col(on), *[F.col(c) for c in right_cols]
+        F.col("user_id"), F.col(on), *[F.col(c) for c in right_cols]
     ).withColumn("_side", F.lit(0))
     for c in lcols:
-        if c not in (by, on) and c not in r.columns:
+        if c not in ("user_id", on) and c not in r.columns:
             r = r.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
     for c in right_cols:
         if c not in l.columns:
@@ -258,12 +236,12 @@ def asof_nearest_join(
         F.col("_side") == 0, F.struct(*[F.col(c) for c in right_cols])
     )
     w_b = (
-        Window.partitionBy(by)
+        Window.partitionBy("user_id")
         .orderBy(F.col(on).asc(), F.col("_side").asc(), payload.asc_nulls_first())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     w_f = (
-        Window.partitionBy(by)
+        Window.partitionBy("user_id")
         .orderBy(F.col(on).desc(), F.col("_side").asc(), payload.desc_nulls_first())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )

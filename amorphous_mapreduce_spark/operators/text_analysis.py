@@ -32,16 +32,14 @@ STOPWORDS = tuple(w for ws in LANG_MARKERS.values() for w in ws)
 BPE_REGEX = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
 
-def doc_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_stats(docs: DataFrame) -> DataFrame:
     """Per-doc quality statistics: token/char counts, ratios, quality score.
 
     Columns: [id, n_tokens, n_chars_norm, avg_token_len, punct_ratio,
     stopword_ratio, quality]. ``quality`` is a fixed deterministic formula —
     a stand-in for learned quality classifiers in real pipelines.
     """
-    norm = normalize_text(text_col)
+    norm = normalize_text("text")
     n_tokens = F.size(F.split(norm, " "))
     n_chars = F.length(norm)
     n_punct = n_chars - F.length(F.regexp_replace(norm, r"[^\w\s]", ""))
@@ -63,7 +61,7 @@ def doc_stats(
         )
     )
     return docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         n_tokens.alias("n_tokens"),
         n_chars.alias("n_chars_norm"),
         avg_tok.alias("avg_token_len"),
@@ -73,9 +71,7 @@ def doc_stats(
     )
 
 
-def language_id(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: [id, lang_pred, lang_score].
 
     Scores each language by marker-stopword hits over the token bag;
@@ -83,7 +79,7 @@ def language_id(
     marker hits at all. (An n-gram-frequency heuristic — the classic
     pre-neural langid approach.)
     """
-    toks = F.split(normalize_text(text_col), " ")
+    toks = F.split(normalize_text("text"), " ")
 
     def marker_hits(ws: tuple[str, ...]) -> Column:
         # NB: the lambda must take exactly one parameter — F.filter treats
@@ -98,65 +94,52 @@ def language_id(
     # *smallest* lang string for equal scores — so invert via sort desc:
     best = F.sort_array(F.array(*scores), asc=False)[0]
     return docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.when(best["score"] > 0, best["lang"]).otherwise("und").alias("lang_pred"),
         best["score"].alias("lang_score"),
     )
 
 
-def token_counts_bpe(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def token_counts_bpe(docs: DataFrame) -> DataFrame:
     """Regex (BPE-ish pre-tokeniser) token counts: [id, n_bpe_tokens,
     n_word_tokens]. Proxy for LLM token budgeting over a corpus."""
     return docs.select(
-        F.col(id_col).alias("id"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), 0)).alias(
+        F.col("doc_id").alias("id"),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_REGEX), 0)).alias(
             "n_bpe_tokens"
         ),
-        F.size(F.split(normalize_text(text_col), " ")).alias("n_word_tokens"),
+        F.size(F.split(normalize_text("text"), " ")).alias("n_word_tokens"),
     )
 
 
-def doc_fingerprints(
-    docs: DataFrame,
-    window: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def doc_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing fingerprints: [id, fp] — distinct minima of each
-    ``window``-length sliding window over the token-hash sequence
+    4-token sliding window over the token-hash sequence
     (Schleimer et al. winnowing; the rolling-hash fingerprint family).
     """
-    toks = tokenized(docs, id_col, text_col).select(
+    toks = tokenized(docs).select(
         "id", "pos", hex_hash64("word").alias("th")
     )
     w = (
         Window.partitionBy("id")
         .orderBy("pos")
-        .rowsBetween(Window.currentRow, window - 1)
+        .rowsBetween(Window.currentRow, 3)
     )
     n = Window.partitionBy("id")
     return (
         toks.withColumn("fp", F.min("th").over(w))
         .withColumn("_n", F.max("pos").over(n))
-        .filter(F.col("pos") <= F.col("_n") - (window - 1))
+        .filter(F.col("pos") <= F.col("_n") - 3)
         .select("id", "fp")
         .distinct()
     )
 
 
-def term_frequencies(
-    docs: DataFrame,
-    group_col: str,
-    top_k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def term_frequencies(docs: DataFrame, group_col: str, top_k: int = 10) -> DataFrame:
     """Top-k terms per group (e.g. lang): [group, word, cnt, rnk]."""
     toks = docs.select(
         F.col(group_col).alias("grp"),
-        F.explode(F.split(normalize_text(text_col), " ")).alias("word"),
+        F.explode(F.split(normalize_text("text"), " ")).alias("word"),
     ).filter(F.length("word") > 0)
     counts = toks.groupBy("grp", "word").agg(F.count("*").alias("cnt"))
     w = Window.partitionBy("grp").orderBy(F.desc("cnt"), F.asc("word"))
@@ -166,11 +149,7 @@ def term_frequencies(
     )
 
 
-def bigram_counts(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_counts(docs: DataFrame) -> DataFrame:
     """Corpus bigram counts: [bigram, cnt] (word pairs, space-joined).
 
     Round 8: bigrams from per-row array math (no lead() window / no
@@ -183,21 +162,14 @@ def bigram_counts(
     nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return (
         docs.repartition(nparts)
-        .select(word_array(text_col).alias("_ws"))
+        .select(word_array("text").alias("_ws"))
         .select(F.explode(shingle_grams(F.col("_ws"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("cnt"))
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    terms: tuple[str, ...],
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, terms: tuple[str, ...], b: float = 0.75) -> DataFrame:
     """BM25 relevance of every document against a fixed bag-of-terms
     query: [id, dl, tf_0.., score] for docs matching >= 1 term.
 
@@ -215,7 +187,7 @@ def bm25_scores(
     per-doc scoring is then a narrow projection. The only data shuffle
     is the (id, word) aggregation.
     """
-    toks = tokenized(docs, id_col, text_col)
+    toks = tokenized(docs)
     # Per-doc bag counts for query terms + document length in one pass:
     # conditional sums avoid a words-filter join (terms are literals).
     per_doc = toks.groupBy("id").agg(
@@ -240,7 +212,7 @@ def bm25_scores(
         * F.col("_n_doc").cast("double")
         / F.col("_n_tok").cast("double")
     )
-    denom_base = F.lit(float(k1)) * (
+    denom_base = F.lit(1.2) * (
         F.lit(1.0) - F.lit(float(b)) + F.lit(float(b)) * dl_norm
     )
 
@@ -250,7 +222,7 @@ def bm25_scores(
         idf = (F.col("_n_doc").cast("double") - df_ + F.lit(0.5)) / (
             df_ + F.lit(0.5)
         )
-        return idf * (tf * F.lit(float(k1) + 1.0)) / (tf + denom_base)
+        return idf * (tf * F.lit(2.2)) / (tf + denom_base)
 
     score = term_score(0)
     for i in range(1, len(terms)):

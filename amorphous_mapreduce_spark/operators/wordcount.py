@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 PUNCT_CLASS = "[,.]"
 
 
-def tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
+def tokens(df: DataFrame, text_col: str) -> DataFrame:
     """Explode ``text_col`` into one normalised token per row (col ``word``).
 
     Empty tokens are dropped — the reference panics on them

@@ -15,17 +15,13 @@ from amorphous_mapreduce_spark.operators.text_analysis import (
     term_frequencies,
     token_counts_bpe,
 )
-from amorphous_mapreduce_spark.queries.dedup_queries import NORM, TOKS_CTE
+from amorphous_mapreduce_spark.queries.dedup_queries import NORM, TOKS_CTE, _sql_list
 from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def _sql_list(words: tuple[str, ...]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
 
 
 DOC_STATS_ORACLE = f"""
@@ -119,7 +115,7 @@ SELECT DISTINCT id, fp FROM wins WHERE pos <= n - 3
 @register("doc_fingerprints", FINGERPRINT_ORACLE)
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints: distinct 4-window minima of token hashes."""
-    return doc_fingerprints(_docs(spark, sf_dir), window=4)
+    return doc_fingerprints(_docs(spark, sf_dir))
 
 
 TERMFREQ_ORACLE = f"""

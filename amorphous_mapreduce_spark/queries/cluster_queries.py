@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from amorphous_mapreduce_spark.operators.dedup import minhash_lsh_pairs
-from amorphous_mapreduce_spark.operators.graph import dedup_clusters
+from amorphous_mapreduce_spark.operators.graph import dedup_clusters, symmetric_edges
 from amorphous_mapreduce_spark.queries.dedup_queries import SHINGLES_CTE
 from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
@@ -169,11 +169,10 @@ from amorphous_mapreduce_spark.operators.text_analysis import (  # noqa: E402
     STOPWORDS,
     doc_stats,
 )
-from amorphous_mapreduce_spark.queries.dedup_queries import NORM  # noqa: E402
-
-
-def _sql_words(words: tuple[str, ...]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
+from amorphous_mapreduce_spark.queries.dedup_queries import (  # noqa: E402
+    NORM,
+    _sql_list,
+)
 
 
 BEST_QUALITY_ORACLE = (
@@ -190,7 +189,7 @@ WITH RECURSIVE stats AS (
                    / length(norm) AS punct_ratio,
                len(list_filter(string_split(norm, ' '),
                                w -> w IN ("""
-    + _sql_words(STOPWORDS)
+    + _sql_list(STOPWORDS)
     + f""")))
                    / len(string_split(norm, ' ')) AS stopword_ratio
         FROM (SELECT doc_id, {NORM} AS norm FROM documents)
@@ -1133,14 +1132,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4)
-    d1 = (
-        pairs.select(F.col("qid").alias("a"), F.col("nid").alias("b"))
-        .unionByName(
-            pairs.select(F.col("nid").alias("a"), F.col("qid").alias("b"))
-        )
-        .distinct()
-        .persist()
-    )
+    d1 = symmetric_edges(pairs).persist()
     wc = Window.partitionBy("a").orderBy(
         hex_hash64(F.concat(F.lit("hccap:"), F.col("b").cast("string"))),
         F.col("b"),

@@ -11,14 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from amorphous_mapreduce_spark.operators.curation import curate_corpus
-from amorphous_mapreduce_spark.queries.dedup_queries import NORM, shingles_cte
+from amorphous_mapreduce_spark.queries.dedup_queries import (
+    NORM,
+    _sql_list,
+    shingles_cte,
+)
 from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 from amorphous_mapreduce_spark.operators.text_analysis import STOPWORDS
-
-
-def _sql_list(words: tuple[str, ...]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
 
 
 CURATION_ORACLE = (

@@ -23,6 +23,11 @@ from pyspark.sql import functions as F
 NORM = r"regexp_replace(trim(lower(text)), '\s+', ' ', 'g')"
 
 
+def _sql_list(words: tuple[str, ...]) -> str:
+    """SQL string-literal list: ``'a', 'b'``."""
+    return ", ".join(f"'{w}'" for w in words)
+
+
 def toks_cte(src: str = "documents") -> str:
     """Position-indexed token CTE over any relation with (doc_id, text)."""
     return f"""
@@ -89,6 +94,11 @@ from amorphous_mapreduce_spark.operators.dedup import (  # noqa: E402
     minhash_lsh_pairs,
     simhash,
     simhash_near_pairs,
+)
+from amorphous_mapreduce_spark.operators.graph import (  # noqa: E402
+    KCORE_K,
+    KTRUSS_K,
+    KTRUSS_ROUNDS,
 )
 from amorphous_mapreduce_spark.queries_registry import register  # noqa: E402
 from amorphous_mapreduce_spark.sources import load_table  # noqa: E402
@@ -209,7 +219,7 @@ def q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix filter loses nothing. Hot shingles sort last in the (df, sh)
     order and fall out of every prefix, bounding the join fanout without
     the max_df vocabulary truncation ngram_jaccard uses."""
-    return jaccard_prefix_pairs(_docs(spark, sf_dir), threshold=0.5)
+    return jaccard_prefix_pairs(_docs(spark, sf_dir))
 
 
 SIMHASH_CTE = (
@@ -263,10 +273,10 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_pairs(_docs(spark, sf_dir), max_hamming=12)
 
 
-def _simhash_topm_oracle(max_hamming: int = 12, m: int = 3, cap: int = 8) -> str:
+def _simhash_topm_oracle() -> str:
     from amorphous_mapreduce_spark.operators.dedup import simhash_band_spec
 
-    spec = simhash_band_spec(60, max_hamming + 1)
+    spec = simhash_band_spec(60, 12 + 1)
     values = ", ".join(
         f"({bi}, {o}, CAST({(1 << w) - 1} AS BIGINT))" for bi, o, w in spec
     )
@@ -285,15 +295,15 @@ def _simhash_topm_oracle(max_hamming: int = 12, m: int = 3, cap: int = 8) -> str
     SELECT DISTINCT k.id AS qid, c.nid,
            bit_count(xor(k.simhash, c.nh)) AS hamming
     FROM keyed k JOIN capped c USING (band, bv)
-    WHERE c.r <= {cap} AND k.id <> c.nid
-      AND bit_count(xor(k.simhash, c.nh)) <= {max_hamming}
+    WHERE c.r <= 8 AND k.id <> c.nid
+      AND bit_count(xor(k.simhash, c.nh)) <= 12
 )
 SELECT qid AS doc_id, nid AS neighbor_id, hamming, rank FROM (
     SELECT qid, nid, hamming,
            CAST(row_number() OVER (PARTITION BY qid
                                    ORDER BY hamming, nid) AS INT) AS rank
     FROM cand
-) WHERE rank <= {m}
+) WHERE rank <= 3
 """
     )
 
@@ -530,7 +540,6 @@ def q_dedup_span_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- k-core of the near-dup graph ------------------------------------------
 
-KCORE_K = 2
 KCORE_ROUNDS = 8
 
 
@@ -573,7 +582,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.operators.graph import kcore
 
     pairs = minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=16, band_bits=4)
-    return kcore(pairs, k=KCORE_K, n_rounds=KCORE_ROUNDS)
+    return kcore(pairs, n_rounds=KCORE_ROUNDS)
 
 
 # --- normalization sensitivity sweep ----------------------------------------
@@ -1556,10 +1565,18 @@ l{i} AS MATERIALIZED (
 )"""
 
 
+def lpa_ctes(n_rounds: int) -> str:
+    """The near-dup edges and label-propagation states l0..l{n_rounds}:
+    ``operators.graph.label_propagation`` unrolled in SQL."""
+    return (
+        _NEARDUP_EDGES_PREFIX
+        + ", l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS label FROM edges),"
+        + ",".join(_lpa_round(i) for i in range(1, n_rounds + 1))
+    )
+
+
 LPA_ORACLE = (
-    _NEARDUP_EDGES_PREFIX
-    + ", l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS label FROM edges),"
-    + ",".join(_lpa_round(i) for i in range(1, LPA_ROUNDS + 1))
+    lpa_ctes(LPA_ROUNDS)
     + f"""
 SELECT label AS community,
        CAST(COUNT(*) AS BIGINT) AS n_members,
@@ -1668,10 +1685,6 @@ def q_near_dup_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- k-truss of the near-dup graph -------------------------------------------
 
-KTRUSS_K = 3
-KTRUSS_ROUNDS = 3
-
-
 def _ktruss_round(i: int) -> str:
     # MATERIALIZED for the same reason as the k-core rounds: each round
     # references the previous edge set three times (the wedge join).
@@ -1716,7 +1729,7 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.operators.graph import ktruss
 
     pairs = minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=16, band_bits=4)
-    return ktruss(pairs, k=KTRUSS_K, n_rounds=KTRUSS_ROUNDS)
+    return ktruss(pairs)
 
 
 # --- Fellegi-Sunter record-linkage weights ------------------------------------

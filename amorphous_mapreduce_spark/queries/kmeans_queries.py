@@ -16,11 +16,10 @@ from amorphous_mapreduce_spark.operators.kmeans import (
     cluster_sizes,
     kmeans_assign,
 )
-from amorphous_mapreduce_spark.queries_registry import register
-from amorphous_mapreduce_spark.sources import load_table
 
-K = 8
-
+# Shared with similarity_queries' IVF oracle, and DEFINED BEFORE the
+# queries_registry import so that a partial import of this module during
+# the registry's circular chain already has them (see dedup_queries).
 _QD = "list_transform(q.qv, x -> CAST(x AS DOUBLE))"
 
 
@@ -54,6 +53,12 @@ def _centroid_cte(name: str, assigns: str) -> str:
     ) GROUP BY cell
 )
 """
+
+
+from amorphous_mapreduce_spark.queries_registry import register  # noqa: E402
+from amorphous_mapreduce_spark.sources import load_table  # noqa: E402
+
+K = 8
 
 
 KMEANS_ORACLE = (

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from amorphous_mapreduce_spark.functions.hashing import hex_hash64
 from amorphous_mapreduce_spark.functions.intlog import (
-    log2_scaled,
+    log2_scaled_expr,
     log2_scaled_sql,
 )
 from amorphous_mapreduce_spark.queries_registry import register
@@ -95,7 +95,7 @@ def q_weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
         "weight",
         F.expr(
             f"CAST((({_ES_LBITS} - ("
-            + _spark_log2("hm")
+            + log2_scaled_expr("hm")
             + ")) * 1048576) div weight AS BIGINT)"
         ).alias("key_q"),
     )
@@ -107,86 +107,28 @@ def q_weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _spark_log2(expr: str) -> str:
-    from amorphous_mapreduce_spark.functions.intlog import log2_scaled_expr
-
-    return log2_scaled_expr(expr)
-
-
 # --- label-propagation communities -------------------------------------------
 
 LPA_ROUNDS = 3
 
 
-def _lpa_round(i: int) -> str:
-    # MATERIALIZED: each round is referenced by the next round's join.
-    return f"""
-lpa{i} AS MATERIALIZED (
-    SELECT id, lbl FROM (
-        SELECT e.a AS id, l.lbl,
-               ROW_NUMBER() OVER (
-                   PARTITION BY e.a
-                   ORDER BY COUNT(*) DESC, l.lbl) AS rk
-        FROM edges e JOIN lpa{i - 1} l ON l.id = e.b
-        GROUP BY e.a, l.lbl
-    ) WHERE rk = 1
-)"""
-
-
 def _lpa_oracle() -> str:
-    from amorphous_mapreduce_spark.queries.dedup_queries import (
-        _NEARDUP_EDGES_PREFIX,
-    )
+    from amorphous_mapreduce_spark.queries.dedup_queries import lpa_ctes
 
-    return (
-        _NEARDUP_EDGES_PREFIX
-        + ", lpa0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS lbl FROM edges),"
-        + ",".join(_lpa_round(i) for i in range(1, LPA_ROUNDS + 1))
-        + f"""
-SELECT id, lbl AS community FROM lpa{LPA_ROUNDS}
-"""
-    )
+    return lpa_ctes(LPA_ROUNDS)
 
 
-def _lpa_frames(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(pairs, symmetric edges, final LPA labels) — shared by the
-    community listing and the modularity scorecard."""
+def _lpa_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.operators.dedup import minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4).persist()
-    edges = (
-        pairs.select(F.col("qid").alias("a"), F.col("nid").alias("b"))
-        .unionByName(
-            pairs.select(F.col("nid").alias("a"), F.col("qid").alias("b"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = edges.select(F.col("a").alias("id")).distinct().select(
-        "id", F.col("id").alias("lbl")
-    )
-    wv = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lbl"))
-    for _ in range(LPA_ROUNDS):
-        votes = (
-            edges.join(
-                labels.select(F.col("id").alias("b"), "lbl"), "b"
-            )
-            .groupBy(F.col("a").alias("id"), "lbl")
-            .agg(F.count("*").alias("c"))
-        )
-        labels = (
-            votes.withColumn("rk", F.row_number().over(wv))
-            .filter(F.col("rk") == 1)
-            .select("id", "lbl")
-            .localCheckpoint()
-        )
-    return pairs, edges, labels
+    return minhash_lsh_pairs(docs, num_hashes=16, band_bits=4)
 
 
-@register("lpa_communities", _lpa_oracle())
+@register(
+    "lpa_communities",
+    _lpa_oracle() + f"\nSELECT id, label AS community FROM l{LPA_ROUNDS}\n",
+)
 def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-propagation communities over the MinHash near-dup graph:
     each edge-incident doc adopts the MAJORITY label among its neighbors
@@ -200,24 +142,19 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round one keyed edge join + a (node, label) hash
     aggregate + a per-node top-1 window — linear in edges;
     localCheckpoint per round stops lineage re-expansion."""
-    _, _, labels = _lpa_frames(spark, sf_dir)
-    return labels.select("id", F.col("lbl").alias("community"))
+    from amorphous_mapreduce_spark.operators.graph import label_propagation
+
+    return label_propagation(_lpa_pairs(spark, sf_dir), n_rounds=LPA_ROUNDS)
 
 
 # --- modularity of the LPA partition ------------------------------------------
 
 
 def _modularity_oracle() -> str:
-    from amorphous_mapreduce_spark.queries.dedup_queries import (
-        _NEARDUP_EDGES_PREFIX,
-    )
-
     return (
-        _NEARDUP_EDGES_PREFIX
-        + ", lpa0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS lbl FROM edges),"
-        + ",".join(_lpa_round(i) for i in range(1, LPA_ROUNDS + 1))
+        _lpa_oracle()
         + f""", comm AS (
-    SELECT id, lbl FROM lpa{LPA_ROUNDS}
+    SELECT id, label AS lbl FROM l{LPA_ROUNDS}
 ), mm AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS m FROM pairs
 ), intra AS (
@@ -252,7 +189,16 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: reuses the LPA rounds (keyed joins), then one intra-edge
     semi-join + one per-community degree aggregate."""
-    pairs, edges, labels = _lpa_frames(spark, sf_dir)
+    from amorphous_mapreduce_spark.operators.graph import (
+        label_propagation,
+        symmetric_edges,
+    )
+
+    pairs = _lpa_pairs(spark, sf_dir).persist()
+    edges = symmetric_edges(pairs)
+    labels = label_propagation(pairs, n_rounds=LPA_ROUNDS).select(
+        "id", F.col("community").alias("lbl")
+    )
     m = pairs.agg(F.count("*").cast("long").alias("m"))
     ca = labels.select(F.col("id").alias("qid"), F.col("lbl").alias("albl"))
     cb = labels.select(F.col("id").alias("nid"), F.col("lbl").alias("blbl"))
@@ -415,7 +361,7 @@ def q_dup_cluster_octaves(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4)
-    clusters = dedup_clusters(docs, pairs, id_col="doc_id")
+    clusters = dedup_clusters(docs, pairs)
     sizes = clusters.groupBy("cluster").agg(F.count("*").alias("sz"))
     return (
         sizes.select(
@@ -587,7 +533,7 @@ def q_lightweight_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wd",
             F.expr(
                 f"CAST((({_LWCS_LBITS} - ("
-                + _spark_log2("hm")
+                + log2_scaled_expr("hm")
                 + ")) * 1048576) div w_q AS BIGINT)"
             ).alias("key_q"),
         )

@@ -21,6 +21,11 @@ from amorphous_mapreduce_spark.operators.similarity import (
     lsh_topk,
 )
 from amorphous_mapreduce_spark.queries_registry import register
+from amorphous_mapreduce_spark.queries.kmeans_queries import (
+    _QD,
+    _assign_cte,
+    _centroid_cte,
+)
 from amorphous_mapreduce_spark.sources import load_table
 
 _DOT = "list_dot_product({a}.embedding::DOUBLE[], {b}.embedding::DOUBLE[])"
@@ -165,41 +170,6 @@ planes AS (
 # kmeans_queries.KMEANS_ORACLE, at the ADAPTIVE k = adaptive_cells(n)
 # ≈ √n — round 8), then cell ranking by k-means'
 # exact argmax(q·c − |c|²/2), 4 probed cells, exact cosine re-rank.
-_IVF_QD = "list_transform(q.qv, x -> CAST(x AS DOUBLE))"
-
-
-def _ivf_km_assign_cte(name: str, cents: str, src: str = "q") -> str:
-    return f"""
-{name} AS (
-    SELECT id, qv, cell FROM (
-        SELECT q.id, q.qv, s.cell,
-               ROW_NUMBER() OVER (
-                   PARTITION BY q.id
-                   ORDER BY (list_dot_product({_IVF_QD}, s.cv)
-                             - list_dot_product(s.cv, s.cv) / 2) DESC,
-                            s.cell
-               ) AS rk
-        FROM {src} q, {cents} s
-    ) WHERE rk = 1
-)
-"""
-
-
-def _ivf_km_centroid_cte(name: str, assigns: str) -> str:
-    return f"""
-{name} AS (
-    SELECT cell, list(m ORDER BY dim) AS cv FROM (
-        SELECT cell, dim, CAST(SUM(v) AS DOUBLE) / COUNT(*) AS m
-        FROM (SELECT {assigns}.cell,
-                     generate_subscripts({assigns}.qv, 1) AS dim,
-                     unnest({assigns}.qv) AS v
-              FROM {assigns})
-        GROUP BY cell, dim
-    ) GROUP BY cell
-)
-"""
-
-
 _IVF_TRAIN_CTES = (
     f"""
 q AS MATERIALIZED (
@@ -236,13 +206,13 @@ q AS MATERIALIZED (
         FROM qtrain
     ), ivfk WHERE seedrk <= ivfk.k
 ),"""
-    + _ivf_km_assign_cte("ivfa0", "ivfkseeds", src="qtrain")
+    + _assign_cte("ivfa0", "ivfkseeds", src="qtrain")
     + ","
-    + _ivf_km_centroid_cte("ivfcent1", "ivfa0")
+    + _centroid_cte("ivfcent1", "ivfa0")
     + ","
-    + _ivf_km_assign_cte("ivfa1", "ivfcent1", src="qtrain")
+    + _assign_cte("ivfa1", "ivfcent1", src="qtrain")
     + ","
-    + _ivf_km_centroid_cte("ivfcent2", "ivfa1")
+    + _centroid_cte("ivfcent2", "ivfa1")
 )
 
 IVF_CTES = (
@@ -251,7 +221,7 @@ IVF_CTES = (
     SELECT q.id, s.cell,
            ROW_NUMBER() OVER (
                PARTITION BY q.id
-               ORDER BY (list_dot_product({_IVF_QD}, s.cv)
+               ORDER BY (list_dot_product({_QD}, s.cv)
                          - list_dot_product(s.cv, s.cv) / 2) DESC, s.cell
            ) AS rk
     FROM q, ivfcent2 s
@@ -1066,7 +1036,7 @@ PROBE_SWEEP_CTES = (
     SELECT q.id, s.cell,
            ROW_NUMBER() OVER (
                PARTITION BY q.id
-               ORDER BY (list_dot_product({_IVF_QD}, s.cv)
+               ORDER BY (list_dot_product({_QD}, s.cv)
                          - list_dot_product(s.cv, s.cv) / 2) DESC, s.cell
            ) AS rk
     FROM q, ivfcent2 s

@@ -410,16 +410,14 @@ def q_cms_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         _word_counts,
     )
 
-    tf = _word_counts(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text"
-    ).persist()
+    tf = _word_counts(load_table(spark, sf_dir, "documents")).persist()
     outs = []
     for w in _SWEEP_WIDTHS:
-        cells = _cells_from_tf(tf, 4, w)
+        cells = _cells_from_tf(tf, w)
         wb = tf.select(
             "word",
             F.col("c").alias("exact_count"),
-            _depth_rows(4, w).alias("db"),
+            _depth_rows(w).alias("db"),
         ).select("word", "exact_count", F.col("db.depth"), F.col("db.bucket"))
         est = (
             wb.join(F.broadcast(cells), ["depth", "bucket"])

@@ -33,7 +33,7 @@ GROUP BY window_start, window_end, event_type
 def q_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1h event-time windows (streaming op in batch mode):
     window starts align with date_trunc('hour')."""
-    return windowed_event_stats(load_table(spark, sf_dir, "events"), window="1 hour")
+    return windowed_event_stats(load_table(spark, sf_dir, "events"))
 
 
 SESSION_WINDOW_ORACLE = """
@@ -66,7 +66,7 @@ GROUP BY user_id, session_id
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Built-in session_window (gap 30m) cross-checked against the
     relational lag+cumsum sessionisation: session_end = last event + gap."""
-    return sessionized_event_counts(load_table(spark, sf_dir, "events"), gap="30 minutes")
+    return sessionized_event_counts(load_table(spark, sf_dir, "events"))
 
 
 SLIDING_ORACLE = """
@@ -92,7 +92,7 @@ def q_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows) — the hopping-window streaming aggregate in batch mode;
     oracle expands the overlap with an unnest of the two slide offsets."""
     return windowed_event_stats(
-        load_table(spark, sf_dir, "events"), window="1 hour", slide="30 minutes"
+        load_table(spark, sf_dir, "events"), slide="30 minutes"
     )
 
 

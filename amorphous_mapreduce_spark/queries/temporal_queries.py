@@ -35,7 +35,7 @@ def q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     signups = ev.filter(F.col("event_type") == "signup").select(
         "user_id", "ts", "value"
     )
-    return asof_join(purchases, signups, on="ts", by="user_id", right_cols=("value",))
+    return asof_join(purchases, signups)
 
 
 RANGE_ORACLE = """
@@ -71,7 +71,7 @@ def q_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("end", F.col("start") + F.expr("INTERVAL 90 MINUTES"))
     )
     return (
-        range_join(ev, intervals, ts_col="ts", bucket="1 hour")
+        range_join(ev, intervals, bucket="1 hour")
         .groupBy("interval_id")
         .agg(
             F.count("*").alias("n_events"),
@@ -153,9 +153,6 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     return asof_join(
         views,
         purchases,
-        on="ts",
-        by="user_id",
-        right_cols=("value",),
         direction="forward",
         tolerance_us=86_400_000_000,
     )
@@ -322,7 +319,6 @@ def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases,
         errors,
         on="us",
-        by="user_id",
         right_cols=("value",),
         tolerance_us=43_200_000_000,
     )

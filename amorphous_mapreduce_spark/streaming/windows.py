@@ -17,22 +17,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_event_stats(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Tumbling/sliding event-time window stats per event_type.
+def windowed_event_stats(events: DataFrame, slide: str | None = None) -> DataFrame:
+    """Tumbling (or, with ``slide``, sliding) 1-hour event-time window
+    stats per event_type.
 
-    [window_start, window_end, event_type, n_events, sum_value]. Late rows
-    beyond ``watermark`` are dropped (state stays bounded).
+    [window_start, window_end, event_type, n_events, sum_value]. Rows
+    later than the 30-minute watermark are dropped (state stays bounded).
     """
     win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
+        F.window("ts", "1 hour", slide) if slide else F.window("ts", "1 hour")
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "30 minutes")
         .groupBy(win.alias("w"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
@@ -48,20 +44,17 @@ def windowed_event_stats(
     )
 
 
-def sessionized_event_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Per-user session windows (gap-based) with event counts.
+def sessionized_event_counts(events: DataFrame) -> DataFrame:
+    """Per-user session windows (30-minute gap, 1-hour watermark) with
+    event counts.
 
     [user_id, session_start, session_end, n_events] via the built-in
     session_window — dynamic-gap stateful windows, the streaming-native
     form of the reference's bounded-buffer wave accumulation.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sw"), F.col("user_id"))
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",

@@ -141,7 +141,7 @@ def test_prefix_pairs_match_brute_force(spark):
     }
     pref = {
         (r["qid"], r["nid"]): (r["inter"], r["union_sz"])
-        for r in jaccard_prefix_pairs(docs, threshold=0.5).collect()
+        for r in jaccard_prefix_pairs(docs).collect()
     }
     assert pref == brute
     assert (1, 3) in pref  # exact dup survives at any threshold
@@ -155,7 +155,7 @@ def test_prefix_pairs_prunes_hot_shingle(spark):
     # index which fans out to C(10,2) candidates.
     rows = [(i, f"common stop word u{i}x u{i}y") for i in range(10)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    assert jaccard_prefix_pairs(docs, threshold=0.5).count() == 0
+    assert jaccard_prefix_pairs(docs).count() == 0
 
 
 def test_snm_blocking_scorecard(spark):

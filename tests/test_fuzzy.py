@@ -36,7 +36,7 @@ def test_fuzzy_pairs_match_brute_force_including_short_strings(spark):
     ]
     got = {
         (r.a, r.b, r.dist)
-        for r in fuzzy_pairs(_vals(spark, vals), "v", max_dist=2).collect()
+        for r in fuzzy_pairs(_vals(spark, vals), "v").collect()
     }
     assert got == _brute(spark, vals, 2)
     assert ("ab", "ax", 1) in got          # found via the short block
@@ -46,5 +46,5 @@ def test_fuzzy_pairs_match_brute_force_including_short_strings(spark):
 def test_fuzzy_pairs_dedupes_value_occurrences(spark):
     # repeated rows of the same value must not produce self-pairs or dups
     vals = ["same name", "same name", "same nam", "same nam"]
-    got = fuzzy_pairs(_vals(spark, vals), "v", max_dist=2).collect()
+    got = fuzzy_pairs(_vals(spark, vals), "v").collect()
     assert len(got) == 1 and got[0].dist == 1

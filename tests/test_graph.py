@@ -30,7 +30,7 @@ def test_connected_components_deep_chain_converges(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["qid", "nid"]
     )
-    cc = connected_components(edges, max_iter=20)
+    cc = connected_components(edges)
     assert cc.select("component").distinct().count() == 1
 
 
@@ -113,11 +113,11 @@ def test_kcore_is_converged_true_2core(spark):
     pairs = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4).persist()
     got = {
         (r.id, r.core_deg)
-        for r in kcore(pairs, k=KCORE_K, n_rounds=KCORE_ROUNDS).collect()
+        for r in kcore(pairs, n_rounds=KCORE_ROUNDS).collect()
     }
     more = {
         (r.id, r.core_deg)
-        for r in kcore(pairs, k=KCORE_K, n_rounds=KCORE_ROUNDS + 1).collect()
+        for r in kcore(pairs, n_rounds=KCORE_ROUNDS + 1).collect()
     }
     assert got == more
     assert all(d >= KCORE_K for _, d in got)

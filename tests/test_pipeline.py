@@ -139,7 +139,7 @@ def test_decontaminate_flags_overlapping_training_docs(spark):
     )
     out = {
         r.id: r.n_shared
-        for r in decontaminate(docs, "eval", min_shared=3, shingle_size=3).collect()
+        for r in decontaminate(docs, "eval", min_shared=3).collect()
     }
     assert out == {1: 4}
     # a stricter threshold drops it; eval docs are never flagged

@@ -7,10 +7,14 @@ cached sub-plan counts once however many consumers read it.
 
 from __future__ import annotations
 
+import os
+import sys
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from amorphous_mapreduce_spark.plans.trace import walk
+from tools import plan_audit
 from tools.plan_audit import ALLOW, audit_plan
 
 
@@ -62,3 +66,13 @@ def test_allowlisted_flag_goes_to_notes(spark):
     unlisted = _audit("synthetic", _non_equi_join(spark))
     assert unlisted["unexplained"] == {"BroadcastNestedLoopJoin": 1}
     assert unlisted["notes"] == []
+
+
+def test_subset_run_writes_no_file(spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """With query names the audit prints those queries and writes nothing:
+    only a full run writes PLAN_AUDIT.json, so no row in it goes stale."""
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(sys, "argv", ["plan_audit.py", sf_dir, "wordcount"])
+    assert plan_audit.main() == 0
+    assert os.listdir(tmp_path) == []
+    assert "wordcount" in capsys.readouterr().out

@@ -16,6 +16,13 @@ not keep a def alive. The roots are:
 
 A def only tests reach is deleted, or named in ``ALLOWLIST`` with a reason.
 An allowlist entry that is reached, or that names no def, is stale and fails.
+
+One level down, every defaulted parameter of a top-level package function
+must be passed a value other than its default, by keyword or by position,
+at one name-matched call site at least. The call sites are the files the
+call graph scans plus ``tests/`` and ``perfbench/tests``, and "other" means
+source text other than the default's. A parameter with one value in use is
+a constant: write it into the body, or name it in ``PARAM_ALLOWLIST``.
 """
 
 from __future__ import annotations
@@ -48,6 +55,17 @@ ALLOWLIST = {
     "plans.observe.observed_stage": (
         "ROADMAP item 5 decides between candidate funnels on it and deletion"
     ),
+}
+
+# "<module path>.<function>.<parameter>" -> why its default is the only
+# value any caller passes, yet it stays a parameter.
+_LSH_SHAPE = (
+    "the near-dup graph's LSH shape, spelled out as num_hashes=16, "
+    "band_bits=4 by the queries and by the tests that replay them"
+)
+PARAM_ALLOWLIST = {
+    "operators.dedup.minhash_lsh_pairs.num_hashes": _LSH_SHAPE,
+    "operators.dedup.minhash_lsh_pairs.band_bits": _LSH_SHAPE,
 }
 
 
@@ -157,3 +175,87 @@ def test_allowlist_is_not_stale():
     now_reached = sorted(set(ALLOWLIST) & reached)
     assert now_reached == [], f"allowlisted defs that are now reached: {now_reached}"
     assert all(reason.strip() for reason in ALLOWLIST.values())
+
+
+def _call_sites() -> dict[str, list[ast.Call]]:
+    """Function name -> every call of that name (``f(...)`` or ``x.f(...)``)
+    in the package, ``bench.py``, ``__spark_entry__.py``, ``tools/``,
+    ``perfbench/`` and ``tests/``."""
+    files = [
+        *_py_files(os.path.join(REPO_ROOT, PKG)),
+        os.path.join(REPO_ROOT, "bench.py"),
+        os.path.join(REPO_ROOT, "__spark_entry__.py"),
+        *_py_files(os.path.join(REPO_ROOT, "tools")),
+        *_py_files(os.path.join(REPO_ROOT, "perfbench")),
+        *_py_files(os.path.join(REPO_ROOT, "tests")),
+    ]
+    calls: dict[str, list[ast.Call]] = {}
+    for path in files:
+        for node in ast.walk(_parse(path)):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            if isinstance(fn, ast.Name):
+                calls.setdefault(fn.id, []).append(node)
+            elif isinstance(fn, ast.Attribute):
+                calls.setdefault(fn.attr, []).append(node)
+    return calls
+
+
+def _passed(call: ast.Call, positional: list[str], param: str) -> list[str]:
+    """Source texts ``call`` passes to ``param``; a ``*`` or ``**`` splat
+    counts as passing anything."""
+    out = []
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return ["*"]
+        if i < len(positional) and positional[i] == param:
+            out.append(ast.unparse(arg))
+    for kw in call.keywords:
+        if kw.arg is None:
+            out.append("**")
+        elif kw.arg == param:
+            out.append(ast.unparse(kw.value))
+    return out
+
+
+def defaulted_params() -> dict[str, bool]:
+    """"<module>.<function>.<parameter>" -> whether a call site passes it a
+    value other than its default, for every defaulted parameter of every
+    top-level package function."""
+    calls = _call_sites()
+    pkg_dir = os.path.join(REPO_ROOT, PKG)
+    out: dict[str, bool] = {}
+    for path in _py_files(pkg_dir):
+        rel = os.path.relpath(path, pkg_dir)[: -len(".py")].replace(os.sep, ".")
+        for stmt in _parse(path).body:
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = stmt.args
+            positional = [p.arg for p in a.posonlyargs + a.args]
+            first = len(positional) - len(a.defaults)
+            defaults = dict(zip(positional[first:], a.defaults))
+            defaults |= {
+                p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            }
+            for param, default in defaults.items():
+                text = ast.unparse(default)
+                out[f"{rel}.{stmt.name}.{param}"] = any(
+                    passed != text
+                    for call in calls.get(stmt.name, ())
+                    for passed in _passed(call, positional, param)
+                )
+    return out
+
+
+def test_every_defaulted_parameter_is_set():
+    params = defaulted_params()
+    unset = sorted(k for k, is_set in params.items() if not is_set)
+    unlisted = [k for k in unset if k not in PARAM_ALLOWLIST]
+    assert unlisted == [], (
+        "defaulted parameters no call site sets to another value; write the "
+        f"default into the body or allowlist them with a reason: {unlisted}"
+    )
+    stale = sorted(k for k in PARAM_ALLOWLIST if params.get(k, True))
+    assert stale == [], f"allowlisted parameters that are set or gone: {stale}"
+    assert all(reason.strip() for reason in PARAM_ALLOWLIST.values())

@@ -31,11 +31,11 @@ def _run_stream_over_parquet(spark, src_df, transform, tmp_path, name, mode="app
 
 def test_windowed_event_stats_batch_stream_parity(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
-    batch = windowed_event_stats(events, window="1 hour").toPandas()
+    batch = windowed_event_stats(events).toPandas()
     streamed = _run_stream_over_parquet(
         spark,
         events,
-        lambda s: windowed_event_stats(s, window="1 hour"),
+        lambda s: windowed_event_stats(s),
         tmp_path,
         "win_stats",
     ).toPandas()
@@ -51,7 +51,7 @@ def test_windowed_event_stats_batch_stream_parity(spark, sf_dir, tmp_path):
 
 def test_sessionized_event_counts_batch(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
-    sess = sessionized_event_counts(events, gap="30 minutes")
+    sess = sessionized_event_counts(events)
     rows = sess.collect()
     assert rows
     # session windows per user never overlap
@@ -99,7 +99,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src + "/*")
     )
-    out = windowed_event_stats(stream, window="1 hour", watermark="30 minutes")
+    out = windowed_event_stats(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("late_test")
@@ -153,12 +153,12 @@ def test_stream_static_join(spark, sf_dir, tmp_path):
 def test_sliding_window_stats_batch_stream_parity(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
     batch = windowed_event_stats(
-        events, window="1 hour", slide="30 minutes"
+        events, slide="30 minutes"
     ).toPandas()
     streamed = _run_stream_over_parquet(
         spark,
         events,
-        lambda s: windowed_event_stats(s, window="1 hour", slide="30 minutes"),
+        lambda s: windowed_event_stats(s, slide="30 minutes"),
         tmp_path,
         "slide_stats",
     ).toPandas()

@@ -39,9 +39,7 @@ def test_asof_join_semantics(trades_quotes):
     trades, quotes = trades_quotes
     got = {
         r["event_id"]: (r["asof_ts"], r["asof_value"])
-        for r in asof_join(
-            trades, quotes, on="ts", by="user_id", right_cols=("value",)
-        ).collect()
+        for r in asof_join(trades, quotes).collect()
     }
     assert got[1] == (_ts("2024-01-01 10:00:00"), 1.0)  # latest <= 10:00:05
     assert got[2] == (_ts("2024-01-01 10:00:20"), 3.0)  # equal ts visible
@@ -52,7 +50,7 @@ def test_asof_join_semantics(trades_quotes):
 
 def test_asof_join_preserves_left_columns(trades_quotes):
     trades, quotes = trades_quotes
-    out = asof_join(trades, quotes, on="ts", by="user_id", right_cols=("value",))
+    out = asof_join(trades, quotes)
     assert out.columns == ["event_id", "user_id", "ts", "value", "asof_ts", "asof_value"]
 
 
@@ -133,9 +131,6 @@ def test_asof_join_matches_pandas_merge_asof(spark):
         asof_join(
             spark.createDataFrame(left),
             spark.createDataFrame(right),
-            on="ts",
-            by="user_id",
-            right_cols=("value",),
         )
         .toPandas()
         .sort_values("event_id", ignore_index=True)
@@ -199,7 +194,7 @@ def test_asof_duplicate_right_timestamps_deterministic(spark):
         ["user_id", "ts", "value"],
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     vals = [
-        asof_join(left, right, on="ts", by="user_id", right_cols=("value",))
+        asof_join(left, right)
         .collect()[0]["asof_value"]
         for _ in range(3)
     ]
@@ -275,9 +270,6 @@ def test_asof_forward_with_tolerance_matches_pandas(spark):
         asof_join(
             spark.createDataFrame(left),
             spark.createDataFrame(right),
-            on="ts",
-            by="user_id",
-            right_cols=("value",),
             direction="forward",
             tolerance_us=tol_s * 1_000_000,
         )
@@ -368,7 +360,7 @@ def test_asof_nearest_tie_and_tolerance(spark):
     out = {
         r.id: r
         for r in asof_nearest_join(
-            left, right, on="us", by="user_id", right_cols=("v",),
+            left, right, on="us", right_cols=("v",),
             tolerance_us=100,
         ).collect()
     }
@@ -407,7 +399,6 @@ def test_asof_nearest_matches_pandas_merge_asof(spark):
             spark.createDataFrame(left_pd),
             spark.createDataFrame(right_pd),
             on="us",
-            by="user_id",
             right_cols=("v",),
             tolerance_us=5000,
         )

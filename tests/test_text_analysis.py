@@ -55,7 +55,7 @@ def test_fingerprints_shared_for_shared_text(spark):
         [(1, base), (2, base + " extra tail words here"), (3, "unrelated words only three four five")],
         ["doc_id", "text"],
     )
-    fps = doc_fingerprints(docs, window=4)
+    fps = doc_fingerprints(docs)
     f1 = {r["fp"] for r in fps.filter(F.col("id") == 1).collect()}
     f2 = {r["fp"] for r in fps.filter(F.col("id") == 2).collect()}
     f3 = {r["fp"] for r in fps.filter(F.col("id") == 3).collect()}

@@ -25,6 +25,9 @@ Usage::
 
     python tools/plan_audit.py [sf_dir] [query ...]
 
+With query names it audits and prints only those queries and writes
+nothing; only a full run writes ``PLAN_AUDIT.json``.
+
 Plans are built (not executed) at the given SF — builders that probe or
 iterate (CC, k-means) do run their bounded loops, so the default SF is
 the smallest fixture.
@@ -1148,7 +1151,6 @@ def main() -> int:
         finally:
             release(spark)  # the builders' eager jobs may cache frames
         r = audit_plan(name, nodes)
-        r["sf_dir"] = sf_dir  # per-row provenance (ADVICE_r04 item 4)
         results.append(r)
         if r["unexplained"]:
             n_red += 1
@@ -1164,38 +1166,12 @@ def main() -> int:
             )
 
     if only:
-        # Incremental mode: merge the subset's fresh rows into the
-        # committed PLAN_AUDIT.json (replacing any stale rows for the
-        # same queries) so per-batch audits keep the coverage gate
-        # (tests/test_gates.py) satisfiable without a full re-run.
-        try:
-            with open("PLAN_AUDIT.json") as f:
-                prior = json.load(f)
-        except FileNotFoundError:
-            prior = {"sf_dir": sf_dir, "results": []}
-        audited = {r["query"] for r in results}
-        # drop stale rows: renamed/deleted queries must not linger.
-        # Carried-over rows keep their own sf_dir — the subset run's sf_dir
-        # must not be stamped onto plans captured at another SF.
-        carried = [
-            r
-            for r in prior["results"]
-            if r["query"] not in audited and r["query"] in QUERIES
-        ]
-        if carried and any(r.get("sf_dir") != sf_dir for r in carried):
-            print(
-                f"note: merged rows span multiple sf_dirs (subset run at"
-                f" {sf_dir}); per-row sf_dir records provenance"
-            )
-        results = carried + results
-        results.sort(key=lambda r: r["query"])
-        n_red = sum(
-            1 for r in results if r.get("unexplained") or r.get("error")
-        )
-    row_sfs = sorted({r.get("sf_dir") for r in results if r.get("sf_dir")})
+        # A subset run only prints: PLAN_AUDIT.json is written by full runs
+        # alone, so none of its rows is older than the others.
+        print(f"\n{len(results)} queries audited, {n_red} red")
+        return 1 if n_red else 0
     summary = {
-        "sf_dir": sf_dir if not only else None,
-        "sf_dirs": row_sfs,
+        "sf_dir": sf_dir,
         "n_queries": len(results),
         "n_red": n_red,
         "results": results,
