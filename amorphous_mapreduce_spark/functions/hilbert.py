@@ -57,13 +57,13 @@ def hilbert_rounds(n_bits: int, intdiv: str) -> list[HilbertRound]:
     return rounds
 
 
-def hilbert_cte_chain(n_bits: int, base_cte: str, passthrough: str) -> tuple[str, str]:
-    """DuckDB chained-CTE text computing hd from (hx, hy) in ``base_cte``
+def hilbert_cte_chain(n_bits: int, passthrough: str) -> tuple[str, str]:
+    """DuckDB chained-CTE text computing hd from (hx, hy) in CTE ``pts``
     (which must expose hx, hy, hd=0 and the passthrough columns).
     Returns (cte_sql_fragment, final_cte_name)."""
     rounds = hilbert_rounds(n_bits, "//")
     parts = []
-    prev = base_cte
+    prev = "pts"
     for i, r in enumerate(rounds):
         name = f"hb0{i + 1}"
         parts.append(

@@ -124,7 +124,7 @@ def incremental_exact_dedup(new_docs: DataFrame, old_docs: DataFrame) -> DataFra
     content, then a left join marks each new document. is_dup is an int
     flag (0/1) so the driver's value hash is engine-stable.
     """
-    digest = md5_hex(normalize_text("text"))
+    digest = md5_hex(normalize_text())
     old = (
         old_docs.select(digest.alias("content_hash"), F.col("doc_id").alias("_oid"))
         .groupBy("content_hash")

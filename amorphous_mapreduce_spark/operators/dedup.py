@@ -33,11 +33,10 @@ from amorphous_mapreduce_spark.functions.hashing import hex_hash64
 MINHASH_P = 2_147_483_647
 
 
-def normalize_text(col: Column | str) -> Column:
-    """Lowercase + whitespace-collapse + trim: the canonical form every
-    dedup variant hashes. Mirrors W4/W5 normalisation semantics."""
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    return F.regexp_replace(F.trim(c), r"\s+", " ")
+def normalize_text() -> Column:
+    """Lowercase + whitespace-collapse + trim of ``text``: the canonical
+    form every dedup variant hashes. Mirrors W4/W5 normalisation semantics."""
+    return F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -48,7 +47,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     """
     return (
         docs.select(
-            F.col("doc_id"), F.md5(normalize_text("text")).alias("content_hash")
+            F.col("doc_id"), F.md5(normalize_text()).alias("content_hash")
         )
         .groupBy("content_hash")
         .agg(
@@ -72,17 +71,17 @@ def tokenized(docs: DataFrame) -> DataFrame:
         docs.repartition(nparts)
         .select(
             F.col("doc_id").alias("id"),
-            F.posexplode(F.split(normalize_text("text"), " ")).alias("pos", "word"),
+            F.posexplode(F.split(normalize_text(), " ")).alias("pos", "word"),
         )
         .filter(F.length("word") > 0)
     )
 
 
-def word_array(text_col: Column | str) -> Column:
-    """Array of non-empty tokens of the normalised text (W3-W5 semantics,
-    as an array column instead of exploded rows)."""
+def word_array() -> Column:
+    """Array of non-empty tokens of the normalised ``text`` (W3-W5
+    semantics, as an array column instead of exploded rows)."""
     return F.filter(
-        F.split(normalize_text(text_col), " "), lambda w: F.length(w) > 0
+        F.split(normalize_text(), " "), lambda w: F.length(w) > 0
     )
 
 
@@ -129,7 +128,7 @@ def _gram_hashes(docs: DataFrame, shingle_size: int = 3) -> DataFrame:
         # is a separate projection so the tokenise runs ONCE per row (see
         # shingle_grams docstring).
         docs.repartition(nparts)
-        .select(F.col("doc_id").alias("id"), word_array("text").alias("_ws"))
+        .select(F.col("doc_id").alias("id"), word_array().alias("_ws"))
         .select(
             "id",
             F.explode(shingle_grams(F.col("_ws"), shingle_size)).alias("gram"),
@@ -501,20 +500,20 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 12) -> DataFrame:
     )
 
 
-def simhash_band_spec(bits: int, nbands: int) -> list[tuple[int, int, int]]:
-    """Pigeonhole band layout over a `bits`-wide fingerprint: disjoint
-    (band_idx, offset, width) triples, first `bits % nbands` bands one
-    bit wider. Shared by the exact banded join, the capped top-m scale
+def simhash_band_spec(nbands: int) -> list[tuple[int, int, int]]:
+    """Pigeonhole band layout over the 60-bit SimHash fingerprint:
+    disjoint (band_idx, offset, width) triples, first `60 % nbands` bands
+    one bit wider. Shared by the exact banded join, the capped top-m scale
     path, and their SQL oracles (identical widths on both engines)."""
-    if nbands > bits:
+    if nbands > 60:
         # A zero-width band would put EVERY doc in one global bucket
         # (mask 0) — under a cap only the `cap` lowest-hash ids would
         # ever be candidates there, silently degrading recall. The
-        # pigeonhole guarantee needs only max_hamming+1 <= bits bands;
-        # callers wanting max_hamming >= bits get the full-width layout
+        # pigeonhole guarantee needs only max_hamming+1 <= 60 bands;
+        # callers wanting max_hamming >= 60 get the full-width layout
         # (every band still sound, recall unchanged) (ADVICE_r06).
-        nbands = bits
-    base, extra = divmod(bits, nbands)
+        nbands = 60
+    base, extra = divmod(60, nbands)
     spec = []
     off = 0
     for bi in range(nbands):
@@ -553,7 +552,7 @@ def simhash_capped_topm(
     corpus on both engines.
     """
     fp = simhash(docs)
-    spec = simhash_band_spec(60, max_hamming + 1)
+    spec = simhash_band_spec(max_hamming + 1)
     band_arr = F.array(
         *[
             F.struct(

@@ -40,22 +40,23 @@ QUANT = 1000
 KM_TRAIN_N = 4096
 
 
-def _quantize(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _quantize(emb: DataFrame) -> DataFrame:
     qv = F.transform(
-        F.col(vec_col), lambda x: F.round(x * QUANT).cast("long")
+        F.col("embedding"), lambda x: F.round(x * QUANT).cast("long")
     )
-    return emb.select(F.col(id_col).alias("id"), qv.alias("qv"))
+    return emb.select(F.col("vec_id").alias("id"), qv.alias("qv"))
 
 
-def _score(qv_col: str, cv_col: str):
-    """argmax objective: q·c − |c|²/2 (equivalent to argmin distance)."""
+def _score():
+    """argmax objective over ``qv``/``cv``: q·c − |c|²/2 (equivalent to
+    argmin distance)."""
     dot = F.aggregate(
-        F.zip_with(qv_col, cv_col, lambda x, y: x.cast("double") * y),
+        F.zip_with("qv", "cv", lambda x, y: x.cast("double") * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
     c2 = F.aggregate(
-        F.zip_with(cv_col, cv_col, lambda x, y: x * y),
+        F.zip_with("cv", "cv", lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
@@ -66,7 +67,7 @@ def _assign(q: DataFrame, centroids: DataFrame) -> DataFrame:
     w = Window.partitionBy("id").orderBy(F.desc("_s"), F.asc("cell"))
     return (
         q.crossJoin(F.broadcast(centroids))
-        .select("id", "qv", "cell", _score("qv", "cv").alias("_s"))
+        .select("id", "qv", "cell", _score().alias("_s"))
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
         .select("id", "qv", "cell")
@@ -94,7 +95,7 @@ def kmeans_fit(
     size the sample is the whole corpus and results are identical to
     unsampled training. The oracle replays the same ORDER BY hash LIMIT
     n sample, so sampled training stays hash-checkable."""
-    q = _quantize(emb, "vec_id", "embedding").persist()
+    q = _quantize(emb).persist()
     if train_sample is None:
         train = q
     else:

@@ -52,7 +52,7 @@ def positioned_shingles(docs: DataFrame, shingle_size: int = 6) -> DataFrame:
     nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return (
         docs.repartition(nparts)
-        .select(F.col("doc_id").alias("id"), word_array("text").alias("_ws"))
+        .select(F.col("doc_id").alias("id"), word_array().alias("_ws"))
         .select(
             "id",
             F.posexplode(shingle_grams(F.col("_ws"), shingle_size)).alias(

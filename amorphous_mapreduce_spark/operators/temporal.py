@@ -202,30 +202,29 @@ def gap_fill_daily(events: DataFrame) -> DataFrame:
 def asof_nearest_join(
     left: DataFrame,
     right: DataFrame,
-    on: str,
     right_cols: tuple[str, ...] = (),
     tolerance_us: int | None = None,
 ) -> DataFrame:
     """Nearest-direction as-of join (pandas merge_asof direction=
-    'nearest'): each left row gets the right row minimizing |right.on −
-    left.on| within the same ``user_id``, preferring the BACKWARD match
-    on exact distance ties. ``on`` must be an integer column (e.g.
-    epoch microseconds) so the distance is exact integer arithmetic.
+    'nearest'): each left row gets the right row minimizing |right.us −
+    left.us| within the same ``user_id``, preferring the BACKWARD match
+    on exact distance ties. ``us`` is an integer column (epoch
+    microseconds), so the distance is exact integer arithmetic.
 
     Same scale shape as asof_join: ONE shuffle on the key, two ordered
     carries inside the same window partition (ascending for the
     backward candidate, descending for the forward candidate), then a
-    scalar chooser — never a row-pair blowup. Duplicate right (user_id, on)
+    scalar chooser — never a row-pair blowup. Duplicate right (user_id, us)
     rows resolve like asof_join: the backward carry keeps the greatest
     payload tuple, the forward carry the smallest.
     """
     lcols = left.columns
     l = left.withColumn("_side", F.lit(1))
     r = right.select(
-        F.col("user_id"), F.col(on), *[F.col(c) for c in right_cols]
+        F.col("user_id"), F.col("us"), *[F.col(c) for c in right_cols]
     ).withColumn("_side", F.lit(0))
     for c in lcols:
-        if c not in ("user_id", on) and c not in r.columns:
+        if c not in ("user_id", "us") and c not in r.columns:
             r = r.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
     for c in right_cols:
         if c not in l.columns:
@@ -237,20 +236,20 @@ def asof_nearest_join(
     )
     w_b = (
         Window.partitionBy("user_id")
-        .orderBy(F.col(on).asc(), F.col("_side").asc(), payload.asc_nulls_first())
+        .orderBy(F.col("us").asc(), F.col("_side").asc(), payload.asc_nulls_first())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     w_f = (
         Window.partitionBy("user_id")
-        .orderBy(F.col(on).desc(), F.col("_side").asc(), payload.desc_nulls_first())
+        .orderBy(F.col("us").desc(), F.col("_side").asc(), payload.desc_nulls_first())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
 
     def carry(w, name_prefix):
         cols = [
-            F.last(F.when(F.col("_side") == 0, F.col(on)), ignorenulls=True)
+            F.last(F.when(F.col("_side") == 0, F.col("us")), ignorenulls=True)
             .over(w)
-            .alias(f"{name_prefix}_{on}")
+            .alias(f"{name_prefix}_us")
         ]
         cols += [
             F.last(F.when(F.col("_side") == 0, F.col(c)), ignorenulls=True)
@@ -266,12 +265,12 @@ def asof_nearest_join(
         *unioned.columns, *carry(w_b, "_b"), *carry(w_f, "_f")
     ).filter(F.col("_side") == 1)
 
-    d_b = F.col(on) - F.col(f"_b_{on}")
-    d_f = F.col(f"_f_{on}") - F.col(on)
-    b_ok = F.col(f"_b_{on}").isNotNull() & (
+    d_b = F.col("us") - F.col("_b_us")
+    d_f = F.col("_f_us") - F.col("us")
+    b_ok = F.col("_b_us").isNotNull() & (
         F.lit(True) if tolerance_us is None else (d_b <= F.lit(tolerance_us))
     )
-    f_ok = F.col(f"_f_{on}").isNotNull() & (
+    f_ok = F.col("_f_us").isNotNull() & (
         F.lit(True) if tolerance_us is None else (d_f <= F.lit(tolerance_us))
     )
     take_b = b_ok & (~f_ok | (d_b <= d_f))
@@ -279,9 +278,9 @@ def asof_nearest_join(
 
     out_cols = [F.col(c) for c in lcols]
     out_cols.append(
-        F.when(take_b, F.col(f"_b_{on}"))
-        .when(take_f, F.col(f"_f_{on}"))
-        .alias(f"asof_{on}")
+        F.when(take_b, F.col("_b_us"))
+        .when(take_f, F.col("_f_us"))
+        .alias("asof_us")
     )
     for c in right_cols:
         out_cols.append(

@@ -39,7 +39,7 @@ def doc_stats(docs: DataFrame) -> DataFrame:
     stopword_ratio, quality]. ``quality`` is a fixed deterministic formula —
     a stand-in for learned quality classifiers in real pipelines.
     """
-    norm = normalize_text("text")
+    norm = normalize_text()
     n_tokens = F.size(F.split(norm, " "))
     n_chars = F.length(norm)
     n_punct = n_chars - F.length(F.regexp_replace(norm, r"[^\w\s]", ""))
@@ -79,7 +79,7 @@ def language_id(docs: DataFrame) -> DataFrame:
     marker hits at all. (An n-gram-frequency heuristic — the classic
     pre-neural langid approach.)
     """
-    toks = F.split(normalize_text("text"), " ")
+    toks = F.split(normalize_text(), " ")
 
     def marker_hits(ws: tuple[str, ...]) -> Column:
         # NB: the lambda must take exactly one parameter — F.filter treats
@@ -108,7 +108,7 @@ def token_counts_bpe(docs: DataFrame) -> DataFrame:
         F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_REGEX), 0)).alias(
             "n_bpe_tokens"
         ),
-        F.size(F.split(normalize_text("text"), " ")).alias("n_word_tokens"),
+        F.size(F.split(normalize_text(), " ")).alias("n_word_tokens"),
     )
 
 
@@ -135,11 +135,11 @@ def doc_fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def term_frequencies(docs: DataFrame, group_col: str, top_k: int = 10) -> DataFrame:
-    """Top-k terms per group (e.g. lang): [group, word, cnt, rnk]."""
+def term_frequencies(docs: DataFrame, top_k: int = 10) -> DataFrame:
+    """Top-k terms per language: [grp, word, cnt, rnk]."""
     toks = docs.select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(normalize_text("text"), " ")).alias("word"),
+        F.col("lang").alias("grp"),
+        F.explode(F.split(normalize_text(), " ")).alias("word"),
     ).filter(F.length("word") > 0)
     counts = toks.groupBy("grp", "word").agg(F.count("*").alias("cnt"))
     w = Window.partitionBy("grp").orderBy(F.desc("cnt"), F.asc("word"))
@@ -162,7 +162,7 @@ def bigram_counts(docs: DataFrame) -> DataFrame:
     nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return (
         docs.repartition(nparts)
-        .select(word_array("text").alias("_ws"))
+        .select(word_array().alias("_ws"))
         .select(F.explode(shingle_grams(F.col("_ws"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("cnt"))

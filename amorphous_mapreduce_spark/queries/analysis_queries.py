@@ -20,10 +20,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 DOC_STATS_ORACLE = f"""
 SELECT doc_id AS id,
        n_tokens, n_chars_norm,
@@ -49,7 +45,7 @@ FROM (
 @register("doc_stats", DOC_STATS_ORACLE)
 def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality stats (length/punct/stopword ratios + score)."""
-    return doc_stats(_docs(spark, sf_dir))
+    return doc_stats(load_table(spark, sf_dir, "documents"))
 
 
 _g = "greatest(s_en, s_de, s_fr, s_es)"
@@ -76,7 +72,7 @@ FROM (
 @register("language_id", LANG_ORACLE)
 def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-marker language heuristic; ties break on lang desc."""
-    return language_id(_docs(spark, sf_dir))
+    return language_id(load_table(spark, sf_dir, "documents"))
 
 
 TOKCOUNT_ORACLE = f"""
@@ -90,7 +86,7 @@ FROM documents
 @register("token_counts", TOKCOUNT_ORACLE)
 def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish regex token counting (LLM token budgeting proxy)."""
-    return token_counts_bpe(_docs(spark, sf_dir))
+    return token_counts_bpe(load_table(spark, sf_dir, "documents"))
 
 
 FINGERPRINT_ORACLE = (
@@ -115,7 +111,7 @@ SELECT DISTINCT id, fp FROM wins WHERE pos <= n - 3
 @register("doc_fingerprints", FINGERPRINT_ORACLE)
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints: distinct 4-window minima of token hashes."""
-    return doc_fingerprints(_docs(spark, sf_dir))
+    return doc_fingerprints(load_table(spark, sf_dir, "documents"))
 
 
 TERMFREQ_ORACLE = f"""
@@ -139,7 +135,7 @@ WHERE rnk <= 10
 @register("term_freq_by_lang", TERMFREQ_ORACLE)
 def q_term_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 terms per lang: per-group count + window top-k."""
-    return term_frequencies(_docs(spark, sf_dir), group_col="lang", top_k=10)
+    return term_frequencies(load_table(spark, sf_dir, "documents"), top_k=10)
 
 
 BIGRAM_ORACLE = (
@@ -159,7 +155,7 @@ GROUP BY bigram
 @register("bigram_counts", BIGRAM_ORACLE)
 def q_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram counts (n-gram stats via lead windows)."""
-    return bigram_counts(_docs(spark, sf_dir))
+    return bigram_counts(load_table(spark, sf_dir, "documents"))
 
 
 IMPORTANCE_ORACLE = f"""
@@ -179,7 +175,7 @@ def q_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixing, replayable on any engine."""
     from amorphous_mapreduce_spark.operators.pipeline import importance_sample
 
-    return importance_sample(_docs(spark, sf_dir), base_rate=0.5)
+    return importance_sample(load_table(spark, sf_dir, "documents"), base_rate=0.5)
 
 
 SCORECARD_ORACLE = f"""
@@ -230,10 +226,10 @@ def q_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.functions.hashing import md5_hex
     from amorphous_mapreduce_spark.operators.dedup import normalize_text
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     stats = doc_stats(docs).select("id", "n_tokens", "quality")
     hashed = docs.select(
-        F.col("doc_id").alias("id"), "source", md5_hex(normalize_text("text")).alias("h")
+        F.col("doc_id").alias("id"), "source", md5_hex(normalize_text()).alias("h")
     )
     keep = hashed.groupBy("h").agg(F.min("id").alias("kid"))
     dup = F.when(F.col("id") != F.col("kid"), 1).otherwise(0)
@@ -306,10 +302,10 @@ def q_quality_dup_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.functions.hashing import md5_hex
     from amorphous_mapreduce_spark.operators.dedup import normalize_text
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     scored = doc_stats(docs).select("id", "quality")
     hashed = docs.select(
-        F.col("doc_id").alias("id"), md5_hex(normalize_text("text")).alias("h")
+        F.col("doc_id").alias("id"), md5_hex(normalize_text()).alias("h")
     )
     keep = hashed.groupBy("h").agg(F.min("id").alias("kid"))
     edges = scored.agg(
@@ -355,8 +351,8 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-key aggregate (langs²)."""
     from pyspark.sql import functions as F
 
-    pred = language_id(_docs(spark, sf_dir)).select("id", "lang_pred")
-    lbl = _docs(spark, sf_dir).select(
+    pred = language_id(load_table(spark, sf_dir, "documents")).select("id", "lang_pred")
+    lbl = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"), F.col("lang").alias("lang_true")
     )
     return (
@@ -416,8 +412,8 @@ def q_langid_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     langs² matrix broadcast-crossed with the class list."""
     from pyspark.sql import functions as F
 
-    pred = language_id(_docs(spark, sf_dir)).select("id", "lang_pred")
-    lbl = _docs(spark, sf_dir).select(
+    pred = language_id(load_table(spark, sf_dir, "documents")).select("id", "lang_pred")
+    lbl = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"), F.col("lang").alias("lang_true")
     )
     cm = (
@@ -526,8 +522,8 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval-loop reduce (src/op.rs:18-35)."""
     from pyspark.sql import functions as F
 
-    pred = language_id(_docs(spark, sf_dir)).select("id", "lang_pred")
-    lbl = _docs(spark, sf_dir).select(
+    pred = language_id(load_table(spark, sf_dir, "documents")).select("id", "lang_pred")
+    lbl = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"), F.col("lang").alias("lt")
     )
     cm = (
@@ -641,7 +637,7 @@ def q_isotonic_dup_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.operators.dedup import normalize_text
 
     docs = load_table(spark, sf_dir, "documents")
-    wdup = Window.partitionBy(normalize_text("text"))
+    wdup = Window.partitionBy(normalize_text())
     dupdoc = docs.select(
         "n_chars",
         F.when(F.count("*").over(wdup) > 1, 1).otherwise(0).alias("is_dup"),

@@ -11,10 +11,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 Q7_ORACLE = """
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(year(l_shipdate) AS INT) AS l_year,
@@ -38,17 +34,17 @@ GROUP BY supp_nation, cust_nation, l_year
 def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bidirectional nation-pair revenue by ship year
     (disjunctive join predicate + year extraction + dim broadcasts)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    n1 = _t(spark, sf_dir, "nation").select(
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
     )
     rev = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
@@ -89,10 +85,10 @@ GROUP BY n_name, year(l_shipdate)
 def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: substring part filter, supplier-nation rollup by
     year. part/supplier/nation broadcast; only lineitem shuffles (agg)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     rev = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -121,7 +117,7 @@ GROUP BY l_returnflag
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (distribution stats for data-quality
     monitoring) — bit-identical to DuckDB quantile_cont."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.percentile("l_extendedprice", 0.5).alias("p50"),
         F.percentile("l_extendedprice", 0.9).alias("p90"),
@@ -162,7 +158,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation + one keyed join — no window over the event stream, no
     per-user sorting; comparisons run on epoch microseconds, the
     precision both engines share on this nanos fixture."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros(F.col("ts")).alias("us")
     )
     e1 = (
@@ -220,7 +216,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per (cohort, week offset) with active-user counts. Two keyed
     aggregations + one keyed join; (user, week) distinct rows bound the
     join input, so the shape is linear in active user-weeks."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
@@ -272,7 +268,7 @@ def q_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per order, k small by construction) — never an all-parts cartesian;
     the part-support side is broadcast. Ratios are single exact double
     divisions of integer counts."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     items = (
         li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
@@ -326,7 +322,7 @@ def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width price histogram per returnflag (10k-wide bins, top
     bin open) — the data-profiling shape; bin assignment is one exact
     double division + floor, counts are a single hash aggregation."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     bin_col = F.least(
         F.floor(F.col("l_extendedprice") / F.lit(10000.0)), F.lit(10)
     ).cast("long")
@@ -361,7 +357,7 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation per customer (recency vs a fixed as-of date,
     order frequency, decimal-exact monetary) with threshold segments —
     one hash aggregation on the customer key, every rule integer/exact."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     rfm = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.datediff(
             F.lit("1998-12-01").cast("date"),
@@ -563,8 +559,8 @@ def q_recommend_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed LEFT ANTI join; final ranking is a per-customer window. Every
     shuffle is on a uniform key (part or customer); nothing is
     broadcast-sized-dependent except the capped neighbor table."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     # persist: both sides of the pair self-join read this lineage
     basket = (
         li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -1222,8 +1218,8 @@ def q_brand_discount_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact-dim broadcast join + one keyed aggregate; per-brand
     state is six numbers regardless of row count."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     obs = li.join(
         F.broadcast(part.select("p_partkey", "p_brand")),
         li.l_partkey == F.col("p_partkey"),
@@ -1325,8 +1321,8 @@ def q_brand_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 25-row broadcast. No global sort anywhere."""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     obs = li.join(
         F.broadcast(part.select("p_partkey", "p_brand")),
         li.l_partkey == F.col("p_partkey"),
@@ -1497,10 +1493,10 @@ def q_supplier_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation dims broadcast; percentiles run per nation (bounded groups,
     the price_percentiles parity-proven formula); day lags are exact
     integers from timestamp date_diff."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     lag = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(
@@ -1570,8 +1566,8 @@ def q_cross_sell_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: basket fanout is bounded by distinct brands per order
     (<= 25); per-brand supports and the order total are broadcast
     scalars."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     ob = (
         li.join(
             F.broadcast(part.select("p_partkey", "p_brand")),
@@ -3059,7 +3055,7 @@ def q_funnel_step_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, day) — the events_funnel plan; the z stage runs on a 3-row
     cells frame joined to itself on stage+1. Reference tie-in: trace-op
     event semantics (src/op.rs:18-35) under a cohort split."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.col("ts").cast("date").alias("d"),
         "event_type",
@@ -3905,7 +3901,7 @@ def _bf_graph(spark: SparkSession, sf_dir: str):
     """Weighted co-purchase adjacency (persisted) + the deterministic
     high-degree seed: the `pa` endpoint of the max-support edge,
     tie-broken by (pa, pb)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     items = (
         li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
@@ -4303,8 +4299,8 @@ def q_bradley_terry_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds. Scale: one basket aggregate + one pair aggregate (fanout
     <= |brands per order|^2, catalog-bounded); the iteration state is
     the 25-row strength vector inside one grouped kernel."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     bq = (
         li.join(
             F.broadcast(part.select("p_partkey", "p_brand")),

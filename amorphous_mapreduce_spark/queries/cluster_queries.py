@@ -1019,7 +1019,7 @@ def q_bcubed_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("doc_id"), F.col("cluster").alias("c")
     )
     rec = labels.join(
-        docs.select("doc_id", F.md5(normalize_text("text")).alias("t")),
+        docs.select("doc_id", F.md5(normalize_text()).alias("t")),
         "doc_id",
     ).persist()  # nc/nt/nct all read it
     nc = rec.groupBy("c").agg(F.count("*").cast("long").alias("kc"))

@@ -1017,7 +1017,7 @@ def q_boilerplate_prefix_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pf = docs.select(
-        "source", F.substring(normalize_text("text"), 1, 32).alias("prefix")
+        "source", F.substring(normalize_text(), 1, 32).alias("prefix")
     )
     src_n = pf.groupBy("source").agg(F.count("*").alias("n_docs"))
     grp = pf.groupBy("source", "prefix").agg(F.count("*").alias("n_pref"))
@@ -1252,7 +1252,7 @@ def q_duplicate_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     g = (
         docs.repartition(nparts)
-        .select(F.col("doc_id").alias("id"), word_array("text").alias("_ws"))
+        .select(F.col("doc_id").alias("id"), word_array().alias("_ws"))
         .select(
             "id",
             F.posexplode(shingle_grams(F.col("_ws"), _DNC_N)).alias(
@@ -1284,7 +1284,7 @@ def q_duplicate_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window form excluded them from per-source n_docs).
     per_doc = docs.select(
         F.col("doc_id").alias("id"),
-        F.size(word_array("text")).cast("long").alias("n_tok"),
+        F.size(word_array()).cast("long").alias("n_tok"),
     ).filter(F.col("n_tok") >= 1)
     joined = (
         per_doc.join(

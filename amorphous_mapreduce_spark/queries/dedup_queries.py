@@ -104,10 +104,6 @@ from amorphous_mapreduce_spark.queries_registry import register  # noqa: E402
 from amorphous_mapreduce_spark.sources import load_table  # noqa: E402
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 EXACT_ORACLE = f"""
 SELECT md5({NORM}) AS content_hash,
        MIN(doc_id) AS keeper_id,
@@ -120,7 +116,7 @@ GROUP BY content_hash
 @register("exact_dedup", EXACT_ORACLE)
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: one shuffle on a content digest (uniform keys)."""
-    return exact_dedup(_docs(spark, sf_dir))
+    return exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
 MINHASH_ORACLE = (
@@ -148,7 +144,9 @@ WHERE a.id < b.id
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16 fns)-LSH(4-bit bands) near-dup candidates — the
     sub-quadratic dedup path (shingle->minhash->band->bucket-join)."""
-    return minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=16, band_bits=4)
+    return minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents"), num_hashes=16, band_bits=4
+    )
 
 
 JACCARD_MAX_DF = 1000
@@ -185,7 +183,9 @@ def q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard >= 0.05 via shingle inverted-index join, with
     the hot-shingle df cap mirrored in the oracle (both sides compute
     Jaccard over the df<=1000 vocabulary — identical results at any SF)."""
-    return jaccard_pairs(_docs(spark, sf_dir), threshold=0.05, max_df=JACCARD_MAX_DF)
+    return jaccard_pairs(
+        load_table(spark, sf_dir, "documents"), threshold=0.05, max_df=JACCARD_MAX_DF
+    )
 
 
 PREFIX_JACCARD_ORACLE = (
@@ -219,7 +219,7 @@ def q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix filter loses nothing. Hot shingles sort last in the (df, sh)
     order and fall out of every prefix, bounding the join fanout without
     the max_df vocabulary truncation ngram_jaccard uses."""
-    return jaccard_prefix_pairs(_docs(spark, sf_dir))
+    return jaccard_prefix_pairs(load_table(spark, sf_dir, "documents"))
 
 
 SIMHASH_CTE = (
@@ -247,7 +247,7 @@ SIMHASH_ORACLE = SIMHASH_CTE + "SELECT id, simhash FROM fp"
 @register("simhash_fingerprint", SIMHASH_ORACLE)
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash fingerprints (Charikar): sign of per-bit ±1 sums."""
-    return simhash(_docs(spark, sf_dir))
+    return simhash(load_table(spark, sf_dir, "documents"))
 
 
 SIMHASH_PAIRS_ORACLE = (
@@ -270,13 +270,13 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's near-dup clusters make band buckets correlate with true
     pairs, so candidates ~ output, not ~ n²).
     """
-    return simhash_near_pairs(_docs(spark, sf_dir), max_hamming=12)
+    return simhash_near_pairs(load_table(spark, sf_dir, "documents"), max_hamming=12)
 
 
 def _simhash_topm_oracle() -> str:
     from amorphous_mapreduce_spark.operators.dedup import simhash_band_spec
 
-    spec = simhash_band_spec(60, 12 + 1)
+    spec = simhash_band_spec(12 + 1)
     values = ", ".join(
         f"({bi}, {o}, CAST({(1 << w) - 1} AS BIGINT))" for bi, o, w in spec
     )
@@ -331,7 +331,9 @@ def q_simhash_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from amorphous_mapreduce_spark.operators.dedup import simhash_capped_topm
 
-    return simhash_capped_topm(_docs(spark, sf_dir), max_hamming=12, m=3, cap=8)
+    return simhash_capped_topm(
+        load_table(spark, sf_dir, "documents"), max_hamming=12, m=3, cap=8
+    )
 
 
 BFS_ORACLE = (
@@ -361,7 +363,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE taking MIN(hop)."""
     from amorphous_mapreduce_spark.operators.graph import bfs_hops
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4)
     seeds = docs.filter(F.col("doc_id") % 20 == 0).select(
         F.col("doc_id").alias("id")
@@ -432,7 +434,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled power iterations, CTE-for-CTE SQL oracle."""
     from amorphous_mapreduce_spark.operators.graph import pagerank
 
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=16, band_bits=4)
+    pairs = minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents"), num_hashes=16, band_bits=4
+    )
     return pagerank(pairs, n_iter=3)
 
 
@@ -485,7 +489,7 @@ def q_duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.operators.spans import duplicate_passages
 
     return duplicate_passages(
-        _docs(spark, sf_dir),
+        load_table(spark, sf_dir, "documents"),
         shingle_size=PASSAGE_K,
         min_tokens=PASSAGE_MIN_TOKENS,
         max_df=PASSAGE_MAX_DF,
@@ -530,7 +534,7 @@ def q_dedup_span_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     passages = duplicate_passages(
-        _docs(spark, sf_dir),
+        load_table(spark, sf_dir, "documents"),
         shingle_size=PASSAGE_K,
         min_tokens=PASSAGE_MIN_TOKENS,
         max_df=PASSAGE_MAX_DF,
@@ -581,7 +585,9 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests — so the result is the true 2-core); CTE-for-CTE oracle."""
     from amorphous_mapreduce_spark.operators.graph import kcore
 
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=16, band_bits=4)
+    pairs = minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents"), num_hashes=16, band_bits=4
+    )
     return kcore(pairs, n_rounds=KCORE_ROUNDS)
 
 
@@ -727,7 +733,7 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_pairs,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     truth = jaccard_pairs(
         docs, threshold=_RECALL_TAU, max_df=JACCARD_MAX_DF
     ).select("qid", "nid", "jaccard")
@@ -784,12 +790,12 @@ def q_dedup_storage_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one digest aggregate (uniform keys) + one keyed join back;
     savings fractions are single exact double divisions."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     hashed = docs.select(
         "doc_id",
         "source",
         "n_chars",
-        F.md5(normalize_text("text")).alias("h"),
+        F.md5(normalize_text()).alias("h"),
     )
     keep = hashed.groupBy("h").agg(F.min("doc_id").alias("keeper_id"))
     redundant = F.when(F.col("doc_id") != F.col("keeper_id"), 1).otherwise(0)
@@ -897,8 +903,8 @@ def q_snm_vs_lsh_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
-        F.substring(normalize_text("text"), 1, _SNM_KEY_LEN).alias("k"),
-        F.md5(normalize_text("text")).alias("ch"),
+        F.substring(normalize_text(), 1, _SNM_KEY_LEN).alias("k"),
+        F.md5(normalize_text()).alias("ch"),
     )
     ranked = distributed_prefix_sum(
         keyed.select("doc_id", "ch", "k", F.lit(1).alias("_one")),
@@ -1049,7 +1055,7 @@ def q_dedup_method_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_near_dup_blocked,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     mh = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4).persist()
     sh = (
@@ -1126,7 +1132,7 @@ def q_source_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edge list is LSH-bucketed (sub-quadratic); both tag joins are
     keyed equi-joins on doc id; per-source aggregate state is
     #sources rows; the pair total is a 1-row scalar crossed back."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4).persist()
     src = docs.select(F.col("doc_id").alias("id"), "source")
     edges = pairs.select(F.col("qid").alias("a"), F.col("nid").alias("b")).unionAll(
@@ -1223,7 +1229,7 @@ def q_source_knockout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: LSH-bucketed pair list, two keyed doc-tag joins, a
     per-source rollup — no quadratic stage; the pair total is a scalar
     crossed back."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4)
     src = docs.select(F.col("doc_id").alias("id"), "source")
     tagged = (
@@ -1361,7 +1367,7 @@ def q_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(docs, num_hashes=16).persist()
     truth = (
         jaccard_pairs(docs, threshold=SWEEP_TRUTH_J, max_df=SWEEP_MAX_DF)
@@ -1608,7 +1614,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     global window, no all-pairs; label state is one row per node."""
     from amorphous_mapreduce_spark.operators.graph import label_propagation
 
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=16, band_bits=4)
+    pairs = minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents"), num_hashes=16, band_bits=4
+    )
     lab = label_propagation(pairs, n_rounds=LPA_ROUNDS)
     return (
         lab.groupBy(F.col("community"))
@@ -1656,7 +1664,7 @@ def q_near_dup_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared endpoint — the near_dup_triangles kernel, LSH-bucketed and
     sub-quadratic on the capped edge list); the histogram is a bounded
     hash aggregate."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_hashes=16, band_bits=4).persist()
     edges = (
         pairs.select(F.col("qid").alias("a"), F.col("nid").alias("b"))
@@ -1728,7 +1736,9 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops lineage re-expansion."""
     from amorphous_mapreduce_spark.operators.graph import ktruss
 
-    pairs = minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=16, band_bits=4)
+    pairs = minhash_lsh_pairs(
+        load_table(spark, sf_dir, "documents"), num_hashes=16, band_bits=4
+    )
     return ktruss(pairs)
 
 
@@ -1999,7 +2009,7 @@ def _fs_frames(
         "lang",
         "source",
         "n_chars",
-        F.substring(normalize_text("text"), 1, 24).alias("head"),
+        F.substring(normalize_text(), 1, 24).alias("head"),
     )
 
     def flags(pairs: DataFrame, tot_name: str):
@@ -2498,7 +2508,7 @@ def q_ece_dup_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingles,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(docs, _ECE_NH).persist()
     buckets = minhash_band_buckets(sigs, 4).persist()
     a = buckets.select(F.col("id").alias("qid"), "band", "sig")

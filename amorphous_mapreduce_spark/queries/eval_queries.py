@@ -33,10 +33,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- keyed RANGE frame: orders in the customer's prior 90 days ------------
 
 PRIOR_90D_ORACLE = """
@@ -61,7 +57,7 @@ def q_orders_prior_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
     90 days — a keyed RANGE window frame on integer day numbers (the
     purchase-frequency feature shape). Keyed by customer: no global
     sort, partition cardinality bounded by per-customer order count."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).alias("day"),
@@ -126,7 +122,7 @@ def q_discount_return_separability(spark: SparkSession, sf_dir: str) -> DataFram
     from bucket cumulations (inequality self-join over O(#buckets)
     rows), never a global row sort — the scale path for AUC at 100 TB
     (continuous scores would be fixed-width-binned first)."""
-    scored = _t(spark, sf_dir, "lineitem").select(
+    scored = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_discount").alias("score"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("is_pos"),
     )
@@ -202,7 +198,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead() over a keyed (user) window on epoch-µs order, then two hash
     aggregations; p is one deterministic double division. The
     user-journey model behind next-event prediction features."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         F.unix_micros(F.col("ts")).alias("us"),
@@ -266,9 +262,9 @@ def q_nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from two keyed aggregations, then a fixed double expression — the
     closed-form distributed OLS that replaces any iterative fit. Dims
     broadcast; no windows."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     daily = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -829,7 +825,7 @@ def q_decision_stump_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     norm = docs.select(
-        "doc_id", "n_chars", F.md5(normalize_text("text")).alias("h")
+        "doc_id", "n_chars", F.md5(normalize_text()).alias("h")
     )
     groups = norm.groupBy("h").agg(F.count("*").alias("n"))
     labeled = norm.join(groups, "h").select(
@@ -2557,8 +2553,8 @@ def q_als_rank1_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, and the global-mean baseline uses the n*Srr - Sr^2 identity
     so r2_vs_mean is one fixed double expression.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     r = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(
@@ -2719,7 +2715,7 @@ def q_auc_dup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     norm = docs.select(
-        "doc_id", "n_chars", F.md5(normalize_text("text")).alias("h")
+        "doc_id", "n_chars", F.md5(normalize_text()).alias("h")
     )
     cnt = norm.groupBy("h").agg(F.count("*").alias("cnt"))
     lab = norm.join(cnt, "h").select(
@@ -2976,7 +2972,7 @@ def q_average_precision_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     norm = docs.select(
-        "doc_id", "n_chars", F.md5(normalize_text("text")).alias("h")
+        "doc_id", "n_chars", F.md5(normalize_text()).alias("h")
     )
     cnt = norm.groupBy("h").agg(F.count("*").alias("cnt"))
     lab = norm.join(cnt, "h").select(

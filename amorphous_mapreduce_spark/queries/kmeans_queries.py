@@ -225,7 +225,7 @@ def q_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dd = (
         q.crossJoin(F.broadcast(cents))
-        .select("id", "cell", qq.alias("qq"), _score("qv", "cv").alias("s"))
+        .select("id", "cell", qq.alias("qq"), _score().alias("s"))
         .withColumn("d2", F.col("qq") - 2 * F.col("s"))
         .withColumn(
             "rk",

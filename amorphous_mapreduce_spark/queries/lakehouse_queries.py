@@ -18,10 +18,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- snapshot diff (CDC reconciliation) -----------------------------------
 
 ORDER_COLS = (
@@ -80,7 +76,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     churn, not the table. At scale both sides shuffle once on the key
     (or zero times if both snapshots are bucketed on it); no row hash
     is materialised, so no cross-engine string-format hazard."""
-    base = _t(spark, sf_dir, "orders")
+    base = load_table(spark, sf_dir, "orders")
     key = F.col("o_orderkey")
     upd = base.filter(key % 97 == 5).withColumn(
         "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
@@ -146,7 +142,7 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l_quantity etc.) are deliberately excluded: profile extents are
     strings, and double->string formatting is not portable across
     engines."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     aggs = []
     for c in PROFILE_COLS:
         aggs += [
@@ -204,7 +200,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     either predicate). The bit interleave is plain integer arithmetic
     (shiftleft needs literal amounts — CLAUDE.md gotcha — so // and %
     keep it portable); per-row narrow projection, one aggregation."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cb = F.least(F.lit(15), F.floor(F.col("o_custkey") / F.lit(100)))
     pb = F.least(
         F.lit(15), F.floor(F.col("o_totalprice") / F.lit(40000.0)).cast("bigint")
@@ -292,7 +288,7 @@ def q_cdc_net_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mismatch column certifies it is allowed to do).  Output is the
     compaction scorecard per surviving op class.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     log = ev.select(
         F.col("user_id").alias("k"),
         F.expr("unix_micros(ts)").alias("us"),

@@ -37,10 +37,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 # --- PMI-style collocations ------------------------------------------------
 
 PMI_MIN_COUNT = 5
@@ -83,7 +79,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row total broadcast back onto the counts; the top-k plans as
     TakeOrderedAndProject (no single-partition window).
     """
-    toks = tokenized(_docs(spark, sf_dir))
+    toks = tokenized(load_table(spark, sf_dir, "documents"))
     w = Window.partitionBy("id").orderBy("pos")
     bg = (
         toks.select(F.col("word").alias("w1"), F.lead("word").over(w).alias("w2"))
@@ -142,7 +138,8 @@ def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelined work after ``tokenized``'s repartition; the only shuffle is
     the pair-count agg (map-side combined on a tiny key space).
     """
-    toks = tokenized(_docs(spark, sf_dir)).filter(F.length("word") >= 2)
+    docs = load_table(spark, sf_dir, "documents")
+    toks = tokenized(docs).filter(F.length("word") >= 2)
     pairs = toks.select(
         "word",
         # sequence(1, len-1) requires len >= 2 (Spark auto-reverses
@@ -242,14 +239,14 @@ def q_cross_source_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded at C(10,2); the pair matrix is #sources² at most. The
     semi-join against `multi` and the pair join are both keyed on sh.
     """
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     base = (
         docs.repartition(nparts)
         .select(
             F.col("doc_id").alias("id"),
             F.col("source").alias("src"),
-            F.posexplode(F.split(normalize_text("text"), " ")).alias("pos", "word"),
+            F.posexplode(F.split(normalize_text(), " ")).alias("pos", "word"),
         )
         .filter(F.length("word") > 0)
     )
@@ -315,7 +312,7 @@ def q_negative_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw integer frequency — the weight is monotone in f, so no
     float enters the ordering.
     """
-    counts = tokenized(_docs(spark, sf_dir)).groupBy("word").agg(
+    counts = tokenized(load_table(spark, sf_dir, "documents")).groupBy("word").agg(
         F.count("*").alias("f")
     )
     return (
@@ -363,7 +360,8 @@ def q_curriculum_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from amorphous_mapreduce_spark.operators.text_analysis import doc_stats
 
-    stats = doc_stats(_docs(spark, sf_dir)).select("id", "n_tokens", "quality")
+    docs = load_table(spark, sf_dir, "documents")
+    stats = doc_stats(docs).select("id", "n_tokens", "quality")
     ranked = distributed_prefix_sum(
         stats,
         "n_tokens",
@@ -405,7 +403,7 @@ def q_keyword_in_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     term is used'. Context windows are keyed by doc; the first-100 cut
     is TakeOrdered on (id, pos). concat_ws drops boundary NULLs the same
     way on both engines."""
-    toks = tokenized(_docs(spark, sf_dir))
+    toks = tokenized(load_table(spark, sf_dir, "documents"))
     w = Window.partitionBy("id").orderBy("pos")
     ctx = toks.select(
         "id",
@@ -471,8 +469,8 @@ def q_source_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the statistic is one keyed agg over the (src, word) count table
     joined to the word-global margin — no vocab x sources densification.
     """
-    toks = tokenized(_docs(spark, sf_dir))
-    src_of = _docs(spark, sf_dir).select(
+    toks = tokenized(load_table(spark, sf_dir, "documents"))
+    src_of = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"), F.col("source").alias("src")
     )
     cnt = (
@@ -545,7 +543,7 @@ def q_quality_length_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.operators.text_analysis import doc_stats
 
     stats = (
-        doc_stats(_docs(spark, sf_dir))
+        doc_stats(load_table(spark, sf_dir, "documents"))
         .select("id", "n_tokens", "quality")
         .withColumn("one", F.lit(1))
     )
@@ -680,7 +678,7 @@ def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc id, one hash aggregate over pairs, TakeOrdered top-k with a
     pair tie-break — the same plan at any corpus size.
     """
-    toks = tokenized(_docs(spark, sf_dir))
+    toks = tokenized(load_table(spark, sf_dir, "documents"))
     w = Window.partitionBy("id").orderBy("pos")
     sg = toks.select(
         F.col("word").alias("w1"),
@@ -753,7 +751,7 @@ def q_intra_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from two lead() columns in one windowed select; the doc ->
     source attachment is a keyed join on the doc id.
     """
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     toks = tokenized(docs)
     w = Window.partitionBy("id").orderBy("pos")
     tg = toks.select(
@@ -867,13 +865,13 @@ def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the term, bucketable by pair block if #sources grows past ~10⁴.
     Reference tie-in: word-count substrate (src/word_count.rs:90-128)
     feeding a VecOp-style normalized reduce (src/op.rs:18-35)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     tw = (
         docs.repartition(nparts)
         .select(
             F.col("source").alias("src"),
-            F.explode(F.split(normalize_text("text"), " ")).alias("word"),
+            F.explode(F.split(normalize_text(), " ")).alias("word"),
         )
         .filter(F.length("word") > 0)
     )
@@ -1036,7 +1034,7 @@ def q_dunning_g2_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from amorphous_mapreduce_spark.functions.intlog import log2_scaled
 
-    toks = tokenized(_docs(spark, sf_dir))
+    toks = tokenized(load_table(spark, sf_dir, "documents"))
     w = Window.partitionBy("id").orderBy("pos")
     bg = (
         toks.select(F.col("word").alias("w1"), F.lead("word").over(w).alias("w2"))
@@ -1201,7 +1199,7 @@ def q_speculative_decoding_acceptance(
     here; AQE picks the join side), the token stream is touched twice
     (model counts, scoring) with the shared lineage persisted.
     """
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     toks = tokenized(docs).persist()  # model counts + scoring stream
     uni = toks.groupBy("word").agg(F.count("*").cast("long").alias("c"))
     n = toks.agg(F.count("*").cast("long").alias("n"))

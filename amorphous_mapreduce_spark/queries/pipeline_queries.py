@@ -52,10 +52,6 @@ HASH_KEY = (
 )
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 CHUNK_ORACLE = (
     "WITH "
     + TOKS0_CTE
@@ -80,7 +76,9 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping 32-token / stride-24 chunk windows per document —
     the context-length splitter of a pretraining pipeline (tokenize
     W3-W5 + per-key aggregate W7, src/word_count.rs:99-123)."""
-    return chunk_documents(_docs(spark, sf_dir), chunk_size=32, stride=24)
+    return chunk_documents(
+        load_table(spark, sf_dir, "documents"), chunk_size=32, stride=24
+    )
 
 
 PACK_ORACLE = (
@@ -106,7 +104,7 @@ FROM ntok JOIN documents ON doc_id = id
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concatenate-and-cut sequence packing layout (512-token contexts),
     one window cumsum per language stratum — integer-exact anywhere."""
-    return pack_sequences(_docs(spark, sf_dir), ctx_len=512)
+    return pack_sequences(load_table(spark, sf_dir, "documents"), ctx_len=512)
 
 
 SAMPLE_ORACLE = f"""
@@ -119,7 +117,7 @@ WHERE {HASH_KEY} % 100 < 10
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 10% hash sample per language — a stateless filter
     (zero shuffle; the only sane sampling primitive at 100 TB)."""
-    return stratified_sample(_docs(spark, sf_dir), rate_pct=10)
+    return stratified_sample(load_table(spark, sf_dir, "documents"), rate_pct=10)
 
 
 TOPN_ORACLE = f"""
@@ -136,7 +134,7 @@ SELECT id, lang, rnk FROM (
 def q_stratified_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-5-per-language deterministic sample: smallest-hash-first
     with id tie-break (one shuffle on the stratum key)."""
-    return stratified_topn(_docs(spark, sf_dir), n=5)
+    return stratified_topn(load_table(spark, sf_dir, "documents"), n=5)
 
 
 TFIDF_ORACLE = (
@@ -166,7 +164,7 @@ SELECT id, word, tf, df, score, rnk FROM (
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 terms per doc by rational-form TF-IDF (tf * N/df — rank-
     equivalent to the log form, bit-identical across engines)."""
-    return tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    return tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=3)
 
 
 QUANT_ORACLE = """
@@ -227,7 +225,7 @@ def q_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality rules per document (length, repetition,
     vocabulary diversity, stopword presence) — integer counts with one
     final division each, so the pass verdicts are engine-exact."""
-    return quality_rules(_docs(spark, sf_dir))
+    return quality_rules(load_table(spark, sf_dir, "documents"))
 
 
 DECON_ORACLE = (
@@ -252,7 +250,9 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training docs sharing >= 5
     distinct 3-shingles with the 'src0' eval set. The eval shingle
     vocabulary is broadcast, so the training side never shuffles."""
-    return decontaminate(_docs(spark, sf_dir), eval_source="src0", min_shared=5)
+    return decontaminate(
+        load_table(spark, sf_dir, "documents"), eval_source="src0", min_shared=5
+    )
 
 
 MIX_ORACLE = (
@@ -277,7 +277,7 @@ def q_source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source data-mixing stats (doc/token counts, corpus share,
     sqrt-damped weight) — integer sums plus one engine-exact division
     and sqrt per row; the corpus total is a broadcast 1-row scalar."""
-    return source_mixing_weights(_docs(spark, sf_dir))
+    return source_mixing_weights(load_table(spark, sf_dir, "documents"))
 
 
 @register("embedding_quantize", QUANT_ORACLE)
@@ -340,7 +340,7 @@ def q_quality_rule_cofire(spark: SparkSession, sf_dir: str) -> DataFrame:
     alphabet-bounded joins and a 1-row total crossed back."""
     from amorphous_mapreduce_spark.operators.pipeline import quality_rules
 
-    q = quality_rules(_docs(spark, sf_dir)).persist()
+    q = quality_rules(load_table(spark, sf_dir, "documents")).persist()
     arr = F.array_compact(
         F.array(
             F.when(F.col("uniq_frac") < 0.3, F.lit("low_diversity")),
@@ -400,16 +400,14 @@ JL_SIGNS: list[list[int]] = [
 ]
 
 
-def _jl_y_sql(tbl: str) -> str:
-    """DuckDB: 8 exact integer projections of the int8 vector via
-    double dot products (values << 2^53, so double is exact)."""
-    comps = [
-        "CAST(list_dot_product(" + tbl + ".qvd, ["
-        + ", ".join(f"{s}.0" for s in signs)
-        + "]) AS BIGINT)"
-        for signs in JL_SIGNS
-    ]
-    return "[" + ", ".join(comps) + "]"
+# DuckDB: 8 exact integer projections of the int8 vector ``t.qvd`` via
+# double dot products (values << 2^53, so double is exact).
+_JL_Y_SQL = "[" + ", ".join(
+    "CAST(list_dot_product(t.qvd, ["
+    + ", ".join(f"{s}.0" for s in signs)
+    + "]) AS BIGINT)"
+    for signs in JL_SIGNS
+) + "]"
 
 
 JL_ORACLE = f"""
@@ -424,7 +422,7 @@ WITH q AS (
     WHERE list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) > 0
 ),
 f AS (
-    SELECT id, qvd, {_jl_y_sql('t')} AS y
+    SELECT id, qvd, {_JL_Y_SQL} AS y
     FROM (SELECT id, list_transform(qv, v -> CAST(v AS DOUBLE)) AS qvd
           FROM q) t
 ),
@@ -667,7 +665,7 @@ def q_curation_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: rides the quality_rules per-doc aggregates; the stage rollup
     is 5 rows."""
-    q = quality_rules(_docs(spark, sf_dir))
+    q = quality_rules(load_table(spark, sf_dir, "documents"))
     staged = q.select(
         "id",
         "n_words",
@@ -751,11 +749,11 @@ def q_training_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.functions.hashing import hex_hash64
     from amorphous_mapreduce_spark.operators.dedup import normalize_text
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     q = quality_rules(docs)
     keepers = q.filter(F.col("rules_pass")).select("id", "n_words")
     digests = docs.select(
-        F.col("doc_id").alias("id"), hex_hash64(normalize_text("text")).alias("h")
+        F.col("doc_id").alias("id"), hex_hash64(normalize_text()).alias("h")
     )
     survivors = (
         keepers.join(digests, "id")
@@ -866,7 +864,7 @@ def q_weighted_sample_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     wdocs = docs.select(
         "doc_id",
         "source",
-        F.size(F.split(normalize_text("text"), " ")).cast("long").alias(
+        F.size(F.split(normalize_text(), " ")).cast("long").alias(
             "w_tokens"
         ),
         u.alias("u"),

@@ -29,10 +29,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- q1: pricing summary (TPC-H Q1 shape) ---------------------------------
 
 Q1_ORACLE = """
@@ -60,7 +56,7 @@ GROUP BY l_returnflag, l_linestatus
 def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan->filter->partial/final hash agg: the reference's core two-phase
     reduce (SURVEY.md G6/G10) over real measures."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
     charge = disc_price * dec(F.lit(1) + F.col("l_tax"))
     return (
@@ -103,11 +99,14 @@ LIMIT 10
 def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """customer⋈orders⋈lineitem with selective filters; revenue is exact
     decimal so the top-10 cutoff is deterministic (tie-break l_orderkey)."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_mktsegment") == "BUILDING")
+    )
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     )
     revenue = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
@@ -145,15 +144,15 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star join: fact lineitem against four dims; nation/region/supplier
     are broadcast (size << threshold), so only customer⋈orders⋈lineitem
     shuffle on keys."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     revenue = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
@@ -187,7 +186,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01'
 def q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All predicates push into the parquet scan (PushedFilters); the agg
     is a single partial->final reduce with no group keys."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -224,13 +223,13 @@ LIMIT 20
 
 @register("q10_returned_items", Q10_ORACLE)
 def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    nation = load_table(spark, sf_dir, "nation")
     revenue = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
@@ -262,8 +261,8 @@ WHERE rnk <= 3
 def topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window top-k (SURVEY.md §2.4 'window functions'): rank is total-
     ordered (acctbal desc, custkey) so membership is deterministic."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     w = Window.partitionBy("n_name").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -294,8 +293,14 @@ SELECT 'cust_only' AS tag, nk FROM (
 def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT/EXCEPT (absent from the reference, SURVEY.md §2.4) —
     distinct set semantics via shuffle dedup."""
-    cust = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
-    supp = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
+    cust = (
+        load_table(spark, sf_dir, "customer")
+        .select(F.col("c_nationkey").alias("nk"))
+    )
+    supp = (
+        load_table(spark, sf_dir, "supplier")
+        .select(F.col("s_nationkey").alias("nk"))
+    )
     both = cust.intersect(supp).select(F.lit("cust_and_supp").alias("tag"), "nk")
     only = cust.subtract(supp).select(F.lit("cust_only").alias("tag"), "nk")
     return both.unionByName(only)
@@ -317,7 +322,7 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 def rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical aggregate (rollup) — grouping-set expansion feeding the
     same partial+final aggregation machinery."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.count("*").alias("n_items"), dsum("l_quantity").alias("sum_qty"))
@@ -345,7 +350,7 @@ GROUP BY l_returnflag
 @register("distinct_agg", DISTINCT_ORACLE)
 def distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct aggregation (expand + two-phase agg in Spark)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_suppkey").alias("n_suppliers"),
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -369,7 +374,7 @@ GROUP BY date_trunc('day', ts), event_type
 def events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time day bucketing — the batch shape of the streaming window
     (SURVEY.md §7 phase 6 does the readStream variant)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.date_trunc("day", F.col("ts")).alias("day"), F.col("event_type")
@@ -396,8 +401,8 @@ def cube_brand_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full grouping-set lattice (CUBE) over a dim join — all four
     (returnflag, brand) marginals in one grouping-set expansion through
     the shared partial+final aggregation."""
-    li = _t(spark, sf_dir, "lineitem")
-    pt = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    pt = load_table(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
         .cube("l_returnflag", "p_brand")
@@ -425,7 +430,7 @@ SELECT p_partkey, metric, val FROM (
 def part_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide-to-long unpivot (melt) — the inverse of returnflag_pivot;
     a pure projection+expand, zero shuffle."""
-    pt = _t(spark, sf_dir, "part")
+    pt = load_table(spark, sf_dir, "part")
     return pt.select(
         "p_partkey",
         F.col("p_retailprice").cast("double").alias("price"),
@@ -449,7 +454,7 @@ GROUP BY event_type
 def events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction: props is a JSON string column
     (FIXTURES.md); get_json_object stays JVM-side."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
             "event_type",
@@ -491,7 +496,7 @@ GROUP BY user_id
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity): lag + running sum —
     the batch analog of a stateful streaming session window."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     order = [F.col("ts"), F.col("event_id")]
     w = Window.partitionBy("user_id").orderBy(*order)
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -523,7 +528,7 @@ FROM orders
 def running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer cumulative spend: ordered window aggregation in exact
     decimal (order ties broken by o_orderkey for determinism)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -554,8 +559,8 @@ GROUP BY p_brand
 def brand_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈dim broadcast join + multi-measure agg (min/max are order-
     independent; sum via decimal)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")

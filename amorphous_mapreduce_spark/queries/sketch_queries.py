@@ -263,12 +263,11 @@ def q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _AMS_R = 16
 
-def _ams_sign(key: str, j: str) -> str:
-    """±1 from one MD5 bit — replayable in DuckDB."""
-    return (
-        "(CAST('0x' || substr(md5('ams' || " + j + " || '_' || "
-        f"CAST({key} AS VARCHAR)), 1, 15) AS BIGINT) % 2) * 2 - 1"
-    )
+# ±1 of key k in row j.range of the sketch, from one MD5 bit.
+_AMS_SIGN = (
+    "(CAST('0x' || substr(md5('ams' || j.range || '_' || "
+    "CAST(k AS VARCHAR)), 1, 15) AS BIGINT) % 2) * 2 - 1"
+)
 
 
 AMS_ORACLE = f"""
@@ -278,7 +277,7 @@ WITH f AS (
 ),
 z AS (
     SELECT j.range AS j,
-           CAST(SUM(c * ({_ams_sign('k', 'j.range')})) AS BIGINT) AS zj
+           CAST(SUM(c * ({_AMS_SIGN})) AS BIGINT) AS zj
     FROM f CROSS JOIN range({_AMS_R}) j
     GROUP BY j.range
 ),
@@ -552,7 +551,7 @@ def q_kmv_set_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(nparts)
         .select(
             "source",
-            F.explode(F.split(normalize_text("text"), " ")).alias("word"),
+            F.explode(F.split(normalize_text(), " ")).alias("word"),
         )
         .filter(F.length("word") > 0)
         .distinct()

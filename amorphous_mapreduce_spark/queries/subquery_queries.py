@@ -12,10 +12,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- EXISTS (left-semi join) ----------------------------------------------
 
 SEMI_ORACLE = """
@@ -33,11 +29,14 @@ GROUP BY o_orderpriority
 def q_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS as a left-semi join (TPC-H Q4 shape): the probe side streams,
     the semi side deduplicates inside the join — no fanout."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    returned = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    returned = (
+        load_table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_returnflag") == "R")
+    )
     return (
         orders.join(returned, orders.o_orderkey == returned.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
@@ -60,8 +59,8 @@ GROUP BY p_brand
 @register("parts_never_shipped_anti", ANTI_ORACLE)
 def q_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS as a left-anti join."""
-    part = _t(spark, sf_dir, "part")
-    recent = _t(spark, sf_dir, "lineitem").filter(
+    part = load_table(spark, sf_dir, "part")
+    recent = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("2001-01-01").cast("timestamp")
     )
     return (
@@ -91,11 +90,11 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01'
 @register("promo_revenue_share", PROMO_ORACLE)
 def q_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE-WHEN conditional aggregation over a broadcast dim join."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     rev = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
     promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(
         F.lit(0).cast("decimal(12,2)")
@@ -123,8 +122,8 @@ HAVING SUM(CAST(l_quantity AS DECIMAL(12,2))) > 150
 @register("large_quantity_orders", HAVING_ORACLE)
 def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate + HAVING on the exact-decimal sum (deterministic cut)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .groupBy("o_orderkey", "o_orderdate", "o_totalprice")
@@ -156,8 +155,8 @@ GROUP BY p_type
 @register("widget_pricing_like", LIKE_ORACLE)
 def q_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE prefixes/suffixes + disjunction + BETWEEN, over broadcast join."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 5)
-    part = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 5)
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_name").like("small%") | F.col("p_name").like("%widget"))
         & F.col("p_size").between(5, 40)
     )
@@ -191,8 +190,8 @@ def q_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg sums doubles in partition order — so the comparison uses the
     exact-decimal mean instead, mirrored in the oracle via the same
     decimal discipline."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     from pyspark.sql import Window
 
     w = Window.partitionBy("c_nationkey")
@@ -228,8 +227,8 @@ def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a window mean over the part key — one pass over lineitem."""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
     w = Window.partitionBy("l_partkey")
     avg_qty = F.sum(dec("l_quantity")).over(w).cast("double") / F.count("*").over(w)
     return (
@@ -268,8 +267,8 @@ def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncorrelated scalar subquery (``DataFrame.scalar()``, one 1-row
     aggregate per execution) + left-anti join. Pure dataflow: the average
     stays in-plan (no driver action)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     avg_bal = (
         cust.filter(F.col("c_acctbal") > 0)
         .agg(F.sum(dec("c_acctbal")).cast("double") / F.count("*"))

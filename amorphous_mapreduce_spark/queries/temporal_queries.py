@@ -318,7 +318,6 @@ def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return asof_nearest_join(
         purchases,
         errors,
-        on="us",
         right_cols=("value",),
         tolerance_us=43_200_000_000,
     )

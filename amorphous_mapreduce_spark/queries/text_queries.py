@@ -425,7 +425,7 @@ def q_readability_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amorphous_mapreduce_spark.operators.dedup import normalize_text
 
     docs = load_table(spark, sf_dir, "documents")
-    norm = normalize_text("text")
+    norm = normalize_text()
     base = docs.select(F.col("doc_id").alias("id"), norm.alias("norm")).filter(
         F.length("norm") > 0
     )

@@ -25,10 +25,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 Q2_ORACLE = """
 SELECT p.p_type, p.p_partkey, p.p_retailprice
 FROM part p
@@ -41,7 +37,7 @@ WHERE p.p_retailprice = (SELECT MIN(p2.p_retailprice) FROM part p2
 def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated MIN subquery decorrelated into a window
     minimum (all minimum-priced parts per type; MIN of doubles is exact)."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_type")
     return (
         part.withColumn("_min", F.min("p_retailprice").over(w))
@@ -74,12 +70,12 @@ GROUP BY o_year
 def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one brand's revenue share per order year among a
     region's customers (conditional ratio over a 6-way star join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    part = load_table(spark, sf_dir, "part")
     rev = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
     brand_rev = F.when(F.col("p_brand") == "Brand#1", rev).otherwise(
         F.lit(0).cast("decimal(12,2)")
@@ -114,7 +110,7 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     back (no Window.partitionBy(lit(1)) exchange-to-one: the per-supplier
     rows never funnel through a single partition, only the 1-row total
     does)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # Both branches (per-supplier rows + scalar total) read sv: persist so
     # the lineitem scan+agg runs once (CLAUDE.md shared-lineage gotcha).
     sv = (
@@ -147,12 +143,12 @@ GROUP BY p_brand, p_type, p_size
 def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: exclusion predicates (<>, NOT LIKE, IN-list) +
     distinct supplier counts per part group."""
-    part = _t(spark, sf_dir, "part").filter(
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & ~F.col("p_type").like("PROMO%")
         & F.col("p_size").isin(1, 5, 10, 15, 20, 25)
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         F.broadcast(part)
         .join(li, part.p_partkey == li.l_partkey)
@@ -176,8 +172,8 @@ WHERE s_suppkey IN (
 def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: IN over a grouped-HAVING subquery as a left-semi
     join against the aggregated (supplier, part) quantities."""
-    supp = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
     heavy = (
         li.groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(dec("l_quantity")).alias("_q"))
@@ -210,8 +206,11 @@ def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: NOT EXISTS over sibling rows, decorrelated: keep
     returned items whose order has exactly one distinct returning
     supplier (cnt==1 ⟺ no other supplier returned in that order)."""
-    supp = _t(spark, sf_dir, "supplier")
-    returned = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    supp = load_table(spark, sf_dir, "supplier")
+    returned = (
+        load_table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_returnflag") == "R")
+    )
     per_order = returned.groupBy("l_orderkey").agg(
         F.countDistinct("l_suppkey").alias("_nsupp")
     )
@@ -244,8 +243,8 @@ def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     commitdate < receiptdate) as a left-semi join with the inequality in
     the join condition, then priority counts. Semi join shuffles on the
     equi key only; the inequality is a post-probe filter."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         orders.join(
             li,
@@ -276,8 +275,8 @@ def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines, grouped by line status (l_linestatus stands in for the
     fixture-absent l_shipmode). Outer CAST AS BIGINT in the oracle:
     DuckDB SUM(int) is HUGEINT (CLAUDE.md gotcha)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -309,8 +308,8 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     (customers with zero matching orders count as 0), per-customer
     COUNT(col) (null-skipping), then a second aggregation over the
     counts. Two narrow shuffles on uniform keys; scale-safe."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     )
     per_cust = (
@@ -342,8 +341,8 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX is a 1-row aggregate broadcast-crossed back (same no-single-
     partition pattern as Q11); revenue in exact decimal so the equality
     against MAX is bit-safe on both engines."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "N")
-    supp = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "N")
+    supp = load_table(spark, sf_dir, "supplier")
     rev = (
         li.groupBy("l_suppkey")
         .agg(
@@ -385,8 +384,8 @@ def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst still pushes the per-side conjuncts common to all brackets
     (none here) and evaluates the residual in whole-stage codegen.
     Scalar decimal aggregate, one row out."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     q = F.col("l_quantity")
     bracket = (
         (
@@ -444,10 +443,10 @@ def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     (region grain keeps every SF populated — 10 suppliers at sf0.001) —
     two broadcast dim joins into the fact, an OR-of-pairs filter, and
     the exact-decimal revenue aggregate."""
-    li, o = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
-    c, s = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    li, o = load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
+    c, s = load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     n1 = n.join(r, n["n_regionkey"] == r["r_regionkey"]).select(
         F.col("n_nationkey").alias("sk"), F.col("r_name").alias("supp_nation")
     )
@@ -521,9 +520,9 @@ def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier nation and order year for a
     part-name family — the five-way join with an expression aggregate
     (adapted cost model: 50% of retail per unit, exact decimals)."""
-    li, o = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
-    p, s = _t(spark, sf_dir, "part"), _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li, o = load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
+    p, s = load_table(spark, sf_dir, "part"), load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     profit = dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount")) - dec(
         F.lit(0.5)
     ) * dec("l_quantity") * dec("p_retailprice")

@@ -19,10 +19,6 @@ from amorphous_mapreduce_spark.queries_registry import register
 from amorphous_mapreduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- SCD Type-2 validity intervals ----------------------------------------
 
 SCD2_ORACLE = """
@@ -66,7 +62,7 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CLAUDE.md gotcha: never split window cols across filters).
     Comparisons run on epoch microseconds (the precision both engines
     share on the nanos fixture); ties broken by event_id."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros(F.col("ts")).alias("us")
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -115,7 +111,7 @@ def q_events_value_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     x integer arithmetic (no float division to drift between engines).
     One keyed agg over a handful of types, broadcast back onto the
     stream: at 100 TB the stats side is a few rows per event type."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
         F.sum(dec("value", "decimal(18,6)")).alias("sum6"),
         F.count("*").cast("decimal(10,0)").alias("cnt"),
@@ -149,7 +145,7 @@ def q_part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANTI join whose equi-component is the brand key, so Spark plans a
     hash join with the inequality as a residual filter — candidate
     pairs are bounded per brand group, never a global cartesian."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     q = p.select(
         F.col("p_brand").alias("q_brand"),
         F.col("p_retailprice").alias("q_price"),
@@ -203,7 +199,7 @@ def q_daily_revenue_ma7(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic scale-out replacement for ``ROWS 6 PRECEDING`` over an
     unpartitioned frame). Division happens once, double/int, identical
     on both engines; sums stay decimal."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("ddate")
     ).agg(F.sum(dec("o_totalprice")).alias("rev"))
@@ -260,7 +256,7 @@ def q_approx_median_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bin inequality is a residual on an equi-join over <=11-row
     groups). Median = first bin where 2*cum >= total; the estimate is
     the bin midpoint, exact integer arithmetic end-to-end."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     bin_col = F.least(
         F.floor(F.col("l_extendedprice") / F.lit(10000.0)), F.lit(10)
     ).cast("long")
@@ -320,7 +316,7 @@ def q_daily_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     same explode/shift trick as the moving average, specialised to
     shift=1). Missing previous day yields NULL, matching LAG
     semantics over a date spine. Subtraction stays decimal."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("ddate")
     ).agg(F.sum(dec("o_totalprice")).alias("rev")).persist()
@@ -367,8 +363,8 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot). Each relation is one ANTI join on its key followed by a
     scalar count — dimension sides broadcast, the fact side streams
     once per edge; nothing materialises the orphan rows."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
 
     def orphans(name, fact, fk, dim, pk):
         missing = fact.join(
@@ -382,7 +378,11 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         orphans("lineitem->orders", li, "l_orderkey", orders, "o_orderkey")
         .unionByName(
             orphans(
-                "lineitem->part", li, "l_partkey", _t(spark, sf_dir, "part"), "p_partkey"
+                "lineitem->part",
+                li,
+                "l_partkey",
+                load_table(spark, sf_dir, "part"),
+                "p_partkey",
             )
         )
         .unionByName(
@@ -390,7 +390,7 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "lineitem->supplier",
                 li,
                 "l_suppkey",
-                _t(spark, sf_dir, "supplier"),
+                load_table(spark, sf_dir, "supplier"),
                 "s_suppkey",
             )
         )
@@ -399,7 +399,7 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "orders->customer",
                 orders,
                 "o_custkey",
-                _t(spark, sf_dir, "customer"),
+                load_table(spark, sf_dir, "customer"),
                 "c_custkey",
             )
         )
@@ -425,8 +425,8 @@ def q_sales_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expand operator emits one replica per grouping set, so asking
     for 3 sets instead of CUBE's 4 is a 25% shuffle saving). Rolled-up
     dimensions surface as 'ALL', matching the cube query's convention."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     return (
         joined.groupingSets(
@@ -465,7 +465,7 @@ def q_customer_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     never global) with a total-order tie-break. Both functions are
     rank/count ratios of identical integers, so the doubles match the
     oracle bit-for-bit."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
     return cust.select(
         "c_custkey",
@@ -509,7 +509,7 @@ def q_incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the batch twin of a streaming aggregate's state update). Split is
     simulated by event-id parity; merged result equals a full recompute
     because decimal addition is associative."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.col("ts").cast("date").cast("timestamp").alias("day"),
         (F.col("event_id") % 2).alias("parity"),
         dec("value", "decimal(18,6)").alias("v6"),
@@ -588,7 +588,7 @@ def q_peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     only falls, where the peak is the level standing at day start.
     This replaces the textbook single global sort of all boundaries,
     which would funnel 100 TB of events through one task."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros(F.col("ts")).alias("us")
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -652,7 +652,7 @@ def q_price_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtraction (bit-identical on both engines) and both engines share
     the same interpolated-percentile formula (proven by the
     price_percentiles query)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     med = li.groupBy("l_returnflag").agg(
         F.percentile("l_extendedprice", 0.5).alias("p50")
     )
@@ -691,7 +691,7 @@ def q_multi_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse grains cost O(#days), not a second full scan (the same
     algebraic-merge property the incremental rollup exploits, applied
     up the time hierarchy day -> month)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     day_state = ev.groupBy(
         F.col("ts").cast("date").cast("timestamp").alias("day")
     ).agg(
@@ -731,7 +731,7 @@ def q_user_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the aggregation is deterministic under any shuffle; the final
     top-20 is a TakeOrderedAndProject with the path itself as
     tie-break."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.struct(
             F.unix_micros(F.col("ts")).alias("us"),
@@ -790,7 +790,7 @@ def q_rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile and DuckDB's median interpolate even counts with
     different IEEE expression shapes). Both window columns are built in
     one select before the filter (CLAUDE.md gotcha)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         "l_returnflag", F.col("l_shipdate").cast("date").alias("ddate")
     ).agg(F.sum(dec("l_extendedprice")).alias("rev"))
@@ -2963,7 +2963,7 @@ def _morton8(intdiv: str) -> str:
 def _hilb_oracle() -> str:
     from amorphous_mapreduce_spark.functions.hilbert import hilbert_cte_chain
 
-    chain, last = hilbert_cte_chain(_HILB_BITS, "pts", "x8, y8, z, lin")
+    chain, last = hilbert_cte_chain(_HILB_BITS, "x8, y8, z, lin")
     return f"""
 WITH base0 AS (
     SELECT CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)

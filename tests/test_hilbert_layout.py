@@ -13,7 +13,7 @@ def test_hilbert_curve_bijection_and_unit_steps():
     neighbours — the defining property of a Hilbert curve."""
     from amorphous_mapreduce_spark.functions.hilbert import hilbert_cte_chain
 
-    chain, last = hilbert_cte_chain(8, "pts", "x8, y8")
+    chain, last = hilbert_cte_chain(8, "x8, y8")
     sql = f"""
 WITH cells AS (
     SELECT x8, y8

@@ -22,7 +22,9 @@ must be passed a value other than its default, by keyword or by position,
 at one name-matched call site at least. The call sites are the files the
 call graph scans plus ``tests/`` and ``perfbench/tests``, and "other" means
 source text other than the default's. A parameter with one value in use is
-a constant: write it into the body, or name it in ``PARAM_ALLOWLIST``.
+a constant: write it into the body, or name it in ``PARAM_ALLOWLIST``. The
+same holds for a required parameter that every such call site sets to the
+same literal.
 """
 
 from __future__ import annotations
@@ -57,7 +59,8 @@ ALLOWLIST = {
     ),
 }
 
-# "<module path>.<function>.<parameter>" -> why its default is the only
+# "<module path>.<function>.<parameter>" -> why its default (or, for a
+# required parameter, the one literal every call site passes) is the only
 # value any caller passes, yet it stays a parameter.
 _LSH_SHAPE = (
     "the near-dup graph's LSH shape, spelled out as num_hashes=16, "
@@ -66,6 +69,9 @@ _LSH_SHAPE = (
 PARAM_ALLOWLIST = {
     "operators.dedup.minhash_lsh_pairs.num_hashes": _LSH_SHAPE,
     "operators.dedup.minhash_lsh_pairs.band_bits": _LSH_SHAPE,
+    "operators.multimodal.resize_images.height": (
+        "half of the (width, height) target shape, whose width takes two values"
+    ),
 }
 
 
@@ -219,33 +225,75 @@ def _passed(call: ast.Call, positional: list[str], param: str) -> list[str]:
     return out
 
 
+def _top_level_functions():
+    """(module path under the package, function def) for every top-level
+    package function."""
+    pkg_dir = os.path.join(REPO_ROOT, PKG)
+    for path in _py_files(pkg_dir):
+        rel = os.path.relpath(path, pkg_dir)[: -len(".py")].replace(os.sep, ".")
+        for stmt in _parse(path).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield rel, stmt
+
+
 def defaulted_params() -> dict[str, bool]:
     """"<module>.<function>.<parameter>" -> whether a call site passes it a
     value other than its default, for every defaulted parameter of every
     top-level package function."""
     calls = _call_sites()
-    pkg_dir = os.path.join(REPO_ROOT, PKG)
     out: dict[str, bool] = {}
-    for path in _py_files(pkg_dir):
-        rel = os.path.relpath(path, pkg_dir)[: -len(".py")].replace(os.sep, ".")
-        for stmt in _parse(path).body:
-            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            a = stmt.args
-            positional = [p.arg for p in a.posonlyargs + a.args]
-            first = len(positional) - len(a.defaults)
-            defaults = dict(zip(positional[first:], a.defaults))
-            defaults |= {
-                p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
-            }
-            for param, default in defaults.items():
-                text = ast.unparse(default)
-                out[f"{rel}.{stmt.name}.{param}"] = any(
-                    passed != text
-                    for call in calls.get(stmt.name, ())
-                    for passed in _passed(call, positional, param)
-                )
+    for rel, fn in _top_level_functions():
+        a = fn.args
+        positional = [p.arg for p in a.posonlyargs + a.args]
+        first = len(positional) - len(a.defaults)
+        defaults = dict(zip(positional[first:], a.defaults))
+        defaults |= {
+            p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        }
+        for param, default in defaults.items():
+            text = ast.unparse(default)
+            out[f"{rel}.{fn.name}.{param}"] = any(
+                passed != text
+                for call in calls.get(fn.name, ())
+                for passed in _passed(call, positional, param)
+            )
     return out
+
+
+def _is_literal(text: str) -> bool:
+    try:
+        ast.literal_eval(text)
+    except (ValueError, SyntaxError):
+        return False
+    return True
+
+
+def one_literal_required_params() -> list[str]:
+    """"<module>.<function>.<parameter>" of every required parameter of a
+    top-level package function that each of its call sites (one at least)
+    passes, and passes the same literal."""
+    calls = _call_sites()
+    out = []
+    for rel, fn in _top_level_functions():
+        if any(_is_register(d) for d in fn.decorator_list):
+            continue  # (spark, sf_dir) is the registry's calling contract
+        a = fn.args
+        positional = [p.arg for p in a.posonlyargs + a.args]
+        required = positional[: len(positional) - len(a.defaults)] + [
+            p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is None
+        ]
+        sites = calls.get(fn.name, ())
+        for param in required:
+            passed = [_passed(call, positional, param) for call in sites]
+            texts = {t for p in passed for t in p}
+            if (
+                sites
+                and all(len(p) == 1 for p in passed)
+                and len(texts) == 1
+                and _is_literal(next(iter(texts)))
+            ):
+                out.append(f"{rel}.{fn.name}.{param}")
+    return sorted(out)
 
 
 def test_every_defaulted_parameter_is_set():
@@ -256,6 +304,18 @@ def test_every_defaulted_parameter_is_set():
         "defaulted parameters no call site sets to another value; write the "
         f"default into the body or allowlist them with a reason: {unlisted}"
     )
-    stale = sorted(k for k in PARAM_ALLOWLIST if params.get(k, True))
+    one_literal = set(one_literal_required_params())
+    stale = sorted(
+        k for k in PARAM_ALLOWLIST if params.get(k, True) and k not in one_literal
+    )
     assert stale == [], f"allowlisted parameters that are set or gone: {stale}"
     assert all(reason.strip() for reason in PARAM_ALLOWLIST.values())
+
+
+def test_no_required_parameter_has_one_literal():
+    one_value = one_literal_required_params()
+    unlisted = [k for k in one_value if k not in PARAM_ALLOWLIST]
+    assert unlisted == [], (
+        "required parameters every call site sets to the same literal; write "
+        f"the value into the body or allowlist them with a reason: {unlisted}"
+    )

@@ -101,12 +101,12 @@ def test_kmeans_train_sample_smaller_trains_on_subset(spark):
 def test_simhash_band_spec_clamps_nbands():
     from amorphous_mapreduce_spark.operators.dedup import simhash_band_spec
 
-    spec = simhash_band_spec(60, 61)  # ADVICE_r06: would make a 0-width band
+    spec = simhash_band_spec(61)  # ADVICE_r06: would make a 0-width band
     assert len(spec) == 60
     assert all(w >= 1 for _, _, w in spec)
     assert sum(w for _, _, w in spec) == 60
     # normal layouts unchanged
-    spec13 = simhash_band_spec(60, 13)
+    spec13 = simhash_band_spec(13)
     assert len(spec13) == 13 and sum(w for _, _, w in spec13) == 60
 
 
@@ -160,7 +160,7 @@ def test_assign_arrow_matches_declarative(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    q = _quantize(emb, "vec_id", "embedding").persist()
+    q = _quantize(emb).persist()
     # a centroid table with deliberate score ties (duplicate centroids)
     cents = spark.createDataFrame(
         [

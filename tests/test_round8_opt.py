@@ -48,7 +48,7 @@ def _window_shingles(docs, shingle_size=3):
         docs.repartition(nparts)
         .select(
             F.col("doc_id").alias("id"),
-            F.posexplode(F.split(normalize_text("text"), " ")).alias("pos", "word"),
+            F.posexplode(F.split(normalize_text(), " ")).alias("pos", "word"),
         )
         .filter(F.length("word") > 0)
     )

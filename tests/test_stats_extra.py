@@ -519,7 +519,7 @@ def test_decision_stump_matches_brute_force(spark):
     got = q_decision_stump_dup(spark, sf).collect()[0]
     docs = (
         load_table(spark, sf, "documents")
-        .select("n_chars", F.md5(normalize_text("text")).alias("h"))
+        .select("n_chars", F.md5(normalize_text()).alias("h"))
         .collect()
     )
     counts = collections.Counter(r.h for r in docs)

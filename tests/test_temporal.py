@@ -360,7 +360,7 @@ def test_asof_nearest_tie_and_tolerance(spark):
     out = {
         r.id: r
         for r in asof_nearest_join(
-            left, right, on="us", right_cols=("v",),
+            left, right, right_cols=("v",),
             tolerance_us=100,
         ).collect()
     }
@@ -398,7 +398,6 @@ def test_asof_nearest_matches_pandas_merge_asof(spark):
         asof_nearest_join(
             spark.createDataFrame(left_pd),
             spark.createDataFrame(right_pd),
-            on="us",
             right_cols=("v",),
             tolerance_us=5000,
         )

@@ -64,7 +64,7 @@ def test_fingerprints_shared_for_shared_text(spark):
 
 
 def test_term_frequencies_topk(docs):
-    rows = term_frequencies(docs, group_col="lang", top_k=2).collect()
+    rows = term_frequencies(docs, top_k=2).collect()
     en = [(r["word"], r["cnt"]) for r in rows if r["grp"] == "en" and r["rnk"] == 1]
     assert en == [("the", 2)]
     assert all(r["rnk"] <= 2 for r in rows)
